@@ -5,11 +5,19 @@ on DuckDB at sf0.01, then compares row count, column names, and
 order-insensitive values (columns sorted by name, rows sorted by all
 columns, NaN==NaN, timestamps normalized to UTC-naive micros).
 
+Before running a query it also hashes the query's normalized
+``explain("formatted")`` into ``plans/hashes.json`` (sorted keys; a run
+over a subset of queries updates only those entries). A refactor that
+leaves ``git diff plans/hashes.json`` empty left every plan unchanged.
+
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
+import re
 import sys
 from pathlib import Path
 
@@ -24,6 +32,34 @@ import __spark_entry__ as entrymod  # noqa: E402
 from fte.conf import get_spark  # noqa: E402
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+HASHES = REPO / "plans" / "hashes.json"
+
+# per-session counters that vary with build order, not with the plan:
+# expression ids, plan/subquery ids, RDD ids, and the JVM call site
+# Spark records for an RDD (e.g. `localCheckpoint at <file>:0`)
+_VOLATILE = [
+    (re.compile(r"#\d+L?"), "#"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"\bid=#?\d+"), "id="),
+    (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+    (re.compile(r" at [^\s,]+:\d+"), " at <callsite>"),
+]
+
+
+def plan_hash(df, sf_dir: str) -> str:
+    """sha256 of ``df``'s formatted physical plan with session-volatile
+    ids and the data directory normalized away."""
+    plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    plan = plan.replace(str(Path(sf_dir).resolve()), "<sf>")
+    for pat, sub in _VOLATILE:
+        plan = pat.sub(sub, plan)
+    if "gid#" in plan:
+        # Spark's distinct-aggregate rewrite orders the Expand groups
+        # (and numbers their gid) by expression-id hashes, so such a plan
+        # is compared as a bag of tokens: same operators, expressions
+        # and columns, in any order
+        plan = " ".join(sorted(re.findall(r"[^\s,\[\]()]+", plan)))
+    return hashlib.sha256(plan.encode()).hexdigest()
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -77,12 +113,15 @@ def main() -> int:
         if Path(p).exists():
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    hashes = json.loads(HASHES.read_text()) if HASHES.exists() else {}
     failed = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
         try:
-            ours = fn(spark, sf_dir).toPandas()
+            df = fn(spark, sf_dir)
+            hashes[name] = plan_hash(df, sf_dir)
+            ours = df.toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {e}")
             failed.append(name)
@@ -102,6 +141,8 @@ def main() -> int:
             failed.append(name)
         else:
             print(f"PASS {name} ({len(ours)} rows)")
+    HASHES.parent.mkdir(exist_ok=True)
+    HASHES.write_text(json.dumps(hashes, indent=1, sort_keys=True) + "\n")
     print(f"\n{len(qs) - len(failed)}/{len(qs)} pass")
     return 1 if failed else 0
 
