@@ -3,12 +3,12 @@ guide-§1.4 noop-sink isolation bench used for before/after evidence in
 OPTIMIZATION_r06.md).
 
 Usage:
-    python bench_extra.py [--sf DIR] [--runs N] [--plans OUTDIR] [query ...]
+    python bench_extra.py [--sf DIR] [--runs N] [query ...]
 
 Times each named catalog query (default: the bench.py HEADLINE+EXTRA
 set) through the noop sink with one warm-up + min-of-N, exactly the
-bench.py methodology, and optionally dumps .explain("formatted") per
-query to OUTDIR/<query>.txt.
+bench.py methodology. Plan neutrality is checked by
+tools/check_oracle.py's plans/hashes.json instead of plan dumps.
 """
 
 from __future__ import annotations
@@ -35,8 +35,6 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--plans", default=None, help="dir to write explain('formatted') per query")
-    ap.add_argument("--suffix", default="", help="suffix for plan files, e.g. _before")
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
 
@@ -63,12 +61,6 @@ def main() -> int:
         t_build = time.time()
         df = fn(spark, args.sf)
         build_s = time.time() - t_build
-        if args.plans:
-            Path(args.plans).mkdir(parents=True, exist_ok=True)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            (Path(args.plans) / f"{name}{args.suffix}.txt").write_text(plan)
         _noop(df)  # warm-up
         best = float("inf")
         for _ in range(args.runs):

@@ -5,144 +5,8 @@ optimizes and AQE re-plans them) except where semantics genuinely need
 Arrow-vectorized pandas (the cogrouped merge_asof path). No per-row
 Python UDFs exist in this package — tests/test_no_slow_udfs.py lints
 for it.
+
+Import operators from their submodules
+(``from fte.operators.asof import asof_join``); this package re-exports
+nothing, so importing one operator loads only its own module.
 """
-
-from fte.operators.sessionize import sessionize
-from fte.operators.transcript import (
-    role_transitions,
-    response_latency,
-    turn_runs,
-)
-from fte.operators.behavior import (
-    funnel_conversion,
-    cohort_retention,
-    autocorrelation,
-)
-from fte.operators.selection import pairwise_corr, mutual_info_cells
-from fte.operators.profile import column_profile
-from fte.operators.incremental import (
-    stats_state,
-    merge_stats,
-    finalize_stats,
-)
-from fte.operators.windows import (
-    with_lag_lead,
-    with_backfill,
-    with_rolling_counts,
-    with_rolling_role_freq,
-    with_rolling_text_stats,
-)
-from fte.operators.asof import asof_join, asof_join_window, asof_join_merge
-from fte.operators.windows import dedup_turns, with_ewma, with_time_bucket_counts
-from fte.operators.skew import salted_join, salted_group_count
-from fte.operators.ingest import merge_late_batch
-from fte.operators.dedup import (
-    contaminated_ids,
-    decontaminate,
-    fingerprint_index,
-    incremental_dedup,
-    exact_dedup,
-    minhash_lsh_pairs,
-    minhash_lsh_dedup,
-    simhash_pairs,
-    simhash_candidate_pairs,
-    ngram_jaccard_pairs,
-    duplicate_components,
-)
-from fte.operators.similarity import (
-    brute_force_topk,
-    knn_join,
-    lsh_topk,
-    ivf_build,
-    ivf_build_kmeans,
-    ivf_topk,
-    all_pairs_topk_gemm,
-    embedding_dup_pairs,
-    with_l2_norm_arrow,
-    mean_pool_embeddings,
-)
-from fte.operators.text import (
-    with_lang_id,
-    with_quality_score,
-    with_fingerprint,
-    winnow_fingerprints,
-    token_count,
-    bpe_ish_token_count,
-    with_repetition_stats,
-    redact_pii,
-    chunk_documents,
-    bm25_scores,
-)
-from fte.operators.sampling import with_split, sample_by_hash, sample_sources
-from fte.operators.packing import pack_documents
-from fte.operators.pairs import make_training_pairs, render_conversations
-from fte.operators.scoring import score_with_model, fake_quality_model
-
-__all__ = [
-    "dedup_turns",
-    "with_ewma",
-    "with_time_bucket_counts",
-    "salted_join",
-    "salted_group_count",
-    "merge_late_batch",
-    "exact_dedup",
-    "minhash_lsh_pairs",
-    "minhash_lsh_dedup",
-    "simhash_pairs",
-    "simhash_candidate_pairs",
-    "ngram_jaccard_pairs",
-    "duplicate_components",
-    "contaminated_ids",
-    "decontaminate",
-    "fingerprint_index",
-    "incremental_dedup",
-    "brute_force_topk",
-    "knn_join",
-    "lsh_topk",
-    "ivf_build",
-    "ivf_build_kmeans",
-    "ivf_topk",
-    "all_pairs_topk_gemm",
-    "embedding_dup_pairs",
-    "with_l2_norm_arrow",
-    "mean_pool_embeddings",
-    "with_lang_id",
-    "with_quality_score",
-    "with_fingerprint",
-    "winnow_fingerprints",
-    "with_repetition_stats",
-    "redact_pii",
-    "chunk_documents",
-    "bm25_scores",
-    "make_training_pairs",
-    "render_conversations",
-    "score_with_model",
-    "fake_quality_model",
-    "with_split",
-    "sample_by_hash",
-    "sample_sources",
-    "pack_documents",
-    "token_count",
-    "bpe_ish_token_count",
-    "sessionize",
-    "with_lag_lead",
-    "with_backfill",
-    "with_rolling_counts",
-    "with_rolling_role_freq",
-    "with_rolling_text_stats",
-    "asof_join",
-    "asof_join_window",
-    "asof_join_merge",
-    "role_transitions",
-    "response_latency",
-    "turn_runs",
-    "funnel_conversion",
-    "cohort_retention",
-    "autocorrelation",
-    "pairwise_corr",
-    "mutual_info_cells",
-    "column_profile",
-    "stats_state",
-    "merge_stats",
-    "finalize_stats",
-]

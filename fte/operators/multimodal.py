@@ -58,14 +58,6 @@ def _decode_image(data: bytes, fake: bool) -> np.ndarray:
     return rng.integers(0, 256, size=(8, 8, 3), dtype=np.uint8)
 
 
-def _byte_entropy(data: bytes) -> float:
-    if not data:
-        return 0.0
-    counts = np.bincount(np.frombuffer(data, dtype=np.uint8), minlength=256)
-    p = counts[counts > 0] / len(data)
-    return float(-(p * np.log2(p)).sum())
-
-
 def image_features(assets: DataFrame, feature_dim: int = 8, fake_decode: bool = True) -> DataFrame:
     """Arrow-batched feature extraction over binary image columns.
 

@@ -56,10 +56,6 @@ def cosine(a: Column, b: Column) -> Column:
     return (dot(a, b) / (norm(a) * norm(b))).cast("double")
 
 
-def _lit_vec(v) -> Column:
-    return F.array(*[F.lit(float(x)) for x in v]).cast("array<double>")
-
-
 def _stack(vs: pd.Series) -> np.ndarray:
     return np.stack([np.asarray(v, dtype="float64") for v in vs.to_numpy()])
 

@@ -82,7 +82,6 @@ def build_anchor_matrix(
     registry: FeatureRegistry,
     features: Sequence[str] | None = None,
     strategy: str = "window",
-    pack_vector: bool = False,
 ) -> DataFrame:
     """Feature matrix at ANCHOR grain — the full FeatureHub flow with
     point-in-time correctness.
@@ -105,7 +104,7 @@ def build_anchor_matrix(
 
     turn_feats = build_matrix(transcripts, registry, features=features, serve=True)
     feat_cols = [c for c in turn_feats.columns if c not in ("conv_id",)]
-    out = asof_join(
+    return asof_join(
         anchors,
         turn_feats,
         strategy=strategy,
@@ -114,15 +113,6 @@ def build_anchor_matrix(
         right_cols=tuple(feat_cols),
         prefix="f_",
     )
-    if pack_vector:
-        numeric = [
-            c for c, t in out.dtypes
-            if c.startswith("f_") and t in ("int", "bigint", "double", "float", "smallint")
-        ]
-        out = out.withColumn(
-            "feature_vector", F.array(*[F.col(c).cast("double") for c in numeric])
-        )
-    return out
 
 
 def attach_labels(

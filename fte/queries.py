@@ -21,27 +21,9 @@ from fte.functions import epoch_seconds
 from fte.operators.asof import asof_join_merge, asof_join_window
 from fte.operators.sessionize import sessionize
 from fte.operators.windows import dedup_turns, with_backfill
+from fte.scan import read_table as _t
 
 EVENT_TYPES = ("click", "signup", "error", "view", "purchase")
-
-
-def _t(
-    spark: SparkSession, sf_dir: str, name: str, spread: bool = True,
-    min_bytes: int | None = None,
-) -> DataFrame:
-    # scan-spread (fte/scan.py): single-row-group local files otherwise
-    # plan ONE scan task; fact tables repartition by their entity key
-    # so scan-side compute parallelizes and the downstream keyed
-    # exchange is reused. No-op at oracle scales and on cluster scans.
-    # spread=False opts out for queries whose scan-side compute is
-    # trivial (metadata-only columns, brute dot products): for those
-    # the added exchange is pure tax (r6 same-window A/B, see
-    # OPTIMIZATION_r06.md).
-    from fte.scan import MIN_SPREAD_BYTES, t_spread
-
-    if not spread:
-        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    return t_spread(spark, sf_dir, name, min_bytes=min_bytes or MIN_SPREAD_BYTES)
 
 
 # ---------------------------------------------------------------- events

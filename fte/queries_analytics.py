@@ -14,26 +14,9 @@ table is the transcript analog (user_id≈conv_id, event_type≈role).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import functions as F
 
-
-def _t(
-    spark: SparkSession, sf_dir: str, name: str, spread: bool = True,
-    min_bytes: int | None = None,
-) -> DataFrame:
-    # scan-spread (fte/scan.py): single-row-group local files otherwise
-    # plan ONE scan task; fact tables repartition by their entity key
-    # so scan-side compute parallelizes and the downstream keyed
-    # exchange is reused. No-op at oracle scales and on cluster scans.
-    # spread=False opts out for queries whose scan-side compute is
-    # trivial (metadata-only columns, brute dot products): for those
-    # the added exchange is pure tax (r6 same-window A/B, see
-    # OPTIMIZATION_r06.md).
-    from fte.scan import MIN_SPREAD_BYTES, t_spread
-
-    if not spread:
-        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    return t_spread(spark, sf_dir, name, min_bytes=min_bytes or MIN_SPREAD_BYTES)
+from fte.scan import read_table as _t
 
 
 # ------------------------------------------------- transcript structure
@@ -490,6 +473,7 @@ def q_quant_recall_vs_exact(spark, sf_dir):
     A bounds bug, a floor/round drift, or a score overflow all move
     this number."""
     from fte.operators.similarity import brute_force_topk, quant_knn, quantize_embeddings
+    from fte.queries_ml import recall_vs_exact
 
     e = _t(spark, sf_dir, "embeddings")
     q = [float(x) for x in e.filter(F.col("vec_id") == 0).head()["embedding"]]
@@ -497,13 +481,7 @@ def q_quant_recall_vs_exact(spark, sf_dir):
     _bounds, quant = quantize_embeddings(e)
     query_q = quant.where(F.col("id") == 0).select("i", "q")
     approx = quant_knn(quant, query_q, k=10).select(F.col("id").alias("vec_id"))
-    overlap = exact.join(approx, "vec_id", "left_semi")
-    ex = exact.agg(F.count("*").alias("n_exact"))
-    ov = overlap.agg(F.count("*").alias("n_overlap"))
-    return ex.crossJoin(ov).select(
-        "n_exact", "n_overlap",
-        (F.col("n_overlap") / F.col("n_exact")).cast("double").alias("recall"),
-    )
+    return recall_vs_exact(exact, approx, "vec_id")
 
 
 # pinned on the sf0.01 corpus (DuckDB-measured: the int8 ranking keeps

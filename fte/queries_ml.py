@@ -12,7 +12,7 @@ ground-truth tests instead (tests/test_dedup.py, test_similarity.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from fte.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs, simhash_pairs
 from fte.operators.similarity import (
@@ -31,28 +31,22 @@ from fte.operators.text import (
     with_lang_id,
     with_quality_score,
 )
-
-
-def _t(
-    spark: SparkSession, sf_dir: str, name: str, spread: bool = True,
-    min_bytes: int | None = None,
-) -> DataFrame:
-    # scan-spread (fte/scan.py): single-row-group local files otherwise
-    # plan ONE scan task; fact tables repartition by their entity key
-    # so scan-side compute parallelizes and the downstream keyed
-    # exchange is reused. No-op at oracle scales and on cluster scans.
-    # spread=False opts out for queries whose scan-side compute is
-    # trivial (metadata-only columns, brute dot products): for those
-    # the added exchange is pure tax (r6 same-window A/B, see
-    # OPTIMIZATION_r06.md).
-    from fte.scan import MIN_SPREAD_BYTES, t_spread
-
-    if not spread:
-        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    return t_spread(spark, sf_dir, name, min_bytes=min_bytes or MIN_SPREAD_BYTES)
+from fte.scan import read_table as _t
 
 
 MUT_TAIL = " extra appended tail tokens for near duplicate testing"
+
+
+def recall_vs_exact(exact: DataFrame, approx: DataFrame, keys: str | list[str]) -> DataFrame:
+    """One row ``(n_exact, n_overlap, recall)``: how many of the exact
+    result's ``keys`` the approximate result also found."""
+    overlap = exact.join(approx, keys, "left_semi")
+    ex = exact.agg(F.count("*").alias("n_exact"))
+    ov = overlap.agg(F.count("*").alias("n_overlap"))
+    return ex.crossJoin(ov).select(
+        "n_exact", "n_overlap",
+        (F.col("n_overlap") / F.col("n_exact")).cast("double").alias("recall"),
+    )
 
 
 def _docs_with_mutants(spark, sf_dir, min_bytes: int | None = None) -> DataFrame:
@@ -944,13 +938,7 @@ def q_ivf_knn_recall_vs_exact(spark, sf_dir):
     approx = ivf_knn_join(assigned, C, queries, k=5, nprobe=4).select(
         "query_id", "vec_id"
     )
-    overlap = exact.join(approx, ["query_id", "vec_id"], "left_semi")
-    ex = exact.agg(F.count("*").alias("n_exact"))
-    ov = overlap.agg(F.count("*").alias("n_overlap"))
-    return ex.crossJoin(ov).select(
-        "n_exact", "n_overlap",
-        (F.col("n_overlap") / F.col("n_exact")).cast("double").alias("recall"),
-    )
+    return recall_vs_exact(exact, approx, ["query_id", "vec_id"])
 
 
 SQL_IVF_KNN_RECALL = """
@@ -991,13 +979,7 @@ def q_lsh_recall_vs_exact(spark, sf_dir):
     q = [float(x) for x in e.filter(F.col("vec_id") == 0).head()["embedding"]]
     exact = brute_force_topk(e, q, k=10).select("vec_id")
     approx = lsh_topk(e, q, k=10, n_bits=12, max_hamming=3).select("vec_id")
-    overlap = exact.join(approx, "vec_id", "left_semi")
-    ex = exact.agg(F.count("*").alias("n_exact"))
-    ov = overlap.agg(F.count("*").alias("n_overlap"))
-    return ex.crossJoin(ov).select(
-        "n_exact", "n_overlap",
-        (F.col("n_overlap") / F.col("n_exact")).cast("double").alias("recall"),
-    )
+    return recall_vs_exact(exact, approx, "vec_id")
 
 
 SQL_LSH_RECALL = """
@@ -1014,13 +996,7 @@ def q_ivf_recall_vs_exact(spark, sf_dir):
     exact = brute_force_topk(e, q, k=10).select("vec_id")
     assigned, C = ivf_build(e, n_cells=16)
     approx = ivf_topk(assigned, C, q, k=10, nprobe=4).select("vec_id")
-    overlap = exact.join(approx, "vec_id", "left_semi")
-    ex = exact.agg(F.count("*").alias("n_exact"))
-    ov = overlap.agg(F.count("*").alias("n_overlap"))
-    return ex.crossJoin(ov).select(
-        "n_exact", "n_overlap",
-        (F.col("n_overlap") / F.col("n_exact")).cast("double").alias("recall"),
-    )
+    return recall_vs_exact(exact, approx, "vec_id")
 
 
 SQL_IVF_RECALL = """
@@ -1133,13 +1109,7 @@ def q_minhash_recall_vs_exact(spark, sf_dir):
     approx = minhash_lsh_pairs(
         d, num_hashes=32, bands=8, jaccard_threshold=0.5
     ).select("id_a", "id_b")
-    overlap = exact.join(approx, ["id_a", "id_b"], "left_semi")
-    ex = exact.agg(F.count("*").alias("n_exact"))
-    ov = overlap.agg(F.count("*").alias("n_overlap"))
-    return ex.crossJoin(ov).select(
-        "n_exact", "n_overlap",
-        (F.col("n_overlap") / F.col("n_exact")).cast("double").alias("recall"),
-    )
+    return recall_vs_exact(exact, approx, ["id_a", "id_b"])
 
 
 SQL_MINHASH_RECALL = """
@@ -1168,13 +1138,7 @@ def q_simhash_recall_vs_exact(spark, sf_dir):
         .select("id_a", "id_b")
     )
     approx = simhash_pairs(d, max_hamming=6).select("id_a", "id_b")
-    overlap = exact.join(approx, ["id_a", "id_b"], "left_semi")
-    ex = exact.agg(F.count("*").alias("n_exact"))
-    ov = overlap.agg(F.count("*").alias("n_overlap"))
-    return ex.crossJoin(ov).select(
-        "n_exact", "n_overlap",
-        (F.col("n_overlap") / F.col("n_exact")).cast("double").alias("recall"),
-    )
+    return recall_vs_exact(exact, approx, ["id_a", "id_b"])
 
 
 SQL_SIMHASH_RECALL = """

@@ -21,7 +21,7 @@ entities rows, numeric-coercible, input not mutated
 ``validate`` asserts the builder preserves row count and the key
 columns, and that declared output columns appear with the declared
 types. Spark inputs are immutable, so the dataset-hash check is
-inherent; we still expose ``dataset_checksum`` for lineage parity.
+inherent; ``fte.checkpoint.content_checksum`` gives lineage parity.
 """
 
 from __future__ import annotations
@@ -31,7 +31,7 @@ import inspect
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 
 @dataclass(frozen=True)
@@ -176,14 +176,6 @@ def lint_leakage(spec: FeatureSpec) -> list[str]:
     if spec.leaky:
         return []
     return [p for p in LEAKY_PATTERNS if p in spec.source]
-
-
-def dataset_checksum(df: DataFrame) -> int:
-    """Order-insensitive content checksum (lineage analog of the
-    reference's compute_dataset_hash [U: featurehub/util.py]).
-    xxhash64 per row XOR-agged — distributed, single pass."""
-    hashed = df.select(F.xxhash64(*df.columns).alias("h"))
-    return hashed.agg(F.expr("bit_xor(h)").alias("x")).collect()[0]["x"]
 
 
 # A module-level default registry + decorator, mirroring the global

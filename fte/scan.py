@@ -101,28 +101,36 @@ def spread(
     if n_bytes is None or n_bytes < min_bytes:
         return df
     target = _shuffle_parallelism(spark)
-    try:
-        max_pb = int(str(spark.conf.get("spark.sql.files.maxPartitionBytes")).rstrip("b"))
-    except Exception:
-        max_pb = 128 * 1024 * 1024
+    max_pb = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes")
+    )
     est_tasks = max(1, math.ceil(n_bytes / max_pb))
     if est_tasks >= target:
         return df
-    if not keys:
-        return df.repartition(target)
     return df.repartition(target, *keys)
 
 
-def t_spread(
-    spark: SparkSession, sf_dir: str, name: str, *keys: str,
-    min_bytes: int = MIN_SPREAD_BYTES,
+_spread = spread  # read_table's ``spread`` flag shadows the function
+
+
+def read_table(
+    spark: SparkSession, sf_dir: str, name: str, spread: bool = True,
+    min_bytes: int | None = None,
 ) -> DataFrame:
-    """Read ``{sf_dir}/{name}.parquet`` and spread it by the table's
-    entity key (or explicit ``keys``). Tables with no registered key
-    (broadcast-side dimensions) are returned unspread."""
+    """Read ``{sf_dir}/{name}.parquet``, spread by the table's entity
+    key (``TABLE_KEYS``) when the scan would underfill the session.
+
+    This is the catalog's one scan reader. Below ``min_bytes`` (default
+    ``MIN_SPREAD_BYTES``) and on cluster scans it is a plain read.
+    ``spread=False`` opts out for queries whose scan-side compute is
+    trivial (metadata-only columns, brute dot products): for those the
+    added exchange is pure tax (r6 same-window A/B, see
+    OPTIMIZATION_r06.md). Tables with no registered key (broadcast-side
+    dimensions) are never spread.
+    """
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.parquet(path)
-    use = keys or TABLE_KEYS.get(name)
-    if not use:
+    keys = TABLE_KEYS.get(name)
+    if not (spread and keys):
         return df
-    return spread(df, spark, path, *use, min_bytes=min_bytes)
+    return _spread(df, spark, path, *keys, min_bytes=min_bytes or MIN_SPREAD_BYTES)

@@ -16,7 +16,8 @@ Isolation parity: the reference forked a subprocess per feature
 execute in separate Python workers per executor, and builders are
 structurally validated (row count, keys, declared outputs) before
 acceptance. Dataset-hash invariance [U: util.py::compute_dataset_hash]
-is inherent (DataFrames immutable) and exposed as ``dataset_checksum``.
+is inherent (DataFrames immutable) and exposed as ``dataset_hash``
+(``fte.checkpoint.content_checksum``).
 """
 
 from __future__ import annotations
@@ -27,8 +28,9 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from fte.checkpoint import content_checksum
 from fte.pipeline import build_matrix
-from fte.registry import FeatureRegistry, FeatureSpec, dataset_checksum
+from fte.registry import FeatureRegistry, FeatureSpec
 
 
 class Session:
@@ -56,7 +58,7 @@ class Session:
         return {name: df.limit(n) for name, df in self.dataset.items()}
 
     def dataset_hash(self) -> int:
-        return dataset_checksum(self.dataset["transcripts"])
+        return content_checksum(self.dataset["transcripts"])
 
     # ------------------------------------------------------ evaluation
 

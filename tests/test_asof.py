@@ -6,7 +6,7 @@ import pandas as pd
 import pytest
 
 from fte import pandas_ref as R
-from fte.operators import asof_join_merge, asof_join_window
+from fte.operators.asof import asof_join_merge, asof_join_window
 from fte.schema import ANCHORS_SCHEMA, TRANSCRIPTS_SCHEMA
 
 RCOLS = ["r_turn_idx", "r_role", "r_text", "r_tool", "r_ts"]

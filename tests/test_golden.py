@@ -12,10 +12,9 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from fte.operators import (
-    asof_join_merge,
-    asof_join_window,
-    sessionize,
+from fte.operators.asof import asof_join_merge, asof_join_window
+from fte.operators.sessionize import sessionize
+from fte.operators.windows import (
     with_backfill,
     with_lag_lead,
     with_rolling_counts,

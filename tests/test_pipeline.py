@@ -4,9 +4,10 @@ from __future__ import annotations
 
 import pytest
 
+from fte.checkpoint import content_checksum
 from fte.features import build_default_registry
 from fte.pipeline import build_matrix
-from fte.registry import FeatureRegistry, dataset_checksum
+from fte.registry import FeatureRegistry
 
 
 def test_matrix_builds_and_preserves_grain(spark, transcripts_df):
@@ -65,8 +66,8 @@ def test_validate_row_count(spark, transcripts_df):
 
 
 def test_dataset_checksum_stable(spark, transcripts_df):
-    a = dataset_checksum(transcripts_df)
-    b = dataset_checksum(transcripts_df.repartition(7))
+    a = content_checksum(transcripts_df)
+    b = content_checksum(transcripts_df.repartition(7))
     assert a == b  # order-insensitive
 
 

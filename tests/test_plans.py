@@ -11,7 +11,8 @@ import re
 import pytest
 
 from fte.features import build_default_registry
-from fte.operators import asof_join_window, sessionize
+from fte.operators.asof import asof_join_window
+from fte.operators.sessionize import sessionize
 from fte.pipeline import build_matrix
 
 
@@ -71,7 +72,7 @@ def test_column_pruning_drops_text(spark, tmp_path):
 
 
 def test_broadcast_in_pruned_merge_asof(spark, anchors_df, transcripts_df):
-    from fte.operators import asof_join_merge
+    from fte.operators.asof import asof_join_merge
 
     plan = _plan(asof_join_merge(anchors_df, transcripts_df))
     assert "BroadcastExchange" in plan or "broadcast" in plan.lower()

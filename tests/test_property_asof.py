@@ -10,7 +10,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from fte import pandas_ref as R
-from fte.operators import asof_join_merge, asof_join_window
+from fte.operators.asof import asof_join_merge, asof_join_window
 from fte.schema import ANCHORS_SCHEMA, TRANSCRIPTS_SCHEMA
 
 BASE = pd.Timestamp("2025-01-01")

@@ -9,7 +9,7 @@ import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
-from fte.operators import sessionize
+from fte.operators.sessionize import sessionize
 from fte.schema import TRANSCRIPTS_SCHEMA
 
 BASE = pd.Timestamp("2025-01-01")

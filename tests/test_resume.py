@@ -9,7 +9,7 @@ import pytest
 
 from fte.checkpoint import CheckpointLog, run_resumable
 from fte.io import with_partition_cols
-from fte.operators import sessionize
+from fte.operators.sessionize import sessionize
 from fte.schema import TRANSCRIPTS_SCHEMA
 
 KEY = ["conv_id", "turn_idx"]

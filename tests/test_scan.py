@@ -65,15 +65,17 @@ def test_spread_respects_min_bytes_override(spark, big_small):
     assert out is df
 
 
-def test_spread_noop_when_scan_already_parallel(spark, big_small):
+@pytest.mark.parametrize("max_partition_bytes", ["4096", "4k"])
+def test_spread_noop_when_scan_already_parallel(spark, big_small, max_partition_bytes):
     from fte.scan import spread
 
     big, _ = big_small
     df = spark.read.parquet(big)
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
-        # tiny splits -> estimated scan tasks >= shuffle parallelism
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+        # tiny splits -> estimated scan tasks >= shuffle parallelism;
+        # a byte string ("4k") must parse like the plain byte count
+        spark.conf.set("spark.sql.files.maxPartitionBytes", max_partition_bytes)
         out = spread(df, spark, big, "id")
         assert out is df
     finally:

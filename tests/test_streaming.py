@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from fte.operators import sessionize
+from fte.operators.sessionize import sessionize
 from fte.schema import TRANSCRIPTS_SCHEMA
 from fte.streaming import run_available_now, stream_transcripts, streaming_session_stats
 

@@ -4,8 +4,8 @@
 from __future__ import annotations
 
 from fte import pandas_ref as R
-from fte.operators import (
-    sessionize,
+from fte.operators.sessionize import sessionize
+from fte.operators.windows import (
     with_backfill,
     with_lag_lead,
     with_rolling_counts,
