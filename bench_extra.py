@@ -8,7 +8,7 @@ Usage:
 Times each named catalog query (default: the bench.py HEADLINE+EXTRA
 set) through the noop sink with one warm-up + min-of-N, exactly the
 bench.py methodology. Plan neutrality is checked by
-tools/check_oracle.py's plans/hashes.json instead of plan dumps.
+tools/check_oracle.py (plans/hashes.json).
 """
 
 from __future__ import annotations

@@ -141,7 +141,6 @@ def main() -> int:
             failed.append(name)
         else:
             print(f"PASS {name} ({len(ours)} rows)")
-    HASHES.parent.mkdir(exist_ok=True)
     HASHES.write_text(json.dumps(hashes, indent=1, sort_keys=True) + "\n")
     print(f"\n{len(qs) - len(failed)}/{len(qs)} pass")
     return 1 if failed else 0
