@@ -48,27 +48,30 @@ def main() -> int:
             "spark.ui.enabled": "false",
         },
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    cat = catalog()
-    names = args.queries or list(cat)
-    out: dict[str, float] = {}
-    for name in names:
-        if name not in cat:
-            print(f"!! unknown query {name}", file=sys.stderr)
-            continue
-        fn, _sql = cat[name]
-        spark.sparkContext.setJobDescription(f"bench_extra: {name}")
-        t_build = time.time()
-        df = fn(spark, args.sf)
-        build_s = time.time() - t_build
-        _noop(df)  # warm-up
-        best = float("inf")
-        for _ in range(args.runs):
-            t0 = time.time()
-            _noop(df)
-            best = min(best, time.time() - t0)
-        out[name] = round(best, 3)
-        print(f"{name}: {out[name]} (build {build_s:.2f}s)", file=sys.stderr)
+    try:
+        spark.sparkContext.setLogLevel("ERROR")
+        cat = catalog()
+        names = args.queries or list(cat)
+        out: dict[str, float] = {}
+        for name in names:
+            if name not in cat:
+                print(f"!! unknown query {name}", file=sys.stderr)
+                continue
+            fn, _sql = cat[name]
+            spark.sparkContext.setJobDescription(f"bench_extra: {name}")
+            t_build = time.time()
+            df = fn(spark, args.sf)
+            build_s = time.time() - t_build
+            _noop(df)  # warm-up
+            best = float("inf")
+            for _ in range(args.runs):
+                t0 = time.time()
+                _noop(df)
+                best = min(best, time.time() - t0)
+            out[name] = round(best, 3)
+            print(f"{name}: {out[name]} (build {build_s:.2f}s)", file=sys.stderr)
+    finally:
+        spark.stop()
     print(json.dumps({"sf": Path(args.sf).name, "runs": args.runs, "queries": out,
                       "total": round(sum(out.values()), 3)}))
     return 0

@@ -14,16 +14,22 @@ registry write-back. All of that is here:
 - folds: grouped entity-key hash (``with_fold`` — rows of one
   conversation never straddle train/test);
 - model: ridge-regularized LINEAR least squares fit by NORMAL
-  EQUATIONS — X'X (d×d) and X'y (d) are plain sums, computed in ONE
-  distributed aggregate pass over the train fold (map-side combined;
-  d = |features|+1, so the driver solve is a numpy d×d — microseconds,
-  and the only driver data is O(d²), never O(rows));
+  EQUATIONS from Gram partials: one ``mapInArrow`` scan computes
+  ZᵀZ for Z = [X, 1, y] in numpy, keyed by (fold, NULL pattern of the
+  feature columns), and the driver sums sub-blocks of those d×d
+  partials into any model's train-fold Gram and solves it (numpy d×d
+  — the only driver data is O(folds × patterns × d²), never O(rows));
+- NULL policy: complete-case per model. Rows with a NULL label are
+  dropped; a model is fit and scored on the rows where all of ITS
+  columns are non-NULL (the NULL-pattern key makes that exact in one
+  pass: a model's Gram is the sum over the patterns that have no NULL
+  in its columns);
 - scoring: the fitted weights come back as COLUMN LITERALS —
   Σ wᵢ·xᵢ + b is whole-stage-codegen arithmetic, no UDF, no
   broadcast;
-- metrics: mse/mae/r2 in one aggregate; for binary labels also
-  accuracy@0.5 and rank-based AUC (Mann-Whitney with midranks — the
-  only sort is over ONE test fold's scores);
+- metrics: mse/mae/r2 from residual sums in one aggregate; for binary
+  labels also accuracy@0.5 and rank-based AUC (Mann-Whitney with
+  midranks — the only sort is over ONE test fold's scores);
 - write-back: ``FeatureRegistry.record_metrics`` / Session meta dir.
 
 A custom model rides the same seam: pass ``fitter=`` returning any
@@ -33,16 +39,19 @@ model. The default stays closed-form so the whole loop is
 deterministic and cluster-scale (every step is aggregates + column
 arithmetic; nothing materializes rows on the driver).
 
-Scale shape at 100 TB: k folds × one aggregate pass each over the
-matrix (each pass map-side combines to d² partials per task), plus one
-metric aggregate per fold. No per-fold shuffle of the matrix itself:
-train/test are filters on the precomputed fold column, so Catalyst
-prunes at the scan when the matrix is written partitioned by fold.
+Scale shape at 100 TB: ONE scan of the matrix for every fold and every
+model (each task accumulates its (fold, pattern) partials in numpy and
+emits them once; one aggregate merges the ≤ tasks × folds × patterns ×
+d(d+1)/2 partial rows), then ONE ``groupBy(fold)`` scoring aggregate
+for every fold and model — two reads of the matrix in all, whatever
+k or the number of models. A custom ``fitter`` keeps the per-fold
+loop (k fits + k metric aggregates per model). No per-fold shuffle of
+the matrix itself: train/test are filters on the fold column.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 from typing import Callable
 
 import numpy as np
@@ -50,50 +59,152 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from fte.operators.sampling import with_fold
 
+# ridge penalty of the default model (the intercept is penalized too)
+_REG = 1e-6
+
+
+# Expressions here are built as SQL text: one Column operation is one
+# py4j round-trip (~1-10 ms), and a d-feature score over k folds is
+# O(k·d) of them, while one SQL string is one call.
+def _q(c: str) -> str:
+    return "`" + c.replace("`", "``") + "`"
+
+
+def _dbl(c: str) -> str:
+    return f"CAST({_q(c)} AS DOUBLE)"
+
+
+def _fold_grams(
+    df: DataFrame,
+    feature_cols: Sequence[str],
+    label_col: str,
+    fold_col: str | None = None,
+) -> dict[tuple[int, bytes], np.ndarray]:
+    """Gram partials ZᵀZ of Z = [X, 1, y] in ONE ``mapInArrow`` scan,
+    keyed by (fold, NULL mask).
+
+    The mask is the row's packed NULL bitmap over ``feature_cols``
+    (``np.packbits``, any d); NULL values enter Z as 0 and rows with a
+    NULL label are dropped. Each task accumulates its partials in numpy
+    over all its Arrow batches and emits them once, as (key, k, v) rows
+    of the upper triangle; one aggregate merges them. Without
+    ``fold_col`` every row is fold 0. Returns {(fold, mask): (d+2)×(d+2)
+    matrix}; the driver never sees more than folds × patterns of them.
+    """
+    import pyarrow as pa
+
+    d = len(feature_cols)
+    iu, ju = np.triu_indices(d + 2)
+    z = df.where(f"{_q(label_col)} IS NOT NULL").selectExpr(
+        f"CAST({_q(fold_col) if fold_col else 0} AS BIGINT) AS _fold",
+        *[f"{_dbl(c)} AS _x{i}" for i, c in enumerate(feature_cols)],
+        f"{_dbl(label_col)} AS _y",
+    )
+    def partials(batches):
+        acc: dict[tuple[int, bytes], np.ndarray] = {}
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            Z = np.ones((n, d + 2))
+            nulls = np.zeros((n, d), dtype=bool)
+            for i in range(d):
+                col = batch.column(i + 1)
+                nulls[:, i] = col.is_null().to_numpy(zero_copy_only=False)
+                Z[:, i] = col.fill_null(0.0).to_numpy(zero_copy_only=False)
+            Z[:, d + 1] = batch.column(d + 1).to_numpy(zero_copy_only=False)
+            folds = batch.column(0).to_numpy(zero_copy_only=False)
+            masks = np.packbits(nulls, axis=1)
+            keys = np.hstack([folds.astype(">i8").view(np.uint8).reshape(n, 8), masks])
+            uniq, inv = np.unique(keys, axis=0, return_inverse=True)
+            for u, key in enumerate(uniq):
+                Zu = Z[inv == u]
+                k = (int(key[:8].view(">i8")[0]), key[8:].tobytes())
+                acc[k] = acc.get(k, 0.0) + Zu.T @ Zu
+        if not acc:
+            return
+        t = len(iu)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.repeat([f for f, _ in acc], t).astype("int64")),
+                pa.array([m for _, m in acc for _ in range(t)], pa.binary()),
+                pa.array(np.tile(np.arange(t, dtype="int32"), len(acc))),
+                pa.array(np.concatenate([g[iu, ju] for g in acc.values()])),
+            ],
+            names=["fold", "mask", "k", "v"],
+        )
+
+    merged = (
+        z.mapInArrow(partials, "fold bigint, mask binary, k int, v double")
+        .groupBy("fold", "mask", "k")
+        .agg(F.sum("v").alias("v"))
+        .toPandas()
+    )
+    grams: dict[tuple[int, bytes], np.ndarray] = {}
+    for (f, m), g in merged.groupby(["fold", "mask"]):
+        G = grams[(int(f), bytes(m))] = np.zeros((d + 2, d + 2))
+        k = g["k"].to_numpy()
+        G[iu[k], ju[k]] = G[ju[k], iu[k]] = g["v"].to_numpy()
+    return grams
+
+
+def _complete_case(
+    grams: Mapping[tuple[int, bytes], np.ndarray], idx: Sequence[int], d: int, n_folds: int
+) -> np.ndarray:
+    """Per-fold Gram of the model on columns ``idx`` (of the d scanned),
+    over exactly the rows where none of those columns is NULL: the sum
+    of the partials whose NULL mask has no bit in ``idx``. Shape
+    (n_folds, |idx|+2, |idx|+2), rows/cols = [idx..., 1, y]."""
+    sub = np.ix_([*idx, d, d + 1], [*idx, d, d + 1])
+    out = np.zeros((n_folds, len(idx) + 2, len(idx) + 2))
+    for (f, mask), G in grams.items():
+        nulls = np.unpackbits(np.frombuffer(mask, dtype=np.uint8))[:d]
+        if not nulls[list(idx)].any():
+            out[f] += G[sub]
+    return out
+
+
+def _solve(gram: np.ndarray, reg: float) -> np.ndarray:
+    """Ridge normal equations (XᵀX + λI)w = Xᵀy from the Gram of
+    [X, 1, y]; w has the intercept last."""
+    XX, Xy = gram[:-1, :-1], gram[:-1, -1]
+    return np.linalg.solve(XX + reg * np.eye(len(Xy)), Xy)
+
 
 def fit_ridge(
     train: DataFrame,
     feature_cols: Sequence[str],
     label_col: str,
-    reg: float = 1e-6,
+    reg: float = _REG,
 ) -> np.ndarray:
-    """Closed-form ridge fit: solve (X'X + λI)w = X'y with X'X and X'y
-    accumulated in ONE distributed aggregate (d(d+3)/2+1 sum
-    expressions, all map-side combined). Returns w of length d+1
-    (intercept last, via the constant-1 column). Driver data: O(d²)."""
-    cols = [F.col(c).cast("double") for c in feature_cols] + [F.lit(1.0)]
-    d = len(cols)
-    aggs = []
-    for i in range(d):
-        for j in range(i, d):
-            aggs.append(F.sum(cols[i] * cols[j]).alias(f"_xx_{i}_{j}"))
-    y = F.col(label_col).cast("double")
-    aggs += [F.sum(cols[i] * y).alias(f"_xy_{i}") for i in range(d)]
-    row = train.agg(*aggs).first()
-    XX = np.zeros((d, d))
-    for i in range(d):
-        for j in range(i, d):
-            XX[i, j] = XX[j, i] = row[f"_xx_{i}_{j}"] or 0.0
-    Xy = np.array([row[f"_xy_{i}"] or 0.0 for i in range(d)])
-    XX += reg * np.eye(d)
-    return np.linalg.solve(XX, Xy)
+    """Closed-form ridge fit: solve (X'X + λI)w = X'y on the
+    complete-case rows, from one ``_fold_grams`` scan (the single-fold
+    case of the CV primitive). Returns w of length d+1 (intercept last,
+    via the constant-1 column). Driver data: O(patterns × d²)."""
+    d = len(feature_cols)
+    grams = _fold_grams(train, feature_cols, label_col)
+    return _solve(_complete_case(grams, range(d), d, 1)[0], reg)
+
+
+def _linear(feature_cols: Sequence[str], w: np.ndarray) -> str:
+    """Σ wᵢ·xᵢ + b as SQL arithmetic (codegen); NULL when any of the
+    columns is NULL. ``repr`` double literals round-trip exactly."""
+    terms = [f"{float(wi)!r}D * {_dbl(c)}" for c, wi in zip(feature_cols, w[:-1])]
+    return " + ".join([f"{float(w[-1])!r}D", *terms])
 
 
 def _linear_scorer(
     feature_cols: Sequence[str], w: np.ndarray
 ) -> Callable[[DataFrame], DataFrame]:
-    """Score = Σ wᵢ·xᵢ + b as pure column arithmetic (codegen)."""
+    """Score = Σ wᵢ·xᵢ + b, added as ``_score``."""
 
     def score(df: DataFrame) -> DataFrame:
-        expr = F.lit(float(w[-1]))
-        for c, wi in zip(feature_cols, w[:-1]):
-            expr = expr + F.lit(float(wi)) * F.col(c).cast("double")
-        return df.withColumn("_score", expr)
+        return df.withColumn("_score", F.expr(_linear(feature_cols, w)))
 
     return score
 
 
-def ridge_fitter(reg: float = 1e-6):
+def ridge_fitter(reg: float = _REG):
     """Default ``fitter``: distributed closed-form ridge (see
     ``fit_ridge``). Signature: (train, feature_cols, label_col) ->
     scorer mapping a DataFrame to itself + ``_score``."""
@@ -105,22 +216,35 @@ def ridge_fitter(reg: float = 1e-6):
     return fit
 
 
+def _metric_aggs(e: str, y: str, p: str = "") -> list[str]:
+    """SQL residual sums behind ``_metrics``, over the rows where the
+    residual ``e`` (so both score and label) is non-NULL."""
+    y = f"IF({e} IS NULL, NULL, {y})"
+    return [
+        f"count({e}) AS {p}n",
+        f"sum({e} * {e}) AS {p}sse",
+        f"sum(abs({e})) AS {p}sae",
+        f"sum({y}) AS {p}sy",
+        f"sum({y} * {y}) AS {p}syy",
+    ]
+
+
+def _metrics(row, p: str = "") -> dict:
+    n = row[f"{p}n"] if row else 0
+    if not n:
+        return {"n": 0, "mse": float("nan"), "mae": float("nan"), "r2": float("nan")}
+    sse = row[f"{p}sse"]
+    sst = row[f"{p}syy"] - row[f"{p}sy"] ** 2 / n
+    r2 = 1.0 - sse / sst if sst > 0 else float("nan")
+    return {"n": n, "mse": sse / n, "mae": row[f"{p}sae"] / n, "r2": r2}
+
+
 def regression_metrics(scored: DataFrame, label_col: str) -> dict:
-    """mse / mae / r2 in one aggregate over the scored test fold."""
-    y = F.col(label_col).cast("double")
-    e = F.col("_score") - y
-    row = scored.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg(e * e).alias("mse"),
-        F.avg(F.abs(e)).alias("mae"),
-        F.avg(y).alias("_ybar"),
-        F.sum(e * e).alias("_sse"),
-        F.sum(y * y).alias("_syy"),
-        F.sum(y).alias("_sy"),
-    ).first()
-    sst = (row["_syy"] or 0.0) - row["n"] * (row["_ybar"] or 0.0) ** 2
-    r2 = 1.0 - (row["_sse"] or 0.0) / sst if sst > 0 else float("nan")
-    return {"n": row["n"], "mse": row["mse"], "mae": row["mae"], "r2": r2}
+    """mse / mae / r2 in one aggregate over the scored test fold. n, the
+    label mean and sst cover the same rows as sse: those whose
+    ``_score`` and label are both non-NULL."""
+    y = _dbl(label_col)
+    return _metrics(scored.selectExpr(*_metric_aggs(f"(_score - {y})", y)).first())
 
 
 def binary_metrics(
@@ -144,6 +268,7 @@ def binary_metrics(
     continuous scores.
     """
     y = F.col(label_col).cast("double")
+    scored = scored.filter(F.col("_score").isNotNull() & y.isNotNull())
     acc = scored.agg(
         F.avg(((F.col("_score") >= 0.5).cast("double") == y).cast("double")).alias("acc")
     ).first()["acc"]
@@ -210,6 +335,93 @@ def binary_metrics(
     return {"accuracy": acc, "auc": u / (npos * nneg)}
 
 
+def _ridge_cv(
+    folded: DataFrame,
+    models: Mapping[str, Sequence[str]],
+    label_col: str,
+    n_folds: int,
+) -> tuple[dict[str, list[np.ndarray]], dict[str, list[dict]]]:
+    """Every fold of every model from one ``_fold_grams`` scan over the
+    union of the models' columns, then one ``groupBy(fold)`` aggregate
+    of residual sums. Fold f of a model trains on the sum of the
+    model's complete-case Grams of the other folds. Returns per-fold
+    weights and regression metrics per model."""
+    union = list(dict.fromkeys(c for cols in models.values() for c in cols))
+    grams = _fold_grams(folded, union, label_col, "fold")
+    weights = {}
+    for name, cols in models.items():
+        g = _complete_case(grams, [union.index(c) for c in cols], len(union), n_folds)
+        weights[name] = [
+            _solve(g[np.arange(n_folds) != f].sum(axis=0), _REG) for f in range(n_folds)
+        ]
+    y = _dbl(label_col)
+    resid = [
+        "CASE fold "
+        + " ".join(f"WHEN {f} THEN {_linear(cols, w)}" for f, w in enumerate(weights[name]))
+        + f" END - {y} AS _e{j}"
+        for j, (name, cols) in enumerate(models.items())
+    ]
+    aggs = [a for j in range(len(models)) for a in _metric_aggs(f"_e{j}", "_y", f"_m{j}_")]
+    scored = folded.selectExpr("fold", f"{y} AS _y", *resid)
+    rows = {r["fold"]: r for r in scored.groupBy("fold").agg(*map(F.expr, aggs)).collect()}
+    metrics = {
+        name: [_metrics(rows.get(f), f"_m{j}_") for f in range(n_folds)]
+        for j, name in enumerate(models)
+    }
+    return weights, metrics
+
+
+def crossval_models(
+    matrix: DataFrame,
+    models: Mapping[str, Sequence[str]],
+    label_col: str,
+    entity_col: str = "conv_id",
+    n_folds: int = 5,
+    seed: int = 42,
+    fitter: Callable | None = None,
+    binary: bool = False,
+) -> dict[str, dict]:
+    """Grouped k-fold CV of several feature sets (``models``: name ->
+    columns) over one matrix: {name: its ``crossval_evaluate``
+    result}. Rows with a NULL label are dropped.
+
+    The default ridge scores every fold of every model from one Gram
+    scan and one scoring aggregate (``_ridge_cv``). A custom ``fitter``
+    (same signature as ``ridge_fitter()``'s result — a non-linear
+    model has no Gram) runs the per-fold loop: fit on fold != f, score
+    fold == f, ``regression_metrics``. ``binary=True`` adds
+    ``binary_metrics`` of each scored test fold.
+    """
+    if not models:
+        return {}
+    labelled = matrix.where(f"{_q(label_col)} IS NOT NULL")
+    folded = with_fold(labelled, entity_col, n_folds=n_folds, seed=seed)
+    if fitter is None:
+        weights, metrics = _ridge_cv(folded, models, label_col, n_folds)
+    out = {}
+    for name, cols in models.items():
+        folds = []
+        for f in range(n_folds):
+            test = f"fold = {f}"
+            if fitter is None:
+                m = metrics[name][f]
+                if binary:
+                    scored = _linear_scorer(cols, weights[name][f])(folded.where(test))
+                    m.update(binary_metrics(scored, label_col))
+            else:
+                scorer = fitter(folded.where(f"fold != {f}"), cols, label_col)
+                scored = scorer(folded.where(test))
+                m = regression_metrics(scored, label_col)
+                if binary:
+                    m.update(binary_metrics(scored, label_col))
+            m["fold"] = f
+            folds.append(m)
+        keys = [k for k in folds[0] if k != "fold"]
+        mean = {k: float(np.nanmean([m[k] for m in folds])) for k in keys}
+        out[name] = {"folds": folds, "mean": mean}
+    return out
+
+
 def crossval_evaluate(
     matrix: DataFrame,
     feature_cols: Sequence[str],
@@ -220,34 +432,33 @@ def crossval_evaluate(
     fitter: Callable | None = None,
     binary: bool = False,
 ) -> dict:
-    """Grouped k-fold CV of a feature set over an assembled matrix.
+    """Grouped k-fold CV of one feature set over an assembled matrix.
 
     Per fold f: fit on rows with fold != f, score rows with fold == f,
     reduce metrics. Returns {"folds": [per-fold dicts], "mean": {...}}.
-    ``fitter`` defaults to the closed-form distributed ridge; any
-    callable with the same signature plugs in (including one built on
-    ``score_with_model`` for worker-cached python models).
+    ``fitter`` defaults to the closed-form distributed ridge (all folds
+    from one Gram scan, complete-case rows, see ``crossval_models``);
+    any callable with the same signature plugs in (including one built
+    on ``score_with_model`` for worker-cached python models).
+
+    A fold can score far below the others when grouped folds put an
+    outlying entity in it, since the model that scores it never saw
+    that entity. On perfbench's ``pit_train`` matrix (seed 1) the whale
+    conversation ``conv-00000000`` holds 517 of the 2,915 CV rows,
+    with ``f_turn_idx`` up to 4999 against ≤ 199 everywhere else; its
+    fold is scored by a model trained without it, which extrapolates
+    (r2 −120.2 on that fold, 0.13–0.24 on the others). That design is
+    also rank-deficient — ``f_has_question`` and ``f_upper_ratio`` are
+    constant 0 on the synthetic text; the 22 NULL-free features plus
+    the intercept have rank 18 of 23, cond(XᵀX + 1e-6·I) ≈ 1e17–1e21 —
+    so its weights are not identifiable; compare predictions, not
+    weights. The default ``reg`` stays 1e-6: another default would
+    move every recorded metric.
     """
-    fit = fitter or ridge_fitter()
-    folded = with_fold(matrix, entity_col, n_folds=n_folds, seed=seed).localCheckpoint(
-        eager=False
-    )  # pin: 2k consumers of one fold assignment
-    folds = []
-    for f in range(n_folds):
-        train = folded.filter(F.col("fold") != f)
-        test = folded.filter(F.col("fold") == f)
-        scorer = fit(train, feature_cols, label_col)
-        scored = scorer(test)
-        m = regression_metrics(scored, label_col)
-        if binary:
-            m.update(binary_metrics(scored, label_col))
-        m["fold"] = f
-        folds.append(m)
-    keys = [k for k in folds[0] if k != "fold"]
-    mean = {
-        k: float(np.nanmean([m[k] for m in folds])) for k in keys
-    }
-    return {"folds": folds, "mean": mean}
+    return crossval_models(
+        matrix, {"": feature_cols}, label_col, entity_col=entity_col, n_folds=n_folds,
+        seed=seed, fitter=fitter, binary=binary,
+    )[""]
 
 
 def rank_features(
@@ -259,20 +470,19 @@ def rank_features(
     **kw,
 ) -> list[dict]:
     """Single-feature CV evaluation of each candidate — FeatureHub's
-    leaderboard view (each submitted feature carries its own score).
-    Returns [{"feature", "metric", "value", "folds"}] sorted best
-    first."""
-    out = []
-    for c in feature_cols:
-        res = crossval_evaluate(matrix, [c], label_col, **kw)
-        out.append(
-            {
-                "feature": c,
-                "metric": metric,
-                "value": res["mean"][metric],
-                "folds": [m[metric] for m in res["folds"]],
-            }
-        )
+    leaderboard view (each submitted feature carries its own score),
+    every candidate from one ``crossval_models`` call. Returns
+    [{"feature", "metric", "value", "folds"}] sorted best first."""
+    res = crossval_models(matrix, {c: [c] for c in feature_cols}, label_col, **kw)
+    out = [
+        {
+            "feature": c,
+            "metric": metric,
+            "value": res[c]["mean"][metric],
+            "folds": [m[metric] for m in res[c]["folds"]],
+        }
+        for c in feature_cols
+    ]
     out.sort(key=lambda r: r["value"], reverse=higher_is_better)
     return out
 

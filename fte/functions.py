@@ -25,12 +25,3 @@ def epoch_micros(col: Column | str) -> Column:
     UTC-session caveat; matches DuckDB's epoch_us()."""
     c = F.col(col) if isinstance(col, str) else col
     return F.unix_micros(c.cast("timestamp"))
-
-
-def decimal_sum(col: Column | str, scale: int = 6) -> Column:
-    """Order-independent exact sum of a double column: cast each value
-    to DECIMAL before summing so accumulation order can't change the
-    result (doubles summed in shuffle order are nondeterministic at the
-    last ulp). Cast back to double by the caller if needed."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(f"decimal(27,{scale})"))

@@ -140,14 +140,6 @@ def minhash_signatures(
     )
 
 
-def with_minhash(
-    df: DataFrame, text_col: str = "text", num_hashes: int = 32, shingle_k: int = 3,
-    out_col: str = "minhash", id_col: str = "doc_id",
-) -> DataFrame:
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k, out_col)
-    return df.join(sig, id_col, "left")
-
-
 def candidate_shingle_sets(
     df: DataFrame,
     cand_ids: DataFrame,

@@ -100,13 +100,14 @@ class Session:
         build the serve-safe feature matrix, join ``labels`` on
         (conv_id, turn_idx), then give EACH registered feature a
         grouped-k-fold CV score (distributed closed-form ridge by
-        default; pass ``fitter`` to plug any model through the same
-        seam) and write it back into the registry
+        default, every feature and the joint model from one Gram scan;
+        pass ``fitter`` to plug any model through the same seam) and
+        write it back into the registry
         (``FeatureRegistry.record_metrics`` → ``to_metadata_df`` /
         meta_dir). Returns {feature_name: crossval result} plus the
         joint all-features model under "__all__".
         """
-        from fte.evaluation import crossval_evaluate
+        from fte.evaluation import crossval_models
 
         names = list(features) if features is not None else sorted(
             n for n, s in self.registry.features.items() if not s.leaky
@@ -117,22 +118,20 @@ class Session:
             c for c, t in m.dtypes
             if t in ("int", "bigint", "double", "float", "smallint")
         }
-        results = {}
+        models = {}
         for name in names:
-            spec = self.registry.get(name)
-            cols = [c for c in spec.outputs if c in numeric]
-            if not cols:
-                continue  # non-numeric feature (ids, strings): no model metric
-            res = crossval_evaluate(
-                m, cols, label_col, n_folds=n_folds, binary=binary, fitter=fitter
-            )
-            self.registry.record_metrics(name, res)
-            results[name] = res
+            cols = [c for c in self.registry.get(name).outputs if c in numeric]
+            if cols:  # non-numeric features (ids, strings): no model metric
+                models[name] = cols
         all_cols = sorted({c for r in names for c in self.registry.get(r).outputs} & numeric)
         if all_cols:
-            results["__all__"] = crossval_evaluate(
-                m, all_cols, label_col, n_folds=n_folds, binary=binary, fitter=fitter
-            )
+            models["__all__"] = all_cols
+        results = crossval_models(
+            m, models, label_col, n_folds=n_folds, binary=binary, fitter=fitter
+        )
+        for name, res in results.items():
+            if name != "__all__":
+                self.registry.record_metrics(name, res)
         if self.meta_dir:
             d = Path(self.meta_dir)
             d.mkdir(parents=True, exist_ok=True)

@@ -22,6 +22,7 @@ def spark():
         extra_confs={"spark.sql.shuffle.partitions": "8", "spark.ui.enabled": "false"},
     )
     yield s
+    s.stop()
 
 
 @pytest.fixture(scope="session")

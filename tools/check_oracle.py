@@ -107,40 +107,43 @@ def main() -> int:
     only = set(sys.argv[2:])
     spark = get_spark("check-oracle", master="local[8]",
                       extra_confs={"spark.sql.shuffle.partitions": "8", "spark.ui.enabled": "false"})
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if Path(p).exists():
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
-    hashes = json.loads(HASHES.read_text()) if HASHES.exists() else {}
-    failed = []
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        try:
-            df = fn(spark, sf_dir)
-            hashes[name] = plan_hash(df, sf_dir)
-            ours = df.toPandas()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: spark error: {e}")
-            failed.append(name)
-            continue
-        if name not in oracles:
-            print(f"PASS {name} (rows-only: {len(ours)})")
-            continue
-        try:
-            oracle = con.sql(oracles[name]).df()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: duckdb error: {e}")
-            failed.append(name)
-            continue
-        errs = compare(name, ours, oracle)
-        if errs:
-            print(f"FAIL {name}: " + "; ".join(errs))
-            failed.append(name)
-        else:
-            print(f"PASS {name} ({len(ours)} rows)")
+    try:
+        con = duckdb.connect()
+        for t in TABLES:
+            p = f"{sf_dir}/{t}.parquet"
+            if Path(p).exists():
+                con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+        qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+        hashes = json.loads(HASHES.read_text()) if HASHES.exists() else {}
+        failed = []
+        for name, fn in qs.items():
+            if only and name not in only:
+                continue
+            try:
+                df = fn(spark, sf_dir)
+                hashes[name] = plan_hash(df, sf_dir)
+                ours = df.toPandas()
+            except Exception as e:  # noqa: BLE001
+                print(f"FAIL {name}: spark error: {e}")
+                failed.append(name)
+                continue
+            if name not in oracles:
+                print(f"PASS {name} (rows-only: {len(ours)})")
+                continue
+            try:
+                oracle = con.sql(oracles[name]).df()
+            except Exception as e:  # noqa: BLE001
+                print(f"FAIL {name}: duckdb error: {e}")
+                failed.append(name)
+                continue
+            errs = compare(name, ours, oracle)
+            if errs:
+                print(f"FAIL {name}: " + "; ".join(errs))
+                failed.append(name)
+            else:
+                print(f"PASS {name} ({len(ours)} rows)")
+    finally:
+        spark.stop()
     HASHES.write_text(json.dumps(hashes, indent=1, sort_keys=True) + "\n")
     print(f"\n{len(qs) - len(failed)}/{len(qs)} pass")
     return 1 if failed else 0
