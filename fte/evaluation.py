@@ -517,21 +517,15 @@ def sliced_metrics(
 ) -> DataFrame:
     """Per-slice regression metrics — the segment/fairness view of a
     scored fold (metrics per language, per source, per user segment).
-    One grouped aggregate; |slices| output rows. r2 is NULL for a
-    zero-variance slice."""
-    y = F.col(label_col).cast("double")
-    e = F.col("_score") - y
+    One grouped aggregate of ``_metric_aggs``, so each slice follows
+    ``regression_metrics``' NULL policy; |slices| output rows. r2 is
+    NULL for a zero-variance slice."""
+    y = _dbl(label_col)
     g = scored.groupBy(F.col(slice_col).alias("slice")).agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.avg(e * e).alias("mse"),
-        F.avg(F.abs(e)).alias("mae"),
-        F.sum(e * e).alias("_sse"),
-        F.sum(y * y).alias("_syy"),
-        F.sum(y).alias("_sy"),
+        *[F.expr(a) for a in _metric_aggs(f"(_score - {y})", y)]
     )
-    n = F.col("n").cast("double")
-    sst = F.col("_syy") - (F.col("_sy") * F.col("_sy")) / n
-    return g.select(
-        "slice", "n", "mse", "mae",
-        F.when(sst > 0, F.lit(1.0) - F.col("_sse") / sst).alias("r2"),
+    sst = "(syy - sy * sy / n)"
+    return g.selectExpr(
+        "slice", "n", "sse / n AS mse", "sae / n AS mae",
+        f"IF({sst} > 0, 1 - sse / {sst}, NULL) AS r2",
     )

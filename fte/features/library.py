@@ -12,16 +12,21 @@ shuffle + ONE sort total — Catalyst merges identical WindowSpecs into
 a single WindowExec chain. `.explain()` on the assembled matrix shows
 exactly one Exchange for all window features. That property is the
 core scale win vs per-feature passes.
+
+Each builder is ONE projection (one analysis of the growing plan),
+except ``f_role_freq``: its ratios read its counts, so two.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from fte.functions import epoch_seconds
 from fte.operators.sessionize import sessionize
 from fte.operators.windows import (
+    DEFAULT_ORDER,
+    _wt,
     with_backfill,
-    with_lag_lead,
     with_rolling_counts,
     with_rolling_role_freq,
     with_rolling_text_stats,
@@ -70,31 +75,25 @@ def build_default_registry() -> FeatureRegistry:
     )
     def f_prev_turn(df: DataFrame) -> DataFrame:
         """Previous turn's role, ts gap (seconds), text length — one
-        WindowExec pass for all three lags."""
-        from pyspark.sql import Window
-
-        from fte.functions import epoch_seconds
-
-        w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-        # pre-project the narrow inputs so text/ts stay out of the
-        # shuffle (lag over a projected int, not length(text))
+        WindowExec pass; Catalyst projects the lag inputs below the
+        shuffle, so text stays out of it."""
+        w = _wt("conv_id", DEFAULT_ORDER)
         tl = F.col("textlen") if "textlen" in df.columns else F.length("text")
-        projected = df.select(
-            "*", tl.alias("_tl"), epoch_seconds("ts").alias("_es")
-        )
-        out = projected.select(
+        es = epoch_seconds("ts")
+        return df.select(
             "*",
             F.lag("role", 1).over(w).alias("lag_role_1"),
-            (F.col("_es") - F.lag("_es", 1).over(w)).cast("double").alias("gap_prev_s"),
-            F.lag("_tl", 1).over(w).alias("lag_textlen_1"),
+            (es - F.lag(es, 1).over(w)).cast("double").alias("gap_prev_s"),
+            F.lag(tl, 1).over(w).alias("lag_textlen_1"),
         )
-        return out.drop("_tl", "_es")
 
     @reg.feature(outputs=("hour_of_day", "is_weekend"), tags=("scalar", "time"))
     def f_time_of_day(df: DataFrame) -> DataFrame:
         """Anchor-time scalar features (no window)."""
-        return df.withColumn("hour_of_day", F.hour("ts")).withColumn(
-            "is_weekend", F.dayofweek("ts").isin(1, 7).cast("int")
+        return df.select(
+            "*",
+            F.hour("ts").alias("hour_of_day"),
+            F.dayofweek("ts").isin(1, 7).cast("int").alias("is_weekend"),
         )
 
     @reg.feature(
@@ -104,22 +103,22 @@ def build_default_registry() -> FeatureRegistry:
     def f_text_scalars(df: DataFrame) -> DataFrame:
         """Per-turn text scalars — pure JVM expressions, projected at
         the scan (scalar stage) so `text` never reaches the shuffle."""
-        return (
-            df.withColumn("textlen", F.length("text"))
-            .withColumn("word_count", F.size(F.split(F.trim(F.col("text")), r"\s+")))
-            .withColumn("has_question", F.col("text").contains("?").cast("int"))
-            .withColumn(
-                "upper_ratio",
-                (
-                    F.length(F.regexp_replace(F.col("text"), "[^A-Z]", ""))
-                    / F.greatest(F.length("text"), F.lit(1))
-                ).cast("double"),
-            )
+        text = F.col("text")
+        return df.select(
+            "*",
+            F.length(text).alias("textlen"),
+            F.size(F.split(F.trim(text), r"\s+")).alias("word_count"),
+            text.contains("?").cast("int").alias("has_question"),
+            (
+                F.length(F.regexp_replace(text, "[^A-Z]", ""))
+                / F.greatest(F.length(text), F.lit(1))
+            ).cast("double").alias("upper_ratio"),
         )
 
     @reg.feature(outputs=("lead_role_1",), leaky=True, tags=("window", "lead"))
     def f_next_role(df: DataFrame) -> DataFrame:
         """NEXT turn's role — train-time target helper, LEAKY."""
-        return with_lag_lead(df, ["role"], offsets=(1,), include_lead=True).drop("lag_role_1")
+        w = _wt("conv_id", DEFAULT_ORDER)
+        return df.select("*", F.lead("role", 1).over(w).alias("lead_role_1"))
 
     return reg

@@ -18,9 +18,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from fte.functions import epoch_seconds
+from fte.operators.windows import DEFAULT_ORDER, _wt, running_window
 from fte.schema import SESSION_GAP_SECONDS
 
 
@@ -29,12 +30,10 @@ def sessionize(
     gap_seconds: int = SESSION_GAP_SECONDS,
     conv_col: str = "conv_id",
     ts_col: str = "ts",
-    order_cols: Sequence[str] = ("ts", "turn_idx"),
+    order_cols: Sequence[str] = DEFAULT_ORDER,
     out_col: str = "session_id",
 ) -> DataFrame:
-    w = Window.partitionBy(conv_col).orderBy(*order_cols)
-    w_cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     ts_s = epoch_seconds(ts_col)
-    gap = ts_s - F.lag(ts_s).over(w)
+    gap = ts_s - F.lag(ts_s).over(_wt(conv_col, order_cols))
     is_new = F.when(gap.isNull() | (gap > gap_seconds), 1).otherwise(0)
-    return df.withColumn(out_col, F.sum(is_new).over(w_cum))
+    return df.withColumn(out_col, F.sum(is_new).over(running_window(conv_col, order_cols)))

@@ -1,16 +1,21 @@
 """Windowed per-turn operators: lag/lead, backfill, rolling aggregates.
 
-These are the engine's feature core (SURVEY.md §2.B-windows). All of
-them are single-pass Catalyst Window ops over
+These are the engine's feature core (SURVEY.md §2.B-windows), one
+implementation per window feature: the feature library and the catalog
+(so its DuckDB oracle) both call them. All are single-pass Window ops over
 ``Window.partitionBy(conv).orderBy(ts, order)`` — one shuffle on
 conv_id total, shared by every window in the same plan (Spark reuses
 the sort for windows with identical partitioning/ordering), so adding
 features is marginal-cost-zero in shuffles.
 
+Each operator adds its columns in one projection, except
+``with_rolling_role_freq``, which needs two (see its docstring).
+
 Leakage rule (BASELINE.json:6): every frame's upper bound is
-``currentRow`` (or a trailing range) — never ``unboundedFollowing``.
-``lead`` is provided for train-time targets only and is explicitly
-marked leaky; the feature-matrix pipeline refuses it at serve time.
+``currentRow`` (or a trailing range) — never ``unboundedFollowing``;
+``running_window`` is the one running frame. ``lead`` is provided for
+train-time targets only and is explicitly marked leaky; the
+feature-matrix pipeline refuses it at serve time.
 
 Scale notes: a window partitioned by conv_id never materializes more
 than one conversation per task buffer; the whale conversation
@@ -27,7 +32,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, WindowSpec, functions as F
 from pyspark.sql import types as T
 
 from fte.functions import epoch_seconds
@@ -39,6 +44,12 @@ DEFAULT_ORDER = ("ts", "turn_idx")
 
 def _wt(conv_col: str, order_cols: Sequence[str]):
     return Window.partitionBy(conv_col).orderBy(*order_cols)
+
+
+def running_window(conv_col: str, order_cols: Sequence[str]) -> WindowSpec:
+    """Rows from the conversation's first turn to the current one: the
+    frame of every cumulative feature, ending at currentRow."""
+    return _wt(conv_col, order_cols).rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
 
 def with_lag_lead(
@@ -77,7 +88,7 @@ def with_backfill(
     """Forward-fill: carry the last non-null value up to the current
     turn. pandas equivalent: groupby(conv).ffill(). Frame ends at
     currentRow → leakage-safe by construction."""
-    w = _wt(conv_col, order_cols).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    w = running_window(conv_col, order_cols)
     return df.select(
         "*", *[F.last(c, ignorenulls=True).over(w).alias(prefix + c) for c in cols]
     )
@@ -93,7 +104,7 @@ def with_rolling_counts(
     """turns_so_far (expanding count) + turns_last_{N}s (trailing time
     range count). pandas equivalent: expanding().count() /
     rolling('Ns').count()."""
-    w_rows = _wt(conv_col, order_cols).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    w_rows = running_window(conv_col, order_cols)
     # rangeBetween needs a numeric ordering column; cast ts → epoch secs
     w_time_base = Window.partitionBy(conv_col).orderBy(epoch_seconds(ts_col))
     return df.select(
@@ -117,27 +128,29 @@ def with_rolling_role_freq(
 
     Conditional sums over one shared window — Catalyst evaluates all of
     them in a single WindowExec pass (same partition/order/frame), so
-    the bounded role domain costs no extra shuffles.
+    the bounded role domain costs no extra shuffles. The ratios are a
+    second projection over the counts: in one ``select`` they would
+    repeat each ``sum(...) OVER w`` and the total, and Catalyst plans
+    every repeat as one more window function.
     """
-    w = _wt(conv_col, order_cols).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    total = F.count(F.lit(1)).over(w)
-    # all counts + the total in one select → a single WindowExec pass;
-    # the ratios are a plain projection on top
+    w = running_window(conv_col, order_cols)
+    counts = [f"cnt_{r}" for r in roles]
     counted = df.select(
         "*",
-        total.alias("_cum_total"),
+        F.count(F.lit(1)).over(w).alias("_cum_total"),
         *[
-            F.sum(F.when(F.col(role_col) == r, 1).otherwise(0)).over(w).alias(f"cnt_{r}")
-            for r in roles
+            F.sum(F.when(F.col(role_col) == r, 1).otherwise(0)).over(w).alias(c)
+            for r, c in zip(roles, counts)
         ],
     )
     return counted.select(
-        "*",
+        *df.columns,
+        *counts,
         *[
-            (F.col(f"cnt_{r}") / F.col("_cum_total")).cast("double").alias(f"frac_{r}")
-            for r in roles
+            (F.col(c) / F.col("_cum_total")).cast("double").alias(f"frac_{r}")
+            for r, c in zip(roles, counts)
         ],
-    ).drop("_cum_total")
+    )
 
 
 def with_rolling_text_stats(
@@ -148,7 +161,7 @@ def with_rolling_text_stats(
 ) -> DataFrame:
     """Running mean/std/min/max/sum of text length up to the current
     turn. stddev is sample-stddev (matches pandas .expanding().std())."""
-    w = _wt(conv_col, order_cols).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    w = running_window(conv_col, order_cols)
     # window exprs reference a projected narrow int column (never
     # length(text) directly), so Catalyst's column pruning keeps the
     # fat text column below the conv_id Exchange. Reuse an existing

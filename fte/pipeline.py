@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, functions as F
 from fte.registry import FeatureRegistry
 
 KEYS = ("conv_id", "turn_idx", "ts")
-ANCHOR_KEYS = ("anchor_id", "conv_id", "ts")
 
 
 def build_matrix(
@@ -35,7 +34,6 @@ def build_matrix(
     registry: FeatureRegistry,
     features: Sequence[str] | None = None,
     serve: bool = False,
-    keys: Sequence[str] = KEYS,
     pack_vector: bool = False,
 ) -> DataFrame:
     if features is not None:
@@ -64,7 +62,7 @@ def build_matrix(
             )
         out = spec.builder(out)
         out_cols.extend(spec.outputs)
-    result = out.select(*keys, *out_cols)
+    result = out.select(*KEYS, *out_cols)
     if pack_vector:
         numeric = [
             c for c in out_cols

@@ -20,7 +20,9 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from fte.functions import epoch_seconds
 from fte.operators.asof import asof_join_merge, asof_join_window
 from fte.operators.sessionize import sessionize
-from fte.operators.windows import dedup_turns, with_backfill
+from fte.operators.windows import (
+    dedup_turns, with_backfill, with_rolling_counts, with_rolling_role_freq,
+)
 from fte.scan import read_table as _t
 
 EVENT_TYPES = ("click", "signup", "error", "view", "purchase")
@@ -89,15 +91,9 @@ FROM s GROUP BY user_id, session_id
 
 def q_rolling_counts(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
-    w_rows = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    w_time = Window.partitionBy("user_id").orderBy(epoch_seconds("ts")).rangeBetween(-300, 0)
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.count(F.lit(1)).over(w_rows).alias("n_so_far"),
-        F.count(F.lit(1)).over(w_time).alias("n_last_300s"),
+    out = with_rolling_counts(ev, conv_col="user_id", order_cols=("ts", "event_id"))
+    return out.selectExpr(
+        "event_id", "user_id", "turns_so_far AS n_so_far", "turns_last_300s AS n_last_300s"
     )
 
 
@@ -216,16 +212,14 @@ def q_role_freq_running(spark, sf_dir):
     """Running per-type counts + fraction at each event (conditional
     cumulative sums sharing one window pass)."""
     ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
+    out = with_rolling_role_freq(
+        ev, roles=EVENT_TYPES, role_col="event_type", conv_col="user_id",
+        order_cols=("ts", "event_id"),
     )
-    total = F.count(F.lit(1)).over(w)
-    cols = [F.col("event_id"), F.col("user_id")]
+    cols = ["event_id", "user_id"]
     for t in EVENT_TYPES:
-        cnt = F.sum(F.when(F.col("event_type") == t, 1).otherwise(0)).over(w)
-        cols.append(cnt.cast("long").alias(f"cnt_{t}"))
-        cols.append(F.round(cnt / total, 6).alias(f"frac_{t}"))
-    return ev.select(*cols)
+        cols += [f"CAST(cnt_{t} AS BIGINT) AS cnt_{t}", f"ROUND(frac_{t}, 6) AS frac_{t}"]
+    return out.selectExpr(*cols)
 
 
 def _sql_role_freq() -> str:

@@ -93,7 +93,6 @@ class Session:
         n_folds: int = 5,
         binary: bool = False,
         fitter=None,
-        metric: str | None = None,
     ) -> dict:
         """The reference's submit → re-execute → METRIC loop
         [U: featurehub/modeling/model.py::Model.compute_metrics_cv]:

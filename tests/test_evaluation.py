@@ -351,6 +351,33 @@ def test_sliced_metrics_match_numpy(spark):
     assert np.isclose(out["a"]["r2"], 1 - ((s - y) ** 2).sum() / ((y - y.mean()) ** 2).sum())
 
 
+def test_sliced_metrics_null_scores_match_regression_metrics(spark):
+    """Each slice follows regression_metrics' NULL policy: rows with a
+    NULL score or label enter neither n nor sse nor sst."""
+    import numpy as np
+    import pytest
+
+    from fte.evaluation import regression_metrics, sliced_metrics
+
+    rng = np.random.default_rng(31)
+    rows = []
+    for sl in ("a", "b"):
+        for i in range(200):
+            y = float(rng.standard_normal())
+            s = None if i % 7 == 0 else y + float(rng.standard_normal()) * 0.3
+            rows.append((sl, s, None if i % 11 == 0 else y))
+    rows += [("z", None, 1.0), ("z", None, 2.0)]  # no scored row at all
+    df = spark.createDataFrame(rows, "seg string, _score double, label double")
+    out = {r["slice"]: r for r in sliced_metrics(df, "label", "seg").collect()}
+    for sl in ("a", "b"):
+        ref = regression_metrics(df.filter(df.seg == sl), "label")
+        assert out[sl]["n"] == ref["n"] < 200
+        for k in ("mse", "mae", "r2"):
+            assert out[sl][k] == pytest.approx(ref[k], rel=1e-12)
+    assert out["z"]["n"] == 0
+    assert out["z"]["mse"] is None and out["z"]["r2"] is None
+
+
 def test_sliced_metrics_zero_variance_slice_null_r2(spark):
     from fte.evaluation import sliced_metrics
 

@@ -34,6 +34,17 @@ def test_serve_subset_ok(spark, transcripts_df):
     assert mat.count() == transcripts_df.count()
 
 
+def test_feature_order_does_not_drop_columns(spark, transcripts_df):
+    """f_next_role after f_prev_turn keeps f_prev_turn's lag_role_1:
+    a builder only adds its own columns."""
+    reg = build_default_registry()
+    fwd = build_matrix(transcripts_df, reg, features=["f_prev_turn", "f_next_role"])
+    rev = build_matrix(transcripts_df, reg, features=["f_next_role", "f_prev_turn"])
+    assert fwd.count() == transcripts_df.count()
+    assert fwd.filter("lag_role_1 IS NOT NULL AND lead_role_1 IS NOT NULL").count() > 0
+    assert content_checksum(fwd) == content_checksum(rev.select(*fwd.columns))
+
+
 def test_registry_discover_and_hash():
     reg = build_default_registry()
     hits = reg.discover("session")

@@ -35,6 +35,56 @@ def test_matrix_single_shuffle(spark, transcripts_df):
     assert n_windows <= 8, f"window pass count regressed: {n_windows}"
 
 
+def _n_window_fns(plan: str) -> int:
+    return plan.count("windowspecdefinition")
+
+
+def _exchange_input(plan: str) -> list[str]:
+    """Top-level entries of the projection directly under the one
+    hashpartitioning Exchange."""
+    lines = plan.splitlines()
+    (i,) = [k for k, ln in enumerate(lines) if "Exchange hashpartitioning" in ln]
+    body = lines[i + 1].split("Project [", 1)[1].rsplit("]", 1)[0]
+    out, depth, cur = [], 0, ""
+    for ch in body:
+        depth += (ch == "(") - (ch == ")")
+        if ch == "," and depth == 0:
+            out.append(cur.strip())
+            cur = ""
+        else:
+            cur += ch
+    return out + [cur.strip()]
+
+
+def test_matrix_shuffles_one_copy_of_textlen(spark, transcripts_df):
+    """f_prev_turn lags textlen itself: no second copy of the text
+    length crosses the conv_id Exchange."""
+    mat = build_matrix(transcripts_df, build_default_registry(), serve=True)
+    entries = _exchange_input(_plan(mat))
+    copies = [
+        e for e in entries
+        if re.fullmatch(r"(textlen#\d+|length\(text#\d+\))( AS \w+#\d+)?", e)
+    ]
+    assert len(copies) == 1, copies
+    assert not any(re.match(r"text#", e) for e in entries), "text must not be shuffled"
+
+
+def test_role_freq_window_function_counts(spark, transcripts_df, tmp_path):
+    """Counts first, ratios over them: one count plus one sum per role,
+    for the library operator and the catalog query alike."""
+    from fte.operators.windows import with_rolling_role_freq
+    from fte.queries import EVENT_TYPES, q_role_freq_running
+
+    assert _n_window_fns(_plan(with_rolling_role_freq(transcripts_df))) == 5
+    spark.range(40).selectExpr(
+        "id AS event_id", "id % 3 AS user_id",
+        f"element_at(array{tuple(EVENT_TYPES)}, cast(id % 5 + 1 AS int)) AS event_type",
+        "timestamp('2025-01-01') + make_interval(0, 0, 0, 0, 0, id, 0) AS ts",
+    ).write.parquet(str(tmp_path / "events.parquet"))
+    plan = _plan(q_role_freq_running(spark, str(tmp_path)))
+    assert _n_window_fns(plan) == len(EVENT_TYPES) + 1
+
+
 def test_asof_window_single_shuffle(spark, anchors_df, transcripts_df):
     out = asof_join_window(anchors_df, transcripts_df)
     plan = _plan(out)
