@@ -25,3 +25,13 @@ def epoch_micros(col: Column | str) -> Column:
     UTC-session caveat; matches DuckDB's epoch_us()."""
     c = F.col(col) if isinstance(col, str) else col
     return F.unix_micros(c.cast("timestamp"))
+
+
+def norm_text(col: Column | str) -> Column:
+    """Whitespace-normalized, lowercased text: trim, collapse each
+    whitespace run to one space, lowercase — the one text normalization
+    behind fingerprints, shingles, tokens and segments. Matches the
+    DuckDB oracles' ``lower(regexp_replace(trim(text), '\\s+', ' ',
+    'g'))``."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.lower(F.regexp_replace(F.trim(c), r"\s+", " "))

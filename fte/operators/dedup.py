@@ -14,16 +14,25 @@ for the 100 TB case:
 - embedding_dup_pairs: cosine near-dup via random-hyperplane LSH
   buckets (see fte.operators.similarity for the signature machinery).
 
-Everything is JVM expressions (xxhash64, higher-order array functions);
-no Python UDFs. Signatures are computed in one projection per doc.
+Each near-duplicate decision has one definition, shared by the batch
+and incremental paths: text normalization (``fte.functions.norm_text``),
+the MinHash signature (``minhash_signatures``, an explode + MIN hash
+aggregate), LSH banding (``_band_rows``), the giant-bucket cap
+(``_cap_buckets``), the band self-join (``_band_join``), the
+signature Jaccard estimate (``_sig_est_jaccard``) and the exact
+shingle-set Jaccard (``_exact_jaccard``).
+
+Everything is JVM expressions (xxhash64, whole-stage codegen); no
+Python UDFs.
 """
 
 from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from fte.functions import norm_text
 from fte.operators.text import with_fingerprint
 
 
@@ -37,11 +46,6 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 
 
 # ----------------------------------------------------------- shingles
-
-def _norm_words(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.split(F.lower(F.regexp_replace(F.trim(c), r"\s+", " ")), " ")
-
 
 def shingle_rows(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3,
@@ -67,9 +71,7 @@ def shingle_rows(
     (for SQL-oracle-checked consumers — xxhash64 is Spark-only; the
     scale path stays hashed: 8-byte keys instead of ~100-byte grams).
     """
-    c = F.col(text_col)
-    norm = F.lower(F.regexp_replace(F.trim(c), r"\s+", " "))
-    words = F.split(norm, " ")
+    words = F.split(norm_text(text_col), " ")
     base = df.select(
         F.col(id_col),
         words.alias("_ws"),
@@ -93,20 +95,6 @@ def shingle_rows(
     return grams.distinct() if distinct else grams
 
 
-def shingles(col: Column | str, k: int = 3) -> Column:
-    """Per-row shingle-hash array (HOF form). Kept for small inputs /
-    expression contexts; the scale path is ``shingle_rows`` (codegen).
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    words = _norm_words(c)
-    n = F.size(words)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    gram = lambda i: F.concat_ws(" ", *[F.element_at(words, i + j + 1) for j in range(k)])  # noqa: E731
-    return F.when(
-        n >= k, F.array_distinct(F.transform(idx, lambda i: F.xxhash64(gram(i))))
-    ).otherwise(F.array(F.xxhash64(F.concat_ws(" ", words))))
-
-
 def _hash_consts(num_hashes: int) -> list[int]:
     # distinct odd constants emulate the family h_i(x) = xxhash64(x ^ C_i)
     # (xxhash64's seed argument must be literal, so we perturb the input)
@@ -119,15 +107,23 @@ def minhash_signatures(
     text_col: str = "text",
     num_hashes: int = 32,
     shingle_k: int = 3,
-    sig_col: str = "_sig",
 ) -> DataFrame:
-    """(id, signature array<long>) via explode → hash-aggregate.
+    """(id, _sig array<long>) MinHash signatures via explode →
+    hash-aggregate.
 
     Deliberately NOT a higher-order-function fold: HOF lambdas are
     interpreted per element (no codegen), which measured ~40x slower
     than this explode + 32-way MIN hash-aggregate, and the aggregate
     form also gives bounded memory + map-side partials at 10^12 rows.
-    One shuffle on id_col.
+    One shuffle on id_col. Shingles are not deduplicated first: a
+    repeated shingle cannot change a MIN.
+
+    Over the KEPT corpus this is also the persisted NEAR-dup index
+    that ``incremental_neardup`` reads (the companion of
+    ``fingerprint_index``'s exact index): ~256 bytes/doc (32 longs),
+    written once and APPENDED to per ingest batch, so corpus text is
+    never re-read or re-signed. Band rows are not stored: banding is a
+    pure projection of the signature (``_band_rows``).
     """
     ex = shingle_rows(df, id_col, text_col, shingle_k, distinct=False)
     aggs = [
@@ -136,7 +132,7 @@ def minhash_signatures(
     ]
     sig = ex.groupBy(id_col).agg(*aggs)
     return sig.select(
-        id_col, F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias(sig_col)
+        id_col, F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias("_sig")
     )
 
 
@@ -195,9 +191,6 @@ def minhash_lsh_pairs(
     cluster, or follow with exact_dedup (which has no such limit) for
     the exact-duplicate mass.
     """
-    r = num_hashes // bands
-    assert r * bands == num_hashes, "bands must divide num_hashes"
-
     # The signature-ONLY aggregate is the shared subtree: it is consumed
     # 3x downstream (banding + both sides of the candidate join), and
     # checkpointing it lets Spark serve all consumers from one shuffle.
@@ -206,46 +199,18 @@ def minhash_lsh_pairs(
     # ~corpus-sized arrays at 100 TB; instead the verify step below
     # re-derives shingles for CANDIDATE docs only (a tiny fraction at
     # realistic dup rates), which is the promise in the module header.
-    rows = shingle_rows(df, id_col, text_col, shingle_k, distinct=True)
-    aggs = [
-        F.min(F.xxhash64(F.col("shingle").bitwiseXOR(F.lit(c)))).alias(f"_h{i}")
-        for i, c in enumerate(_hash_consts(num_hashes))
-    ]
-    per_doc = rows.groupBy(id_col).agg(*aggs)
-    per_doc = per_doc.select(
-        id_col,
-        F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias("_sig"),
+    per_doc = minhash_signatures(
+        df, id_col, text_col, num_hashes, shingle_k
     ).localCheckpoint(eager=False)
-    sig = per_doc.select(id_col, "_sig")
 
     # candidate generation shuffles ONLY (id, band_hash) — no payload
-    banded = _band_rows(sig, id_col, num_hashes, bands)
-
-    if max_bucket is not None:
-        # bucket-size window shares the join's (band_idx, band_hash)
-        # partitioning; oversize buckets never reach the self-join
-        from pyspark.sql import Window
-
-        wb = Window.partitionBy("band_idx", "band_hash")
-        banded = (
-            banded.withColumn("_bsz", F.count(F.lit(1)).over(wb))
-            .filter(F.col("_bsz") <= max_bucket)
-            .drop("_bsz")
-        )
-
-    left = banded.select(F.col(id_col).alias("id_a"), "band_idx", "band_hash")
-    right = banded.select(F.col(id_col).alias("id_b"), "band_idx", "band_hash")
-    cand = (
-        left.join(right, ["band_idx", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
+    banded = _cap_buckets(
+        _band_rows(per_doc, id_col, num_hashes, bands), _BAND_KEYS, max_bucket
     )
+    cand = _band_join(banded, id_col)
 
     # attach signatures (and shingles, if verifying) to candidates only
-    est = (
-        F.size(F.array_intersect("_sig_a", "_sig_b")) / F.lit(num_hashes)
-    ).cast("double").alias("est_jaccard")
+    est = _sig_est_jaccard(num_hashes).alias("est_jaccard")
     sa = per_doc.select(F.col(id_col).alias("id_a"), F.col("_sig").alias("_sig_a"))
     sb = per_doc.select(F.col(id_col).alias("id_b"), F.col("_sig").alias("_sig_b"))
     if not verify:
@@ -272,11 +237,8 @@ def minhash_lsh_pairs(
     pa = cand_sets.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sh_a"))
     pb = cand_sets.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sh_b"))
     pairs = cand.join(sa, "id_a").join(sb, "id_b").join(pa, "id_a").join(pb, "id_b")
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
-    union = F.size(F.array_union("_sh_a", "_sh_b"))
-    jac = (inter / F.greatest(union, F.lit(1))).cast("double").alias("jaccard")
     return (
-        pairs.select("id_a", "id_b", est, jac)
+        pairs.select("id_a", "id_b", est, _exact_jaccard().alias("jaccard"))
         .filter(F.col("jaccard") >= jaccard_threshold)
     )
 
@@ -432,7 +394,7 @@ def simhash_table(
     map-side partials) rather than per-element HOF folds — same reason
     as minhash_signatures. One shuffle on id_col.
     """
-    words = F.split(F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")), " ")
+    words = F.split(norm_text(text_col), " ")
     ex = df.select(F.col(id_col), F.explode(words).alias("_w")).select(
         id_col, F.xxhash64("_w").alias("_h")
     )
@@ -495,15 +457,7 @@ def simhash_candidate_pairs(
     blocks = sig.select(
         id_col, sig_col, F.explode(F.array(*specs)).alias("_b")
     ).select(id_col, sig_col, "_b.block_idx", "_b.block_val")
-    if max_bucket is not None:
-        from pyspark.sql import Window
-
-        wb = Window.partitionBy("block_idx", "block_val")
-        blocks = (
-            blocks.withColumn("_bsz", F.count(F.lit(1)).over(wb))
-            .filter(F.col("_bsz") <= max_bucket)
-            .drop("_bsz")
-        )
+    blocks = _cap_buckets(blocks, ("block_idx", "block_val"), max_bucket)
     left = blocks.select(F.col(id_col).alias("id_a"), F.col(sig_col).alias("sh_a"), "block_idx", "block_val")
     right = blocks.select(F.col(id_col).alias("id_b"), F.col(sig_col).alias("sh_b"), "block_idx", "block_val")
     return (
@@ -555,11 +509,9 @@ def ngram_jaccard_pairs(
     )
     on = list(group_cols)
     joined = a.join(b, on) if on else a.crossJoin(b)
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
-    union = F.size(F.array_union("_sh_a", "_sh_b"))
     return (
         joined.filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("jaccard", (inter / F.greatest(union, F.lit(1))).cast("double"))
+        .withColumn("jaccard", _exact_jaccard())
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -574,7 +526,6 @@ def contaminated_ids(
     text_col: str = "text",
     n: int = 13,
     hashed: bool = True,
-    broadcast_bench: bool = True,
 ) -> DataFrame:
     """Training docs sharing ANY word n-gram with a benchmark doc —
     the GPT-3-style eval-decontamination overlap rule (13-gram overlap;
@@ -595,9 +546,7 @@ def contaminated_ids(
     bg = shingle_rows(bench, id_col, text_col, k=n, hashed=hashed).select(
         "shingle"
     ).distinct()
-    if broadcast_bench:
-        bg = F.broadcast(bg)
-    return tg.join(bg, "shingle", "left_semi").select(id_col).distinct()
+    return tg.join(F.broadcast(bg), "shingle", "left_semi").select(id_col).distinct()
 
 
 def decontaminate(
@@ -638,9 +587,7 @@ def segment_rows(
     (~10^-18 at 10^10 keys). 64 stays the default for the small/bench
     path (half the shuffle-key bytes).
     """
-    c = F.col(text_col)
-    norm = F.lower(F.regexp_replace(F.trim(c), r"\s+", " "))
-    words = F.split(norm, " ")
+    words = F.split(norm_text(text_col), " ")
     base = df.select(
         F.col(id_col),
         words.alias("_ws"),
@@ -720,9 +667,7 @@ def segment_dedup(
     seg_text = segment_rows(df, id_col, text_col, seg_words, hashed=False)
     # per-doc segment count straight off the scan (no explode/shuffle):
     # ceil(n_words / seg_words), min 1 — matches segment_rows' sequence
-    n_words = F.size(
-        F.split(F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")), " ")
-    )
+    n_words = F.size(F.split(norm_text(text_col), " "))
     totals = df.select(
         F.col(id_col),
         F.greatest(
@@ -757,32 +702,20 @@ def fingerprint_index(corpus: DataFrame, text_col: str = "text") -> DataFrame:
     return with_fingerprint(corpus, text_col).select("fingerprint").distinct()
 
 
-def minhash_index(
-    corpus: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """(id, _sig array<long>) MinHash signatures of the KEPT corpus —
-    the persisted NEAR-dup index (the companion of
-    ``fingerprint_index``'s exact index). At 100 TB this is ~256
-    bytes/doc (32 longs) written once as parquet and APPENDED to per
-    ingest batch; corpus text is never re-read or re-signed. Band
-    rows are NOT stored: banding is a pure projection of the
-    signature (``_band_rows``), so deriving them at read time costs
-    no shuffle and keeps the index 1 row/doc."""
-    return minhash_signatures(corpus, id_col, text_col, num_hashes, shingle_k)
+# an LSH bucket: (band number, hash of that band's signature slice)
+_BAND_KEYS = ("band_idx", "band_hash")
 
 
 def _band_rows(
-    sig_df: DataFrame, id_col: str, num_hashes: int, bands: int,
-    sig_col: str = "_sig",
+    sig_df: DataFrame, id_col: str, num_hashes: int, bands: int
 ) -> DataFrame:
-    """(id, band_idx, band_hash) LSH band rows projected from stored
-    signatures — shuffle-free."""
-    r = num_hashes // bands
-    assert r * bands == num_hashes, "bands must divide num_hashes"
+    """(id, band_idx, band_hash) LSH band rows projected from ``_sig``
+    signatures — shuffle-free. Each band hashes r = num_hashes/bands
+    signature entries, so ``bands`` must divide ``num_hashes`` (a
+    remainder would be silently left out of every band)."""
+    r, rem = divmod(num_hashes, bands)
+    if rem:
+        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
     return sig_df.select(
         F.col(id_col),
         F.explode(
@@ -791,7 +724,7 @@ def _band_rows(
                     F.struct(
                         F.lit(b).alias("band_idx"),
                         F.xxhash64(
-                            F.concat_ws(",", *[F.element_at(sig_col, b * r + j + 1) for j in range(r)])
+                            F.concat_ws(",", *[F.element_at("_sig", b * r + j + 1) for j in range(r)])
                         ).alias("band_hash"),
                     )
                     for b in range(bands)
@@ -799,6 +732,50 @@ def _band_rows(
             )
         ).alias("_band"),
     ).select(id_col, "_band.band_idx", "_band.band_hash")
+
+
+def _cap_buckets(
+    rows: DataFrame, keys: tuple[str, ...], max_bucket: int | None
+) -> DataFrame:
+    """Drop every bucket (rows sharing ``keys``) larger than
+    ``max_bucket`` — the giant-bucket guard applied BEFORE a bucket
+    self-join (``None`` keeps all). The count window partitions on the
+    join's own keys, so it shares the join's shuffle."""
+    if max_bucket is None:
+        return rows
+    wb = Window.partitionBy(*keys)
+    return (
+        rows.withColumn("_bsz", F.count(F.lit(1)).over(wb))
+        .filter(F.col("_bsz") <= max_bucket)
+        .drop("_bsz")
+    )
+
+
+def _band_join(
+    bands_a: DataFrame, id_col: str, bands_b: DataFrame | None = None
+) -> DataFrame:
+    """Distinct (id_a, id_b) candidate pairs sharing an LSH bucket
+    (band_idx, band_hash). Without ``bands_b`` it is a self-join of
+    ``bands_a`` keeping id_a < id_b; otherwise id_a comes from
+    ``bands_a`` and id_b from ``bands_b``. A pair colliding in several
+    bands is kept once."""
+    self_join = bands_b is None
+    left = bands_a.select(F.col(id_col).alias("id_a"), *_BAND_KEYS)
+    right = (bands_a if self_join else bands_b).select(
+        F.col(id_col).alias("id_b"), *_BAND_KEYS
+    )
+    pairs = left.join(right, list(_BAND_KEYS))
+    if self_join:
+        pairs = pairs.filter(F.col("id_a") < F.col("id_b"))
+    return pairs.select("id_a", "id_b").dropDuplicates(["id_a", "id_b"])
+
+
+def _exact_jaccard() -> Column:
+    """Exact Jaccard between the ``_sh_a``/``_sh_b`` shingle sets
+    (distinct arrays); two empty sets give 0."""
+    inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
+    union = F.size(F.array_union("_sh_a", "_sh_b"))
+    return (inter / F.greatest(union, F.lit(1))).cast("double")
 
 
 def _sig_est_jaccard(num_hashes: int) -> Column:
@@ -825,8 +802,9 @@ def incremental_neardup(
     max_bucket: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Near-dup dedup of a NEW ingest batch against a persisted
-    ``minhash_index`` AND within itself — the daily-ingest shape for
-    near-duplicates (``incremental_dedup`` is the exact-match twin).
+    ``minhash_signatures`` index AND within itself — the daily-ingest
+    shape for near-duplicates (``incremental_dedup`` is the exact-match
+    twin).
 
     Returns ``(kept, new_index_rows)``: the surviving batch docs, and
     their signatures to APPEND to the index. Only the new batch is
@@ -853,20 +831,8 @@ def incremental_neardup(
     sig_new = minhash_signatures(
         new_batch, id_col, text_col, num_hashes, shingle_k
     ).localCheckpoint(eager=False)  # consumed by 3 band joins + append
-    bn = _band_rows(sig_new, id_col, num_hashes, bands)
-    bi = _band_rows(index, id_col, num_hashes, bands)
-    if max_bucket is not None:
-        from pyspark.sql import Window
-
-        wb = Window.partitionBy("band_idx", "band_hash")
-        bn = (
-            bn.withColumn("_bsz", F.count(F.lit(1)).over(wb))
-            .filter(F.col("_bsz") <= max_bucket).drop("_bsz")
-        )
-        bi = (
-            bi.withColumn("_bsz", F.count(F.lit(1)).over(wb))
-            .filter(F.col("_bsz") <= max_bucket).drop("_bsz")
-        )
+    bn = _cap_buckets(_band_rows(sig_new, id_col, num_hashes, bands), _BAND_KEYS, max_bucket)
+    bi = _cap_buckets(_band_rows(index, id_col, num_hashes, bands), _BAND_KEYS, max_bucket)
 
     sa = sig_new.select(F.col(id_col).alias("id_a"), F.col("_sig").alias("_sig_a"))
     sb = sig_new.select(F.col(id_col).alias("id_b"), F.col("_sig").alias("_sig_b"))
@@ -879,21 +845,14 @@ def incremental_neardup(
     # corpus — the same pair colliding in several bands multiplies the
     # signature joins; the dedup is a load-bearing row reducer, kept.)
     cross = (
-        bn.select(F.col(id_col).alias("id_a"), "band_idx", "band_hash")
-        .join(bi.select(F.col(id_col).alias("id_b"), "band_idx", "band_hash"),
-              ["band_idx", "band_hash"])
-        .select("id_a", "id_b").dropDuplicates(["id_a", "id_b"])
+        _band_join(bn, id_col, bi)
         .join(sa, "id_a").join(si, "id_b")
         .filter(est >= threshold)
         .select(F.col("id_a").alias(id_col)).distinct()
     )
     # within-batch near-dup pairs: min id wins (id_a < id_b drops id_b)
     within_losers = (
-        bn.select(F.col(id_col).alias("id_a"), "band_idx", "band_hash")
-        .join(bn.select(F.col(id_col).alias("id_b"), "band_idx", "band_hash"),
-              ["band_idx", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b").dropDuplicates(["id_a", "id_b"])
+        _band_join(bn, id_col)
         .join(sa, "id_a").join(sb, "id_b")
         .filter(est >= threshold)
         .select(F.col("id_b").alias(id_col)).distinct()

@@ -35,6 +35,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from fte.functions import norm_text
+
 
 def target_encode(
     df: DataFrame,
@@ -166,8 +168,7 @@ def feature_hash_rows(
     broadcast, no OOV path — the property that makes this the
     vectorizer of choice at 100 TB.
     """
-    c = F.col(text_col)
-    norm = F.lower(F.regexp_replace(F.trim(c), r"\s+", " "))
+    norm = norm_text(text_col)
     toks = df.select(
         F.col(id_col), F.explode(F.split(norm, " ")).alias("_tok")
     ).filter(F.col("_tok") != "")

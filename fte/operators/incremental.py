@@ -1,7 +1,7 @@
 """Incremental aggregate maintenance: mergeable per-key statistics so
 a daily-ingest pipeline updates its rollups from the NEW batch only —
 the corpus is never rescanned (the aggregate twin of
-fte/operators/dedup.py's incremental_dedup / minhash_index).
+fte/operators/dedup.py's incremental_dedup / incremental_neardup).
 
 The state row per key is the classic mergeable summary
 (n, Σ decimal, min, max): counts/min/max merge exactly by

@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from fte.functions import norm_text
+
 # Tiny stopword profiles for an n-gram-free language-ID heuristic:
 # score(lang) = fraction of tokens that are stopwords of that lang.
 # Deliberately small + deterministic; real deployments swap in a model
@@ -120,7 +122,7 @@ def with_fingerprint(df: DataFrame, text_col: str = "text", out_col: str = "fing
     """Document fingerprint: xxhash64 of whitespace-normalized,
     lowercased text — robust to formatting-only edits. Used as the
     exact-dedup key at scale (group on 64-bit int, not the raw text)."""
-    norm = F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
+    norm = norm_text(text_col)
     return df.withColumn(out_col, F.xxhash64(norm))
 
 
@@ -145,8 +147,7 @@ def with_repetition_stats(
     lambdas. (A lead-window formulation forced a doc_id sort shuffle
     before any aggregation — same trap as the old shingle_rows.)
     """
-    c = F.col(text_col)
-    norm = F.lower(F.regexp_replace(F.trim(c), r"\s+", " "))
+    norm = norm_text(text_col)
     words = F.split(norm, " ")
     ex = df.select(F.col(id_col), F.explode(words).alias("_w"))
     word_stats = (
@@ -250,8 +251,7 @@ def chunk_documents(
 
     Output: (id_col, chunk_idx, n_chunk_words, chunk).
     """
-    c = F.col(text_col)
-    norm = F.lower(F.regexp_replace(F.trim(c), r"\s+", " "))
+    norm = norm_text(text_col)
     words = F.split(norm, " ")
     last_start = F.greatest(
         F.least(F.col("_n") - 1, F.col("_n") - chunk_words + stride - 1),
@@ -296,8 +296,7 @@ def bm25_scores(
     Output: (id_col, n_words, n_hit_terms, bm25) for docs hitting ≥ 1
     term.
     """
-    c = F.col(text_col)
-    norm = F.lower(F.regexp_replace(F.trim(c), r"\s+", " "))
+    norm = norm_text(text_col)
     tok = df.select(F.col(id_col), F.explode(F.split(norm, " ")).alias("_w"))
     # r6: the per-doc-length aggregate is consumed by BOTH the corpus
     # stats and the final score join; checkpoint it once (same
@@ -365,8 +364,7 @@ def unigram_logprob_scores(
 
     Output: (id_col, n_words, xent) — lower xent = more corpus-typical.
     """
-    c = F.col(text_col)
-    norm = F.lower(F.regexp_replace(F.trim(c), r"\s+", " "))
+    norm = norm_text(text_col)
     tok = df.select(F.col(id_col), F.explode(F.split(norm, " ")).alias("_w"))
     # r6: the vocab aggregate is consumed twice (totals + the
     # broadcast back onto the token stream); checkpoint it once so a
@@ -416,8 +414,7 @@ def winnow_fingerprints(
     """
     from pyspark.sql import Window
 
-    c = F.col(text_col)
-    norm = F.lower(F.regexp_replace(F.trim(c), r"\s+", " "))
+    norm = norm_text(text_col)
     words = F.split(norm, " ")
     # _nt only feeds the short-doc fallback; null it out for docs with
     # >= k words so the exploded rows don't ship the whole text per
@@ -558,8 +555,7 @@ def bm25_topk_batch(
     qdf = spark.createDataFrame(qrows, "query_id int, _w string, _ti int")
     max_terms = max(len(terms) for terms in queries.values())
 
-    c = F.col(text_col)
-    norm = F.lower(F.regexp_replace(F.trim(c), r"\s+", " "))
+    norm = norm_text(text_col)
     tok = df.select(F.col(id_col), F.explode(F.split(norm, " ")).alias("_w"))
     # r6: the per-doc-length aggregate is consumed by BOTH the corpus
     # stats and the final score join; checkpoint it once (same

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from fte.functions import norm_text
 from fte.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs, simhash_pairs
 from fte.operators.similarity import (
     brute_force_topk,
@@ -73,7 +74,7 @@ def q_doc_dedup_norm(spark, sf_dir):
     reproduce it; fte.operators.dedup.exact_dedup uses the xxhash64
     fingerprint of the SAME normalization at scale."""
     d = _docs_with_mutants(spark, sf_dir)
-    norm = F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
+    norm = norm_text("text")
     return (
         d.withColumn("_n", norm)
         .groupBy("_n")
@@ -144,7 +145,7 @@ def q_incremental_neardup(spark, sf_dir):
     the appended index drops EVERYTHING (idempotence — the daily-
     ingest contract). The signature estimates themselves are not
     SQL-reproducible (same class as minhash_neardup)."""
-    from fte.operators.dedup import incremental_neardup, minhash_index
+    from fte.operators.dedup import incremental_neardup, minhash_signatures
 
     # spread=False: the steady state of this query is text-normalize
     # joins whose exchange keys are the normalized text itself — a
@@ -157,15 +158,14 @@ def q_incremental_neardup(spark, sf_dir):
         (F.col("doc_id") + 200000).alias("doc_id"), "text"
     )
     batch = fresh.unionByName(planted)
-    index = minhash_index(corpus).localCheckpoint(eager=False)
+    index = minhash_signatures(corpus).localCheckpoint(eager=False)
     kept, new_rows = incremental_neardup(batch, index, threshold=0.5)
     kept = kept.localCheckpoint(eager=False)
     index2 = index.union(new_rows)
     kept2, _ = incremental_neardup(batch, index2, threshold=0.5)
 
-    norm = lambda c: F.lower(F.regexp_replace(F.trim(c), r"\s+", " "))  # noqa: E731
-    cross = batch.withColumn("_n", norm(F.col("text"))).join(
-        corpus.select(norm(F.col("text")).alias("_n")).distinct(), "_n", "left_semi"
+    cross = batch.withColumn("_n", norm_text("text")).join(
+        corpus.select(norm_text("text").alias("_n")).distinct(), "_n", "left_semi"
     )
     nb = batch.agg(F.count("*").cast("long").alias("n_batch"))
     nx = cross.agg(F.count("*").cast("long").alias("n_exact_cross"))
@@ -591,7 +591,7 @@ def q_top_terms(spark, sf_dir):
     TakeOrderedAndProject; the classic corpus-stats shape that feeds
     stopword lists and TF-IDF vocabularies."""
     d = _t(spark, sf_dir, "documents")
-    words = F.split(F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")), " ")
+    words = F.split(norm_text("text"), " ")
     tok = d.select("doc_id", F.explode(words).alias("term")).filter(F.col("term") != "")
     counts = tok.groupBy("term").agg(
         F.count("*").alias("n_occurrences"),
@@ -660,7 +660,7 @@ def q_curation_funnel(spark, sf_dir):
     filt = scored.filter(
         (F.col("lang_pred") == "en") & (F.col("quality_score") >= 0.75)
     )
-    norm = F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
+    norm = norm_text("text")
     keep = (
         filt.withColumn("_n", norm)
         .groupBy("_n")

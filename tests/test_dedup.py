@@ -64,6 +64,26 @@ def test_minhash_pairs_find_planted_near_dups(spark, docs_df):
     assert abs(j.loc[(2, 8), "est_jaccard"] - j.loc[(2, 8), "jaccard"]) < 0.35
 
 
+def test_minhash_est_jaccard_is_signature_agreement(spark, docs_df):
+    """est_jaccard is the positional agreement of the two docs'
+    ``minhash_signatures`` rows — the same estimate incremental_neardup
+    verifies with."""
+    from fte.operators.dedup import minhash_signatures
+
+    pairs = minhash_lsh_pairs(docs_df, num_hashes=32, bands=16, verify=False).toPandas()
+    sig = minhash_signatures(docs_df).toPandas().set_index("doc_id")["_sig"]
+    assert len(pairs) >= 4
+    for a, b, est in pairs[["id_a", "id_b", "est_jaccard"]].itertuples(index=False):
+        assert est == np.mean(np.asarray(sig[a]) == np.asarray(sig[b]))
+
+
+def test_minhash_bands_must_divide_num_hashes(spark, docs_df):
+    """A remainder would drop signature entries from every band; it is
+    rejected when the plan is built (not an assert, which -O strips)."""
+    with pytest.raises(ValueError, match="must divide"):
+        minhash_lsh_pairs(docs_df, num_hashes=32, bands=5)
+
+
 def test_minhash_dedup_drops_losers(spark, docs_df):
     kept = minhash_lsh_dedup(
         docs_df, num_hashes=32, bands=16, jaccard_threshold=0.5
@@ -494,7 +514,7 @@ def test_incremental_neardup_daily_ingest(spark):
     corpus docs dropped), within itself (min id of a new near-dup pair
     survives), and appending the survivors' signatures makes replaying
     the batch a no-op (idempotence)."""
-    from fte.operators.dedup import incremental_neardup, minhash_index
+    from fte.operators.dedup import incremental_neardup, minhash_signatures
 
     corpus = spark.createDataFrame(
         pd.DataFrame(
@@ -502,7 +522,7 @@ def test_incremental_neardup_daily_ingest(spark):
         ),
         "doc_id long, text string",
     )
-    index = minhash_index(corpus).localCheckpoint(eager=True)
+    index = minhash_signatures(corpus).localCheckpoint(eager=True)
 
     batch = spark.createDataFrame(
         pd.DataFrame(
@@ -542,3 +562,30 @@ def test_incremental_neardup_daily_ingest(spark):
     )
     k3, _ = incremental_neardup(batch2, index2, bands=16, threshold=0.4)
     assert set(k3.toPandas()["doc_id"]) == {200}
+
+
+def test_incremental_neardup_max_bucket_guard(spark):
+    """Giant-bucket cap on the incremental path: a 40-copy boilerplate
+    bucket is over the cap of 10, so none of its within-batch pairs is
+    generated and every copy is kept, while the small near-dup pair
+    still loses its larger id. Without the cap the boilerplate
+    collapses to its min id."""
+    from fte.operators.dedup import incremental_neardup, minhash_signatures
+
+    boiler = [(i, "the same boilerplate footer text repeated on every page of the site") for i in range(40)]
+    near = [
+        (100, "a genuinely unique document about distributed joins and shuffles in spark engines"),
+        (101, "a genuinely unique document about distributed joins and shuffles in spark engines today"),
+    ]
+    batch = spark.createDataFrame(
+        pd.DataFrame(boiler + near, columns=["doc_id", "text"]), "doc_id long, text string"
+    )
+    corpus = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [1000], "text": [BASE_TEXTS[4]]}), "doc_id long, text string"
+    )
+    index = minhash_signatures(corpus).localCheckpoint(eager=True)
+
+    kept, _ = incremental_neardup(batch, index, max_bucket=10)
+    assert set(kept.toPandas()["doc_id"]) == set(range(40)) | {100}
+    uncapped, _ = incremental_neardup(batch, index)
+    assert set(uncapped.toPandas()["doc_id"]) == {0, 100}

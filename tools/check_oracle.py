@@ -11,6 +11,9 @@ over a subset of queries updates only those entries). A refactor that
 leaves ``git diff plans/hashes.json`` empty left every plan unchanged.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
+
+With query names, only those run and the pass count is over them; a
+name not in the catalog is an error (exit 2, nothing runs).
 """
 
 from __future__ import annotations
@@ -104,7 +107,12 @@ def compare(name: str, ours: pd.DataFrame, oracle: pd.DataFrame) -> list[str]:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    unknown = sorted(set(sys.argv[2:]) - qs.keys())
+    if unknown:
+        print(f"unknown queries: {' '.join(unknown)}")
+        return 2
+    names = list(dict.fromkeys(sys.argv[2:])) or list(qs)
     spark = get_spark("check-oracle", master="local[8]",
                       extra_confs={"spark.sql.shuffle.partitions": "8", "spark.ui.enabled": "false"})
     try:
@@ -113,14 +121,11 @@ def main() -> int:
             p = f"{sf_dir}/{t}.parquet"
             if Path(p).exists():
                 con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-        qs, oracles = entrymod.queries(), entrymod.oracle_sql()
         hashes = json.loads(HASHES.read_text()) if HASHES.exists() else {}
         failed = []
-        for name, fn in qs.items():
-            if only and name not in only:
-                continue
+        for name in names:
             try:
-                df = fn(spark, sf_dir)
+                df = qs[name](spark, sf_dir)
                 hashes[name] = plan_hash(df, sf_dir)
                 ours = df.toPandas()
             except Exception as e:  # noqa: BLE001
@@ -145,7 +150,7 @@ def main() -> int:
     finally:
         spark.stop()
     HASHES.write_text(json.dumps(hashes, indent=1, sort_keys=True) + "\n")
-    print(f"\n{len(qs) - len(failed)}/{len(qs)} pass")
+    print(f"\n{len(names) - len(failed)}/{len(names)} pass")
     return 1 if failed else 0
 
 
