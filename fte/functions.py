@@ -1,11 +1,12 @@
-"""Scalar helper expressions shared across operators.
+"""Helper expressions shared across operators and the catalog.
 
-All pure JVM Column expressions (SURVEY.md §2.B scalar functions).
+Pure JVM Column expressions (SURVEY.md §2.B scalar functions), plus
+``top_k``, the one global top-k with a rank column.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
 def epoch_seconds(col: Column | str) -> Column:
@@ -35,3 +36,15 @@ def norm_text(col: Column | str) -> Column:
     'g'))``."""
     c = F.col(col) if isinstance(col, str) else col
     return F.lower(F.regexp_replace(F.trim(c), r"\s+", " "))
+
+
+def top_k(df: DataFrame, order_cols, k: int, rank_col: str = "rank") -> DataFrame:
+    """Global top-k as ``orderBy(...).limit(k)`` → TakeOrderedAndProject
+    (each partition keeps a k-row heap; the driver merges k·n_parts
+    rows), then ``rank_col`` = row_number over the ≤k survivors — the
+    single-partition window touches k rows, never the input. Never
+    rank with ``row_number`` over an unpartitioned Window of the whole
+    input: that is one task. ``order_cols`` must be a total order
+    (tie-broken) so the limit is deterministic."""
+    limited = df.orderBy(*order_cols).limit(k)
+    return limited.withColumn(rank_col, F.row_number().over(Window.orderBy(*order_cols)))

@@ -441,8 +441,9 @@ def simhash_candidate_pairs(
     guard and caveat as minhash_lsh_pairs — capping trades guaranteed
     recall for bounded join size).
     """
+    if not 0 <= max_hamming <= 63:
+        raise ValueError(f"max_hamming must be in 0..63, got {max_hamming}")
     n_blocks = max_hamming + 1
-    assert 1 <= n_blocks <= 64
     base, rem = divmod(64, n_blocks)
     specs = []
     pos = 0
@@ -611,9 +612,10 @@ def segment_rows(
             F.xxhash64(seg_text).alias("h1"),
             F.xxhash64(F.reverse(seg_text)).alias("h2"),
         )
-    else:
-        assert key_bits == 64, "key_bits must be 64 or 128"
+    elif key_bits == 64:
         seg_key = F.xxhash64(seg_text)
+    else:
+        raise ValueError(f"key_bits must be 64 or 128, got {key_bits}")
     return base.select(
         id_col,
         F.col("seg_idx").cast("long").alias("seg_idx"),

@@ -43,7 +43,8 @@ def with_split(
     (conv_id / doc_id), never on row position, so correlated rows
     stay together. One projection, no shuffle, no RNG."""
     total = sum(f for _, f in splits)
-    assert abs(total - 1.0) < 1e-9, f"split fractions must sum to 1, got {total}"
+    if abs(total - 1.0) >= 1e-9:
+        raise ValueError(f"split fractions must sum to 1, got {total}")
     u = hash_uniform(key_col, seed)
     chain = None
     acc = 0.0

@@ -3,12 +3,16 @@
 Tiers (cost/recall points):
 - brute_force_topk: exact cosine top-k for a single query vector —
   one scan with a vectorized per-batch numpy GEMV, global top-k via
-  orderBy+limit (TakeOrderedAndProject: parallel per-partition partial
-  top-k, k-row merge at the driver — never a single-task window).
-  The correctness baseline.
-- knn_join: exact top-k for a (small, broadcastable) query SET —
-  broadcast nested-loop + per-query window rank. Fine up to ~10^3
-  queries × 10^8 corpus on a big cluster.
+  ``fte.functions.top_k`` (TakeOrderedAndProject: parallel
+  per-partition partial top-k, k-row merge at the driver — never a
+  single-task window). The correctness baseline, and the one
+  single-query scorer: lsh_topk and ivf_topk only filter candidates.
+- knn_join: exact top-k for a (small, broadcastable) query SET — the
+  L2-normalized query matrix is broadcast, each corpus partition
+  scores it with one numpy GEMM per Arrow batch and keeps a top-k plus
+  ties per query, and a per-query window ranks the survivors. Fine up
+  to ~10^3 queries × 10^8 corpus on a big cluster. ivf_knn_join is the
+  same driver (``_batch_knn``) restricted to each query's probed cells.
 - lsh_topk / with_rh_signature: random-hyperplane LSH — signature
   bucketing bounds the candidate set so the scale path touches only
   matching buckets. Recall is tunable by (n_bits, max_hamming).
@@ -17,6 +21,10 @@ Tiers (cost/recall points):
   probe the nprobe nearest centroid cells only. The classic ANN layout
   for 100 TB corpora: cell assignment is written once (partition the
   table by ivf_cell), queries prune by cell.
+
+Every cosine against a zero vector is NULL and ranks after every
+score (``_row_norms`` in numpy, ``try_divide`` in ``cosine``), as
+DuckDB's ``x / 0.0`` is.
 
 Inner loops are Arrow-batched pandas UDFs doing ONE numpy GEMM per
 batch against the hyperplane / centroid matrix — higher-order-function
@@ -34,6 +42,8 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.functions import pandas_udf
+
+from fte.functions import top_k
 
 
 def _as_double(col) -> Column:
@@ -53,11 +63,42 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return (dot(a, b) / (norm(a) * norm(b))).cast("double")
+    """NULL against a zero vector (a plain ``/`` raises under ANSI)."""
+    return F.try_divide(dot(a, b), norm(a) * norm(b)).cast("double")
 
 
 def _stack(vs: pd.Series) -> np.ndarray:
     return np.stack([np.asarray(v, dtype="float64") for v in vs.to_numpy()])
+
+
+def _row_norms(M: np.ndarray) -> np.ndarray:
+    """L2 norm of each row (the last axis), NaN for a zero row — the one
+    zero-norm rule of every numpy cosine here. Dividing by it makes
+    every score of a zero vector NaN, which reaches Spark as NULL and
+    ranks after every non-NULL score (DuckDB's ``x / 0.0`` is NULL
+    too)."""
+    n = np.linalg.norm(M, axis=-1)
+    return np.where(n == 0, np.nan, n)
+
+
+def _topk_ties(scores: np.ndarray, k: int) -> np.ndarray:
+    """Indices of the top-k scores plus every tie at the kth (a tied
+    boundary row could still win on id order in the final exact rank);
+    NaN (NULL) scores rank last."""
+    if len(scores) <= k:
+        return np.arange(len(scores))
+    key = np.where(np.isnan(scores), np.inf, -scores)
+    kth = np.partition(key, k - 1)[k - 1]
+    return np.flatnonzero(key <= kth)
+
+
+def _flat_vectors(batch, vec_col: str) -> tuple[np.ndarray, np.ndarray]:
+    """(flat float64 values, per-row lengths) of a list column in an
+    Arrow batch: the value buffer viewed as one numpy array, no
+    per-row object materialization."""
+    col = batch.column(batch.schema.get_field_index(vec_col))
+    vals = col.flatten().to_numpy(zero_copy_only=False).astype("float64")
+    return vals, col.value_lengths().to_numpy(zero_copy_only=False)
 
 
 def _cosine_pair_udf():
@@ -73,10 +114,7 @@ def _cosine_pair_udf():
             return pd.Series([], dtype="float64")
         A = _stack(va)
         B = _stack(vb)
-        num = np.einsum("ij,ij->i", A, B)
-        den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-        den[den == 0] = 1.0
-        return pd.Series(num / den)
+        return pd.Series(np.einsum("ij,ij->i", A, B) / (_row_norms(A) * _row_norms(B)))
 
     return pair_cos
 
@@ -85,36 +123,27 @@ def _cosine_q_udf(query_vec):
     """Vectorized cosine vs one query vector: one numpy GEMV per Arrow
     batch (BLAS), ~100x the interpreted HOF fold."""
     q = np.asarray([float(x) for x in query_vec], dtype="float64")
-    qn = float(np.linalg.norm(q))
+    qn = _row_norms(q)
 
     @pandas_udf("double")
     def cos_q(vs: pd.Series) -> pd.Series:
         if len(vs) == 0:
             return pd.Series([], dtype="float64")
         V = _stack(vs)
-        return pd.Series((V @ q) / (np.linalg.norm(V, axis=1) * qn))
+        return pd.Series((V @ q) / (_row_norms(V) * qn))
 
     return cos_q
-
-
-def _topk_with_rank(scored: DataFrame, order_cols, k: int, rank_col: str = "rank") -> DataFrame:
-    """Global top-k as orderBy+limit → TakeOrderedAndProject (each
-    partition keeps a k-row heap; the driver merges k·n_parts rows).
-    The rank column is derived AFTER the limit, over ≤k rows — the
-    single-partition window touches k rows, not the corpus. The order
-    must be a total order (tie-broken) so limit(k) is deterministic."""
-    limited = scored.orderBy(*order_cols).limit(k)
-    w = Window.orderBy(*order_cols)
-    return limited.withColumn(rank_col, F.row_number().over(w))
 
 
 def brute_force_topk(
     df: DataFrame, query_vec, k: int = 10, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
-    """Exact cosine top-k vs one query vector."""
+    """Exact cosine top-k vs one query vector: the one single-query
+    scorer (``lsh_topk`` and ``ivf_topk`` filter their candidates and
+    call it)."""
     sim = _cosine_q_udf(query_vec)(F.col(vec_col))
     scored = df.select(id_col, sim.alias("cos_sim"))
-    return _topk_with_rank(scored, [F.desc("cos_sim"), F.asc(id_col)], k)
+    return top_k(scored, [F.desc("cos_sim"), F.asc(id_col)], k)
 
 
 def _collect_query_matrix(queries: DataFrame, query_id: str, query_vec: str):
@@ -127,46 +156,34 @@ def _collect_query_matrix(queries: DataFrame, query_id: str, query_vec: str):
         return None
     qids = np.array([int(r[0]) for r in qrows], dtype="int64")
     Q = np.stack([np.asarray(list(r[1]), dtype="float64") for r in qrows])
-    return qids, Q / np.linalg.norm(Q, axis=1, keepdims=True)
+    return qids, Q / _row_norms(Q)[:, None]
 
 
-def _gemm_partition_topk(bc, k: int, corpus_id: str, corpus_vec: str,
-                         query_id: str, cell_col: str | None = None):
-    """Shared mapInPandas body for the batch kNN operators: one numpy
-    GEMM per Arrow batch against the broadcast query matrix, a
-    partition-local top-k-plus-ties accumulator per query, ~k·Q rows
-    emitted per partition. With ``cell_col``, scores outside a query's
-    probe set (third broadcast element) are masked before selection
+def _gemm_partition_topk(bc, k: int, corpus_id: str, corpus_vec: str, query_id: str):
+    """mapInPandas body of the batch kNN driver: one numpy GEMM per
+    Arrow batch against the broadcast query matrix, a partition-local
+    top-k-plus-ties accumulator per query, ~k·Q rows emitted per
+    partition. With a probe set (third broadcast element), scores
+    outside a query's probed ``ivf_cell``s are masked before selection
     (the IVF variant)."""
 
     def part_topk(batches):
-        if cell_col is None:
-            qids_, Qn_ = bc.value
-            probe_ = None
-        else:
-            qids_, Qn_, probe_ = bc.value
+        qids_, Qn_, probe_ = bc.value
         nq = len(qids_)
         cand_ids: list[list[np.ndarray]] = [[] for _ in range(nq)]
         cand_sims: list[list[np.ndarray]] = [[] for _ in range(nq)]
 
         def keep_topk(ids: np.ndarray, sims: np.ndarray):
-            """Top-k plus ties at the kth score (a tied boundary row
-            could still win on id order in the final exact rank)."""
-            if len(sims) <= k:
-                return ids, sims
-            kth = np.partition(-sims, k - 1)[k - 1]
-            sel = -sims <= kth
+            sel = _topk_ties(sims, k)
             return ids[sel], sims[sel]
 
         for pdf in batches:
             if not len(pdf):
                 continue
             V = _stack(pdf[corpus_vec])
-            n = np.linalg.norm(V, axis=1)
-            n[n == 0] = 1.0
-            S = (V / n[:, None]) @ Qn_.T  # (batch, Q) — one GEMM
+            S = (V / _row_norms(V)[:, None]) @ Qn_.T  # (batch, Q) — one GEMM
             ids = pdf[corpus_id].to_numpy()
-            cells = pdf[cell_col].to_numpy() if cell_col is not None else None
+            cells = pdf["ivf_cell"].to_numpy() if probe_ is not None else None
             for j in range(nq):
                 if cells is not None:
                     m = np.isin(cells, probe_[j])
@@ -199,9 +216,38 @@ def _gemm_partition_topk(bc, k: int, corpus_id: str, corpus_vec: str,
     return part_topk
 
 
-def _empty_knn_result(spark, query_id: str, corpus_id: str) -> DataFrame:
-    return spark.createDataFrame(
-        [], f"{query_id} long, {corpus_id} long, cos_sim double, rank int"
+def _batch_knn(
+    corpus: DataFrame, queries: DataFrame, k: int, corpus_id: str, corpus_vec: str,
+    query_id: str, query_vec: str, centroids: np.ndarray | None = None, nprobe: int = 0,
+) -> DataFrame:
+    """The one batch-kNN driver behind ``knn_join`` and ``ivf_knn_join``:
+    collect the query matrix, broadcast it, score every corpus
+    partition with ``_gemm_partition_topk``, rank the survivors with a
+    per-query window. With ``centroids``, each query probes its
+    ``nprobe`` best cells and the corpus is filtered to their union."""
+    spark = corpus.sparkSession
+    qm = _collect_query_matrix(queries, query_id, query_vec)
+    if qm is None:
+        return spark.createDataFrame(
+            [], f"{query_id} long, {corpus_id} long, cos_sim double, rank int"
+        )
+    qids, Qn = qm
+    cols = [corpus_id, corpus_vec]
+    probe = None
+    if centroids is not None:
+        C = np.ascontiguousarray(centroids, dtype="float64")
+        probe = np.argsort(-(Qn @ C.T), axis=1)[:, :nprobe]  # (Q, nprobe)
+        union_cells = sorted({int(c) for row in probe for c in row})
+        corpus = corpus.filter(F.col("ivf_cell").isin(union_cells))
+        cols.append("ivf_cell")
+    bc = spark.sparkContext.broadcast((qids, Qn, probe))
+    out_schema = f"{query_id} long, {corpus_id} long, cos_sim double"
+    part_topk = _gemm_partition_topk(bc, k, corpus_id, corpus_vec, query_id)
+    scored = corpus.select(*cols).mapInPandas(part_topk, out_schema)
+    w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.asc(corpus_id))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
     )
 
 
@@ -231,18 +277,7 @@ def knn_join(
     parallelism at Q). ``knn_join_hof`` is the sequential-accumulation
     twin kept for cross-checking only.
     """
-    qm = _collect_query_matrix(queries, query_id, query_vec)
-    if qm is None:
-        return _empty_knn_result(corpus.sparkSession, query_id, corpus_id)
-    bc = corpus.sparkSession.sparkContext.broadcast(qm)
-    out_schema = f"{query_id} long, {corpus_id} long, cos_sim double"
-    part_topk = _gemm_partition_topk(bc, k, corpus_id, corpus_vec, query_id)
-    scored = corpus.select(corpus_id, corpus_vec).mapInPandas(part_topk, out_schema)
-    w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.asc(corpus_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _batch_knn(corpus, queries, k, corpus_id, corpus_vec, query_id, query_vec)
 
 
 def knn_join_hof(
@@ -287,9 +322,8 @@ def with_l2_norm_arrow(df: DataFrame, vec_col: str = "embedding", out_col: str =
 
     def add_norm(batches):
         for batch in batches:
-            col = batch.column(batch.schema.get_field_index(vec_col))
-            vals = col.flatten().to_numpy(zero_copy_only=False).astype("float64")
-            lens = col.value_lengths().to_numpy(zero_copy_only=False).astype("int64")
+            vals, lens = _flat_vectors(batch, vec_col)
+            lens = lens.astype("int64")
             ends = np.cumsum(lens)
             starts = ends - lens
             csum = np.concatenate([[0.0], np.cumsum(vals * vals)])
@@ -306,6 +340,13 @@ def _hyperplanes(dim: int, n_bits: int, seed: int) -> np.ndarray:
     return rng.standard_normal((n_bits, dim))
 
 
+def _sign_bits(V: np.ndarray, H: np.ndarray):
+    """Bit i = sign(v · h_i) > 0, packed little-endian into an int64 per
+    row of ``V`` (a scalar for one vector)."""
+    bits = (V @ H.T) > 0.0
+    return (bits.astype("int64") * (1 << np.arange(len(H), dtype="int64"))).sum(axis=-1)
+
+
 def with_rh_signature(
     df: DataFrame, vec_col: str = "embedding", n_bits: int = 16, seed: int = 42,
     dim: int | None = None, out_col: str = "rh_sig",
@@ -319,7 +360,8 @@ def with_rh_signature(
     is read from the data inside the UDF; the parameter is accepted
     only as a consistency check). n_bits ≤ 63.
     """
-    assert 0 < n_bits <= 63, "n_bits must fit a positive long"
+    if not 0 < n_bits <= 63:
+        raise ValueError(f"n_bits must be in 1..63 to fit a positive long, got {n_bits}")
     check_dim = dim
     cache: dict[int, np.ndarray] = {}
 
@@ -334,21 +376,16 @@ def with_rh_signature(
         H = cache.get(d)
         if H is None:
             H = cache.setdefault(d, _hyperplanes(d, n_bits, seed))
-        bits = (V @ H.T) > 0.0
-        weights = 1 << np.arange(n_bits, dtype="int64")
-        return pd.Series((bits.astype("int64") * weights).sum(axis=1))
+        return pd.Series(_sign_bits(V, H))
 
     return df.withColumn(out_col, sig_udf(F.col(vec_col)))
 
 
 def _query_signature(query_vec, n_bits: int, seed: int) -> int:
-    """Driver-side twin of with_rh_signature for a single vector —
-    same (qv @ H.T) > 0 formulation so the query's signature matches
-    what the corpus pass would assign it."""
+    """Driver-side twin of with_rh_signature for a single vector, so
+    the query's signature matches what the corpus pass assigns it."""
     qv = np.asarray([float(x) for x in query_vec], dtype="float64")
-    H = _hyperplanes(len(qv), n_bits, seed)
-    bits = (qv @ H.T) > 0.0
-    return int((bits.astype("int64") * (1 << np.arange(n_bits, dtype="int64"))).sum())
+    return int(_sign_bits(qv, _hyperplanes(len(qv), n_bits, seed)))
 
 
 def lsh_topk(
@@ -363,9 +400,7 @@ def lsh_topk(
     cand = sigged.filter(
         F.bit_count(F.col("rh_sig").bitwiseXOR(F.lit(q_sig))) <= max_hamming
     )
-    sim = _cosine_q_udf(query_vec)(F.col(vec_col))
-    scored = cand.select(id_col, sim.alias("cos_sim"))
-    return _topk_with_rank(scored, [F.desc("cos_sim"), F.asc(id_col)], k)
+    return brute_force_topk(cand, query_vec, k, id_col, vec_col)
 
 
 def embedding_dup_pairs(
@@ -458,9 +493,7 @@ def all_pairs_topk_gemm(
                 idb = np.array([r["_id"] for r in rb], dtype="int64")
                 A = np.array([r["_v"] for r in ra], dtype="float64")
                 B = np.array([r["_v"] for r in rb], dtype="float64")
-                A /= np.linalg.norm(A, axis=1, keepdims=True)
-                B /= np.linalg.norm(B, axis=1, keepdims=True)
-                S = A @ B.T
+                S = (A / _row_norms(A)[:, None]) @ (B / _row_norms(B)[:, None]).T
                 n_b = len(idb)
                 # r6: threshold on SCORES first and materialize id
                 # pairs for survivors only — the old path built two
@@ -478,15 +511,7 @@ def all_pairs_topk_gemm(
                 else:
                     flat = None  # every element is a distinct pair
                     s = S.ravel()
-                if len(s) > k:
-                    # deterministic local top-k: O(n) partition finds
-                    # the kth score, keep EVERYTHING >= it (k plus ties
-                    # — a partition cut alone picks tied boundary
-                    # pairs arbitrarily)
-                    kth = np.partition(-s, k - 1)[k - 1]
-                    keep = np.flatnonzero(-s <= kth)
-                else:
-                    keep = np.arange(len(s))
+                keep = _topk_ties(s, k)
                 cand = flat[keep] if flat is not None else keep
                 ia, ib = np.divmod(cand, n_b)
                 pa, pb, s = ida[ia], idb[ib], s[keep]
@@ -506,7 +531,7 @@ def all_pairs_topk_gemm(
 
     local = combos.mapInPandas(gemm, out_schema)
     order = [F.desc("cos_sim"), F.asc("id_a"), F.asc("id_b")]
-    return _topk_with_rank(local, order, k, rank_col="pair_rank")
+    return top_k(local, order, k, rank_col="pair_rank")
 
 
 # ---------------------------------------------------------------- IVF
@@ -550,25 +575,6 @@ def ivf_build(
     return _ivf_assign(df, C, vec_col), C
 
 
-def _kmeans_cell_means(assigned: DataFrame, vec_col: str) -> list:
-    """One Lloyd recentering pass: per-(cell, dim) mean, re-packed
-    executor-side into a dim-ordered array per cell so the driver
-    collect is O(n_cells) rows. Struct-field extraction over the
-    sorted array (``_sm._m``) is ExtractValue codegen, not an
-    interpreted higher-order lambda."""
-    return (
-        assigned.select(
-            "ivf_cell", F.posexplode(_as_double(vec_col)).alias("_i", "_x")
-        )
-        .groupBy("ivf_cell", "_i")
-        .agg(F.avg("_x").alias("_m"))
-        .groupBy("ivf_cell")
-        .agg(F.sort_array(F.collect_list(F.struct("_i", "_m"))).alias("_sm"))
-        .select("ivf_cell", F.col("_sm._m").alias("_ms"))
-        .collect()
-    )
-
-
 def ivf_build_kmeans(
     df: DataFrame, n_cells: int = 64, id_col: str = "vec_id", vec_col: str = "embedding",
     seed: int = 42, iters: int = 3,
@@ -578,26 +584,28 @@ def ivf_build_kmeans(
     the right variant for cosine ANN).
 
     Each round is one distributed pass: GEMM assignment (pandas UDF)
-    → posexplode vector components → hash-aggregate per (cell, dim)
-    mean → executor-side re-pack into ONE dim-length array per cell
-    (sort_array over collected (dim, mean) structs + struct-field
-    extraction — all codegen, no per-element lambda). The shuffle
-    moves only n_cells × dim partial sums per map task (map-side
-    combine), never vectors; the driver collects exactly n_cells rows
-    per round (NOT n_cells × dim component rows — at production scale
-    2^16 cells × 1024 dims the row-per-component shape is ~67M driver
-    rows per Lloyd iteration) to become the next round's broadcast
-    matrix. Cells that lose all members keep their previous centroid.
+    → ``mean_pool_embeddings`` over ``ivf_cell`` (per-(cell, dim)
+    mean, re-packed executor-side into ONE dim-length array per cell —
+    all codegen, no per-element lambda). The shuffle moves only
+    n_cells × dim partial sums per map task (map-side combine), never
+    vectors; the driver collects exactly n_cells rows per round (NOT
+    n_cells × dim component rows — at production scale 2^16 cells ×
+    1024 dims the row-per-component shape is ~67M driver rows per
+    Lloyd iteration) to become the next round's broadcast matrix. Cells that lose all members keep their previous centroid.
     """
     assigned, C = ivf_build(df, n_cells, id_col, vec_col, seed)
     dim = C.shape[1]
     for _ in range(iters):
-        means = _kmeans_cell_means(assigned, vec_col)
+        means = mean_pool_embeddings(assigned, "ivf_cell", vec_col).collect()
         C2 = C.copy()
         touched = np.zeros(len(C), dtype=bool)
         for r in means:
-            ms = np.asarray(r["_ms"], dtype="float64")
-            assert ms.shape == (dim,)
+            ms = np.asarray(r["pooled"], dtype="float64")
+            if ms.shape != (dim,):
+                raise ValueError(
+                    f"ragged embeddings: cell {r['ivf_cell']} pooled to "
+                    f"{ms.shape[0]} dims, centroids have {dim}"
+                )
             C2[r["ivf_cell"]] = ms
             touched[r["ivf_cell"]] = True
         norms = np.linalg.norm(C2, axis=1, keepdims=True)
@@ -605,7 +613,6 @@ def ivf_build_kmeans(
         C2 = np.where(touched[:, None], C2 / norms, C)
         C = C2
         assigned = _ivf_assign(df, C, vec_col)
-    assert C.shape == (len(C), dim)
     return assigned, C
 
 
@@ -615,12 +622,9 @@ def ivf_topk(
 ) -> DataFrame:
     """Probe the nprobe best cells only, exact cosine inside them."""
     qv = np.asarray([float(x) for x in query_vec])
-    scores = centroids @ qv
-    probe = [int(i) for i in np.argsort(-scores)[:nprobe]]
+    probe = [int(i) for i in np.argsort(-(centroids @ qv))[:nprobe]]
     cand = assigned.filter(F.col("ivf_cell").isin(probe))
-    sim = _cosine_q_udf(qv)(F.col(vec_col))
-    scored = cand.select(id_col, sim.alias("cos_sim"))
-    return _topk_with_rank(scored, [F.desc("cos_sim"), F.asc(id_col)], k)
+    return brute_force_topk(cand, qv, k, id_col, vec_col)
 
 
 def ivf_knn_join(
@@ -643,32 +647,15 @@ def ivf_knn_join(
     union of probed cells (at scale the assigned table is partitioned
     by ivf_cell, so this prunes files at the scan); inside each Arrow
     batch one GEMM scores all queries at once and scores outside a
-    query's probe set are masked to -inf before the partition-local
+    query's probe set are masked out before the partition-local
     top-k. Only ~k·Q candidate rows leave each partition.
 
     Output: (query_id, vec_id, cos_sim, rank) — rank within the
     probed cells (approximate; agreement vs exact knn_join is gated
     in the catalog). Empty query sets return an empty result."""
-    qm = _collect_query_matrix(queries, query_id, query_vec)
-    if qm is None:
-        return _empty_knn_result(assigned.sparkSession, query_id, corpus_id)
-    qids, Qn = qm
-    C = np.ascontiguousarray(centroids, dtype="float64")
-    probe = np.argsort(-(Qn @ C.T), axis=1)[:, :nprobe]  # (Q, nprobe)
-    union_cells = sorted({int(c) for row in probe for c in row})
-    bc = assigned.sparkSession.sparkContext.broadcast((qids, Qn, probe))
-    out_schema = f"{query_id} long, {corpus_id} long, cos_sim double"
-    part_topk = _gemm_partition_topk(
-        bc, k, corpus_id, corpus_vec, query_id, cell_col="ivf_cell"
-    )
-    cand = assigned.filter(F.col("ivf_cell").isin(union_cells)).select(
-        corpus_id, corpus_vec, "ivf_cell"
-    )
-    scored = cand.mapInPandas(part_topk, out_schema)
-    w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.asc(corpus_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _batch_knn(
+        assigned, queries, k, corpus_id, corpus_vec, query_id, query_vec,
+        centroids=centroids, nprobe=nprobe,
     )
 
 
@@ -799,17 +786,11 @@ def emb_covariance_gemm(
 
     def partials(batches):
         for batch in batches:
-            col = batch.column(batch.schema.get_field_index(vec_col))
-            lens = col.value_lengths().to_numpy(zero_copy_only=False)
+            vals, lens = _flat_vectors(batch, vec_col)
             if len(lens) == 0:
                 continue
-            d = int(lens[0])
-            X = (
-                col.flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype("float64")
-                .reshape(-1, d)
-            )
+            X = vals.reshape(-1, int(lens[0]))
+            d = X.shape[1]
             n = X.shape[0]
             sx = X.sum(axis=0)
             xtx = X.T @ X
@@ -883,13 +864,7 @@ def pca_project(
 
     def project(batches):
         for batch in batches:
-            col = batch.column(batch.schema.get_field_index(vec_col))
-            X = (
-                col.flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype("float64")
-                .reshape(len(batch), -1)
-            )
+            X = _flat_vectors(batch, vec_col)[0].reshape(len(batch), -1)
             P = (X - mu) @ comp.T
             yield batch.append_column(out_col, pa.array(list(P), type=pa.list_(pa.float64())))
 
@@ -966,6 +941,5 @@ def quant_knn(
         .groupBy("id")
         .agg(F.sum(F.col("q") * F.col("_qq")).cast("long").alias("qdot"))
     )
-    top = scored.orderBy(F.col("qdot").desc(), F.col("id").asc()).limit(k)
-    w = Window.orderBy(F.col("qdot").desc(), F.col("id").asc())
-    return top.select("id", "qdot", F.row_number().over(w).cast("long").alias("rank"))
+    top = top_k(scored, [F.col("qdot").desc(), F.col("id").asc()], k)
+    return top.select("id", "qdot", F.col("rank").cast("long").alias("rank"))

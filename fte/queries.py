@@ -487,10 +487,10 @@ def q_knn_bruteforce(spark, sf_dir):
     sequential dot agrees after the 6-dp rounding (same precedent as
     emb_top_pairs_gemm)."""
     from fte.operators.similarity import brute_force_topk
+    from fte.queries_ml import query_vector
 
     e = _t(spark, sf_dir, "embeddings", spread=False)
-    q = [float(x) for x in e.filter(F.col("vec_id") == 0).head()["embedding"]]
-    return brute_force_topk(e, q, k=10).select(
+    return brute_force_topk(e, query_vector(e), k=10).select(
         "vec_id", F.round("cos_sim", 6).alias("cos_sim"),
         F.col("rank").cast("long").alias("rank"),
     )
@@ -551,40 +551,31 @@ def catalog() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str |
 
 
 # The driver's CORRECTNESS snapshot records only the FIRST 50 catalog
-# entries (dict insertion order).  After round 5 the union is complete
-# (every catalog query driver-green in some CORRECTNESS_r*.json, or
-# justified rows-only with a green agreement row), so the round-6
-# OPTIMIZATION window re-validates exactly the queries whose PHYSICAL
-# PLANS this round changed: the four whose computation was
-# restructured (emb_covariance posexplode rewrite, range_join window
-# rewrite, doc_text_stats regexp_count swap, revenue_by_segment
-# per-order pre-aggregation) first, then the scan-spread-affected
-# families (documents / events / embeddings / lineitem); queries whose
-# plans are byte-identical to round 5 (spread opt-outs, unchanged
-# operators) keep their earlier green rows and stay out of the window.
+# entries (dict insertion order), so this tuple decides which queries
+# a round re-proves: the most recently changed first.
 _DRIVER_WINDOW_FIRST = (
-    # 4 computation-restructured queries (results proven bit-identical
-    # locally; the driver re-proves them here)
-    "emb_covariance", "range_join", "doc_text_stats", "revenue_by_segment",
-    # spread-affected documents family
+    # embedding family + top_terms
+    "knn_bruteforce", "knn_batch", "lsh_topk", "ivf_topk", "ivf_knn_batch",
+    "lsh_recall_vs_exact", "ivf_recall_vs_exact", "ivf_knn_recall_vs_exact",
+    "quant_knn", "quant_recall_vs_exact", "emb_top_pairs",
+    "emb_top_pairs_gemm", "emb_neardup", "emb_norms", "emb_covariance",
+    "top_terms",
+    # argument checks now ValueError (simhash radius, segment key, split)
+    "simhash_neardup", "simhash_recall_vs_exact", "segment_dedup",
+    "hash_split",
+    # computation-restructured in round 6
+    "range_join", "doc_text_stats", "revenue_by_segment",
+    # near-duplicate family refactor
+    "minhash_neardup", "minhash_recall_vs_exact", "incremental_neardup",
+    "ngram_neardup",
+    # window family refactor
+    "rolling_counts", "role_freq_running", "sessionize", "session_stats",
+    "lag_lead", "backfill",
+    # rest of the round-6 spread window
     "pii_redact", "lang_id", "doc_quality", "repetition_stats",
     "unigram_xent", "decontaminate", "bm25_topk", "bm25_batch",
-    "segment_dedup", "token_fertility", "feature_hash", "doc_chunks",
-    "column_profile", "feature_corr", "winnow_fp", "hash_split",
-    "pack_bins", "fuzzy_join",
-    # spread-affected events family
-    "sessionize", "session_stats", "rolling_counts", "asof_join",
-    "asof_join_merge", "role_freq_running", "user_stats",
-    "pivot_user_types", "sft_render", "sft_spans", "training_pairs",
-    "pandas_udaf_median", "oof_target_encode", "loo_target_encode",
-    "turn_runs", "funnel", "cohort_retention", "autocorr",
-    "response_latency", "role_transition", "incremental_agg",
-    # spread-affected embeddings family (minhash pair: rows-only row +
-    # its oracle-green agreement gate, both through the new
-    # checkpointed-verify plan)
-    "emb_quantize", "quant_knn", "quant_recall_vs_exact",
-    "emb_top_pairs_gemm", "minhash_neardup", "minhash_recall_vs_exact",
-    # lineitem family
+    "asof_join", "asof_join_merge", "training_pairs", "pandas_udaf_median",
+    "oof_target_encode", "turn_runs", "funnel", "cohort_retention",
     "tpch_pricing",
 )
 

@@ -384,7 +384,7 @@ FROM documents
 def q_emb_covariance(spark, sf_dir):
     """Oracle-exact covariance of the first 16 embedding dimensions
     (decimal-accumulated; the full-width scale path is
-    emb_covariance_gemm, allclose-gated in test_similarity)."""
+    emb_covariance_gemm, allclose-gated in tests/test_analytics.py)."""
     from fte.operators.similarity import emb_covariance
 
     e = _t(spark, sf_dir, "embeddings")
@@ -473,11 +473,10 @@ def q_quant_recall_vs_exact(spark, sf_dir):
     A bounds bug, a floor/round drift, or a score overflow all move
     this number."""
     from fte.operators.similarity import brute_force_topk, quant_knn, quantize_embeddings
-    from fte.queries_ml import recall_vs_exact
+    from fte.queries_ml import query_vector, recall_vs_exact
 
     e = _t(spark, sf_dir, "embeddings")
-    q = [float(x) for x in e.filter(F.col("vec_id") == 0).head()["embedding"]]
-    exact = brute_force_topk(e, q, k=10).select("vec_id")
+    exact = brute_force_topk(e, query_vector(e), k=10).select("vec_id")
     _bounds, quant = quantize_embeddings(e)
     query_q = quant.where(F.col("id") == 0).select("i", "q")
     approx = quant_knn(quant, query_q, k=10).select(F.col("id").alias("vec_id"))

@@ -12,13 +12,12 @@ ground-truth tests instead (tests/test_dedup.py, test_similarity.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from fte.functions import norm_text
+from fte.functions import norm_text, top_k
 from fte.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs, simhash_pairs
 from fte.operators.similarity import (
     brute_force_topk,
-    cosine,
     ivf_build,
     ivf_topk,
     knn_join,
@@ -47,6 +46,19 @@ def recall_vs_exact(exact: DataFrame, approx: DataFrame, keys: str | list[str]) 
     return ex.crossJoin(ov).select(
         "n_exact", "n_overlap",
         (F.col("n_overlap") / F.col("n_exact")).cast("double").alias("recall"),
+    )
+
+
+def query_vector(e: DataFrame) -> list[float]:
+    """The catalog's single query vector: ``vec_id = 0``'s embedding."""
+    return [float(x) for x in e.filter(F.col("vec_id") == 0).head()["embedding"]]
+
+
+def query_set(e: DataFrame) -> DataFrame:
+    """The catalog's batch query set: vec_ids 0-2 as ``(query_id,
+    embedding)``."""
+    return e.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), "embedding"
     )
 
 
@@ -597,13 +609,8 @@ def q_top_terms(spark, sf_dir):
         F.count("*").alias("n_occurrences"),
         F.countDistinct("doc_id").alias("n_docs"),
     )
-    order = [F.desc("n_occurrences"), F.asc("term")]
-    w = Window.orderBy(*order)
-    return (
-        counts.orderBy(*order)
-        .limit(50)
-        .withColumn("term_rank", F.row_number().over(w).cast("long"))
-    )
+    top = top_k(counts, [F.desc("n_occurrences"), F.asc("term")], 50, "term_rank")
+    return top.withColumn("term_rank", F.col("term_rank").cast("long"))
 
 
 SQL_TOP_TERMS = r"""
@@ -803,20 +810,13 @@ def q_emb_top_pairs(spark, sf_dir):
                  norm(F.col("_e")).alias("_nb"))
     pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
     sim = (dot(F.col("_ea"), F.col("_eb")) / (F.col("_na") * F.col("_nb"))).cast("double")
-    # top-k via orderBy+limit (TakeOrderedAndProject) so the n²/2 pair
-    # stream reduces per partition instead of through one window task;
-    # pair_rank derived over the 20 survivors
+    # the n²/2 pair stream reduces per partition (top_k), not through
+    # one window task
     order = [F.desc("cos_raw"), F.asc("id_a"), F.asc("id_b")]
-    w = Window.orderBy(*order)
-    return (
-        pairs.select("id_a", "id_b", sim.alias("cos_raw"))
-        .orderBy(*order)
-        .limit(20)
-        .withColumn("pair_rank", F.row_number().over(w))
-        .select(
-            "id_a", "id_b", F.round("cos_raw", 6).alias("cos_sim"),
-            F.col("pair_rank").cast("long").alias("pair_rank"),
-        )
+    top = top_k(pairs.select("id_a", "id_b", sim.alias("cos_raw")), order, 20, "pair_rank")
+    return top.select(
+        "id_a", "id_b", F.round("cos_raw", 6).alias("cos_sim"),
+        F.col("pair_rank").cast("long").alias("pair_rank"),
     )
 
 
@@ -838,10 +838,7 @@ FROM (
 def q_knn_batch(spark, sf_dir):
     """Exact top-5 neighbors for query vectors 0,1,2 (broadcast knn join)."""
     e = _t(spark, sf_dir, "embeddings", spread=False)
-    queries = e.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    got = knn_join(e, queries, k=5)
+    got = knn_join(e, query_set(e), k=5)
     return got.select(
         "query_id", "vec_id", F.round("cos_sim", 6).alias("cos_sim"),
         F.col("rank").cast("long").alias("rank"),
@@ -889,15 +886,14 @@ def q_lsh_topk(spark, sf_dir):
     """ANN top-10 via random-hyperplane LSH (rows-only; recall vs
     brute force is pytest-checked)."""
     e = _t(spark, sf_dir, "embeddings")
-    q = [float(x) for x in e.filter(F.col("vec_id") == 0).head()["embedding"]]
-    got = lsh_topk(e, q, k=10, n_bits=12, max_hamming=3)
+    got = lsh_topk(e, query_vector(e), k=10, n_bits=12, max_hamming=3)
     return got.select("vec_id", F.round("cos_sim", 6).alias("cos_sim"))
 
 
 def q_ivf_topk(spark, sf_dir):
     """ANN top-10 via IVF cells (rows-only)."""
     e = _t(spark, sf_dir, "embeddings")
-    q = [float(x) for x in e.filter(F.col("vec_id") == 0).head()["embedding"]]
+    q = query_vector(e)
     assigned, C = ivf_build(e, n_cells=16)
     got = ivf_topk(assigned, C, q, k=10, nprobe=4)
     return got.select("vec_id", F.round("cos_sim", 6).alias("cos_sim"))
@@ -911,11 +907,8 @@ def q_ivf_knn_batch(spark, sf_dir):
     from fte.operators.similarity import ivf_knn_join
 
     e = _t(spark, sf_dir, "embeddings", spread=False)
-    queries = e.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
     assigned, C = ivf_build(e, n_cells=16)
-    got = ivf_knn_join(assigned, C, queries, k=5, nprobe=4)
+    got = ivf_knn_join(assigned, C, query_set(e), k=5, nprobe=4)
     return got.select(
         "query_id", "vec_id", F.round("cos_sim", 6).alias("cos_sim"),
         F.col("rank").cast("long").alias("rank"),
@@ -930,9 +923,7 @@ def q_ivf_knn_recall_vs_exact(spark, sf_dir):
     from fte.operators.similarity import ivf_knn_join
 
     e = _t(spark, sf_dir, "embeddings")
-    queries = e.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    queries = query_set(e)
     exact = knn_join(e, queries, k=5).select("query_id", "vec_id")
     assigned, C = ivf_build(e, n_cells=16)
     approx = ivf_knn_join(assigned, C, queries, k=5, nprobe=4).select(
@@ -976,7 +967,7 @@ def q_lsh_recall_vs_exact(spark, sf_dir):
     pytest-checked in test_similarity.py). A hash-family change, a
     signature bug, or a top-k plan regression all move this number."""
     e = _t(spark, sf_dir, "embeddings")
-    q = [float(x) for x in e.filter(F.col("vec_id") == 0).head()["embedding"]]
+    q = query_vector(e)
     exact = brute_force_topk(e, q, k=10).select("vec_id")
     approx = lsh_topk(e, q, k=10, n_bits=12, max_hamming=3).select("vec_id")
     return recall_vs_exact(exact, approx, "vec_id")
@@ -992,7 +983,7 @@ def q_ivf_recall_vs_exact(spark, sf_dir):
     16 cells, nprobe=4 — a 4x scan reduction). Deterministic overlap
     with the exact top-10, pinned at 7/10 for the sf0.01 corpus."""
     e = _t(spark, sf_dir, "embeddings")
-    q = [float(x) for x in e.filter(F.col("vec_id") == 0).head()["embedding"]]
+    q = query_vector(e)
     exact = brute_force_topk(e, q, k=10).select("vec_id")
     assigned, C = ivf_build(e, n_cells=16)
     approx = ivf_topk(assigned, C, q, k=10, nprobe=4).select("vec_id")

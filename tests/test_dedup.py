@@ -233,6 +233,18 @@ def test_simhash_max_bucket_guard(spark):
     assert not any(a < 30 and b < 30 for a, b in pairs)
 
 
+def test_simhash_max_hamming_out_of_range_raises(spark):
+    """The radius sets max_hamming + 1 blocks of the 64-bit signature;
+    outside 0..63 it is rejected with ValueError (an assert, which
+    ``python -O`` strips, used to guard it)."""
+    from fte.operators.dedup import simhash_candidate_pairs
+
+    sig = spark.createDataFrame([(1, 5), (2, 7)], "doc_id long, simhash long")
+    for bad in (-1, 64):
+        with pytest.raises(ValueError, match="max_hamming"):
+            simhash_candidate_pairs(sig, max_hamming=bad)
+
+
 def test_decontaminate_planted_overlap(spark):
     """A train doc embedding >=13 consecutive benchmark words is
     contaminated; clean docs survive; a short (<13-word) bench doc
@@ -421,6 +433,15 @@ def test_segment_dedup_128bit_key_matches_64(spark):
     pd.testing.assert_frame_equal(a.reset_index(drop=True), b.reset_index(drop=True))
     seg_type = dict(segment_rows(df, key_bits=128).dtypes)["segment"]
     assert seg_type == "struct<h1:bigint,h2:bigint>"
+
+
+def test_segment_rows_rejects_unknown_key_bits(spark, docs_df):
+    """key_bits other than 64 or 128 raises ValueError; under
+    ``python -O`` the old assert let key_bits=32 return a 64-bit key."""
+    from fte.operators.dedup import segment_rows
+
+    with pytest.raises(ValueError, match="key_bits"):
+        segment_rows(docs_df, key_bits=32)
 
 
 def test_segment_dedup_property_keep_first_occurrence(spark):

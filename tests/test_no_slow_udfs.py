@@ -1,6 +1,7 @@
 """Lint: input_hint bans per-row Python UDFs and the RDD API in the
 engine (BASELINE.json:15 — 'vectorized pandas/Arrow UDFs (no per-row
-Python) throughout'). SURVEY.md §2.B marks F.udf / RDD as banned."""
+Python) throughout'). SURVEY.md §2.B marks F.udf / RDD as banned.
+`assert` statements are banned too: `python -O` strips them."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ BANNED = [
     (re.compile(r"\bF\.udf\b|\bfunctions\.udf\b|@udf\b"), "per-row Python UDF"),
     (re.compile(r"\.rdd\b(?!_)"), "RDD API"),
     (re.compile(r"\bsparkContext\.parallelize\b"), "RDD API"),
+    (re.compile(r"^\s*assert\b", re.M), "assert statement"),
 ]
 
 

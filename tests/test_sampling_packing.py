@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from fte.operators.packing import pack_documents
 from fte.operators.sampling import sample_by_hash, with_split
@@ -26,6 +27,13 @@ def test_split_fractions_and_stability(spark):
     again = with_split(d.repartition(13), "doc_id").select("doc_id", "split").toPandas()
     m = got.merge(again, on="doc_id")
     assert (m["split_x"] == m["split_y"]).all()
+
+
+def test_split_fractions_must_sum_to_one(spark):
+    """Fractions that do not sum to 1 raise ValueError (not an assert,
+    which ``python -O`` strips)."""
+    with pytest.raises(ValueError, match="sum to 1"):
+        with_split(_docs(spark, 10), "doc_id", splits=(("train", 0.8), ("test", 0.1)))
 
 
 def test_sample_by_hash_monotone_and_stable(spark):

@@ -212,15 +212,45 @@ def test_knn_join_matches_hof_twin(spark, emb_df, emb_pdf):
     assert np.allclose(a["cos_sim"], b["cos_sim"], rtol=1e-9, atol=1e-12)
 
 
+def _assert_rank_over_topk_only(plan: str, k: int):
+    """Every Window in ``plan`` ranks the output of a
+    TakeOrderedAndProject of at most k rows: no row_number over an
+    unpartitioned window of the whole input (one task at scale)."""
+    import re
+
+    windows = re.findall(r"Window \[", plan)
+    over_topk = re.findall(r"Window \[[^\n]*\n\s*\+- TakeOrderedAndProject\(limit=(\d+)", plan)
+    assert windows and len(over_topk) == len(windows), plan
+    assert all(int(n) <= k for n in over_topk), plan
+
+
 def test_brute_force_topk_zero_shuffle(spark, emb_df, emb_pdf):
     """Exact single-query top-k is scan → score → TakeOrdered: no
     hash-partitioned Exchange anywhere (the post-limit rank window
-    sorts <= k rows, not the corpus)."""
-    import re
+    sorts <= k rows, not the corpus). The other global top-k users —
+    quant_knn and the emb_top_pairs / top_terms catalog queries — rank
+    only their TakeOrderedAndProject survivors too."""
+    from pathlib import Path
+
+    from fte.operators.similarity import quant_knn, quantize_embeddings
+    from fte.queries_ml import q_emb_top_pairs, q_top_terms
+
+    def plan_of(df):
+        return df._jdf.queryExecution().executedPlan().toString()
 
     q = emb_pdf["embedding"].iloc[0]
-    plan = brute_force_topk(emb_df, q, k=5)._jdf.queryExecution().executedPlan().toString()
-    assert not re.findall(r"Exchange hashpartitioning", plan), plan
+    plan = plan_of(brute_force_topk(emb_df, q, k=5))
+    assert "Exchange hashpartitioning" not in plan, plan
+    _assert_rank_over_topk_only(plan, 5)
+    _bounds, quant = quantize_embeddings(emb_df)
+    _assert_rank_over_topk_only(
+        plan_of(quant_knn(quant, quant.where("id = 0").select("i", "q"), k=10)), 10
+    )
+    sf_dir = "/root/testdata/sf0.001"
+    if not Path(sf_dir).exists():
+        pytest.skip("driver testdata not present")
+    _assert_rank_over_topk_only(plan_of(q_emb_top_pairs(spark, sf_dir)), 20)
+    _assert_rank_over_topk_only(plan_of(q_top_terms(spark, sf_dir)), 50)
 
 
 def test_embedding_dup_pairs_multi_table(spark, emb_df):
@@ -266,15 +296,15 @@ def test_ivf_kmeans_driver_traffic_is_per_cell(spark, emb_df):
     at 2^16 cells x 1024 dims the per-component shape is ~67M driver
     rows per iteration. Also checks each packed array is exactly dim
     long and dim-ordered (mean of a single known cell)."""
-    from fte.operators.similarity import _ivf_assign, _kmeans_cell_means
+    from fte.operators.similarity import _ivf_assign, mean_pool_embeddings
 
     dim = len(emb_df.select("embedding").first()[0])
     C = np.eye(5, dim)[:5]
     assigned = _ivf_assign(emb_df, C)
-    rows = _kmeans_cell_means(assigned, "embedding")
+    rows = mean_pool_embeddings(assigned, "ivf_cell").collect()
     n_cells_used = assigned.select("ivf_cell").distinct().count()
     assert len(rows) == n_cells_used  # one row per non-empty cell
-    got = {r["ivf_cell"]: np.asarray(r["_ms"]) for r in rows}
+    got = {r["ivf_cell"]: np.asarray(r["pooled"]) for r in rows}
     pdf = assigned.select("ivf_cell", "embedding").toPandas()
     for cell, ms in got.items():
         assert ms.shape == (dim,)
@@ -377,3 +407,88 @@ def test_knn_join_empty_query_set_returns_empty(spark, emb_df):
     assigned, C = ivf_build(emb_df, n_cells=10)
     out2 = ivf_knn_join(assigned, C, queries, k=5)
     assert out2.count() == 0
+
+
+def test_ann_single_query_with_every_candidate_is_brute_force(spark, emb_df, emb_pdf):
+    """lsh_topk and ivf_topk only filter candidates before the one
+    exact scorer: admitting every candidate (max_hamming = n_bits,
+    nprobe = n_cells) gives brute_force_topk's ids, ranks and scores."""
+    q = emb_pdf["embedding"].iloc[3]
+    exact = brute_force_topk(emb_df, q, k=10).toPandas().sort_values("rank")
+    assigned, C = ivf_build(emb_df, n_cells=10)
+    for name, df in {
+        "lsh": lsh_topk(emb_df, q, k=10, n_bits=12, max_hamming=12),
+        "ivf": ivf_topk(assigned, C, q, k=10, nprobe=10),
+    }.items():
+        got = df.toPandas().sort_values("rank")
+        assert got["vec_id"].tolist() == exact["vec_id"].tolist(), name
+        assert got["rank"].tolist() == list(range(1, 11)), name
+        np.testing.assert_allclose(got["cos_sim"], exact["cos_sim"], rtol=1e-12, err_msg=name)
+
+
+def test_zero_norm_vector_scores_null_on_every_path(spark):
+    """A zero vector's cosine is NULL and ranks after every score on
+    every path (DuckDB's x / 0.0 is NULL too). knn_join used to score it
+    0.0, above a -1.0 row, and knn_join_hof raised DIVIDE_BY_ZERO
+    under ANSI."""
+    from fte.operators.similarity import ivf_knn_join, knn_join_hof
+
+    vecs = [[1.0, 0.0, 0.0], [0.0, 0.0, 0.0], [-1.0, 0.0, 0.0],
+            [0.0, 1.0, 0.0], [0.5, 0.5, 0.0], [0.9, 0.1, 0.0]]
+    corpus = spark.createDataFrame(
+        pd.DataFrame({"vec_id": range(6), "embedding": vecs}),
+        "vec_id long, embedding array<float>",
+    )
+    q = [1.0, 0.0, 0.0]
+    queries = spark.createDataFrame([(0, q)], "query_id long, embedding array<float>")
+    assigned, C = ivf_build(corpus, n_cells=3)
+    paths = {
+        "brute_force": brute_force_topk(corpus, q, k=6),
+        "lsh": lsh_topk(corpus, q, k=6, n_bits=8, max_hamming=8),
+        "ivf": ivf_topk(assigned, C, q, k=6, nprobe=3),
+        "knn_join": knn_join(corpus, queries, k=6),
+        "ivf_knn_join": ivf_knn_join(assigned, C, queries, k=6, nprobe=3),
+        "knn_join_hof": knn_join_hof(corpus, queries, k=6),
+    }
+    got = {
+        name: df.select("vec_id", "rank", "cos_sim").orderBy("rank").collect()
+        for name, df in paths.items()
+    }
+    ref = [r["cos_sim"] for r in got["brute_force"]]
+    for name, rows in got.items():
+        assert [(r["vec_id"], r["rank"]) for r in rows] == [
+            (0, 1), (5, 2), (4, 3), (3, 4), (2, 5), (1, 6)
+        ], name
+        sims = [r["cos_sim"] for r in rows]
+        assert sims[-1] is None, name
+        np.testing.assert_allclose(sims[:-1], ref[:-1], rtol=1e-9, atol=1e-12, err_msg=name)
+    assert ref[-2] == pytest.approx(-1.0)
+
+
+def test_rh_signature_n_bits_out_of_range_raises(spark, emb_df):
+    """A signature is a positive long: n_bits outside 1..63 raises
+    ValueError (not an assert, which ``python -O`` strips)."""
+    from fte.operators.similarity import with_rh_signature
+
+    for bad in (0, 64):
+        with pytest.raises(ValueError, match="n_bits"):
+            with_rh_signature(emb_df, n_bits=bad)
+
+
+def test_ivf_kmeans_ragged_pooled_vector_raises(spark, emb_df, monkeypatch):
+    """A cell whose pooled mean is not centroid-wide raises ValueError
+    (not an assert). Real ragged input already fails in the assignment
+    GEMM, so the pooling is narrowed to three components here."""
+    from pyspark.sql import functions as F
+
+    import fte.operators.similarity as sim
+
+    pool = sim.mean_pool_embeddings
+    monkeypatch.setattr(
+        sim, "mean_pool_embeddings",
+        lambda df, group_col, vec_col: pool(df, group_col, vec_col).withColumn(
+            "pooled", F.slice("pooled", 1, 3)
+        ),
+    )
+    with pytest.raises(ValueError, match="ragged"):
+        sim.ivf_build_kmeans(emb_df, n_cells=5, iters=1)
