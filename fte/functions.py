@@ -1,7 +1,9 @@
 """Helper expressions shared across operators and the catalog.
 
-Pure JVM Column expressions (SURVEY.md §2.B scalar functions), plus
-``top_k``, the one global top-k with a rank column.
+Pure JVM Column expressions (SURVEY.md §2.B scalar functions): the
+epoch converters, ``norm_text`` (the one text normalizer) and
+``words`` (the one tokenizer), plus ``top_k``, the one global top-k
+with a rank column.
 """
 
 from __future__ import annotations
@@ -36,6 +38,15 @@ def norm_text(col: Column | str) -> Column:
     'g'))``."""
     c = F.col(col) if isinstance(col, str) else col
     return F.lower(F.regexp_replace(F.trim(c), r"\s+", " "))
+
+
+def words(col: Column | str) -> Column:
+    """The words of a text: ``norm_text`` split on its single spaces —
+    the one definition of a word behind shingles, n-grams, chunks,
+    segments, BM25, simhash and the term statistics. An empty (or
+    all-whitespace) text yields one ``""`` token; only
+    ``feature_hash_rows`` and ``q_top_terms`` drop it."""
+    return F.split(norm_text(col), " ")
 
 
 def top_k(df: DataFrame, order_cols, k: int, rank_col: str = "rank") -> DataFrame:

@@ -32,8 +32,8 @@ import warnings
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from fte.functions import norm_text
-from fte.operators.text import with_fingerprint
+from fte.functions import words
+from fte.operators.text import _word_grams, chunk_documents, with_fingerprint
 
 
 # ------------------------------------------------------------- exact
@@ -52,42 +52,17 @@ def shingle_rows(
     distinct: bool = True, hashed: bool = True,
 ) -> DataFrame:
     """Exploded (id, shingle_hash) rows — the engine's canonical
-    shingle form.
-
-    Grams come straight off the per-doc words array: ``sequence`` of
-    gram starts → ``posexplode`` → ``slice`` + ``array_join`` — every
-    step whole-stage codegen, NO interpreted higher-order lambdas
-    (~100 µs/element, the round-1 40× trap) and, unlike the previous
-    k-chained-``lead`` window formulation, NO shuffle at all: shingling
-    100 TB is one pass over the scan, and the downstream consumer
-    (minhash aggregate / LSH distinct / decontamination semi-join)
-    introduces the only exchange. The lead-window version also
-    serialized on small inputs (one 3.6 s task at sf0.1 — 12 window
-    expressions per row); this form is ~7× faster there and
-    embarrassingly parallel at any scale. Docs shorter than k words
-    fall back to one whole-text gram.
+    shingle form: the word k-grams of ``fte.operators.text._word_grams``
+    (scan-side codegen, no shuffle; the downstream consumer — minhash
+    aggregate, LSH distinct, decontamination semi-join — introduces the
+    only exchange). Docs shorter than k words fall back to one
+    whole-text gram.
 
     ``hashed=False`` emits the raw gram STRING instead of its xxhash64
     (for SQL-oracle-checked consumers — xxhash64 is Spark-only; the
     scale path stays hashed: 8-byte keys instead of ~100-byte grams).
     """
-    words = F.split(norm_text(text_col), " ")
-    base = df.select(
-        F.col(id_col),
-        words.alias("_ws"),
-        F.size(words).alias("_n"),
-    ).select(
-        id_col,
-        "_ws",
-        "_n",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(F.col("_n") - k, F.lit(0)))
-        ).alias("_i"),
-    )
-    gram = F.when(
-        F.col("_n") >= k,
-        F.array_join(F.slice("_ws", F.col("_i") + 1, k), " "),
-    ).otherwise(F.array_join("_ws", " "))
+    base, gram = _word_grams(df, id_col, text_col, k)
     grams = base.select(
         id_col,
         (F.xxhash64(gram) if hashed else gram).alias("shingle"),
@@ -394,8 +369,7 @@ def simhash_table(
     map-side partials) rather than per-element HOF folds — same reason
     as minhash_signatures. One shuffle on id_col.
     """
-    words = F.split(norm_text(text_col), " ")
-    ex = df.select(F.col(id_col), F.explode(words).alias("_w")).select(
+    ex = df.select(F.col(id_col), F.explode(words(text_col)).alias("_w")).select(
         id_col, F.xxhash64("_w").alias("_h")
     )
 
@@ -572,9 +546,9 @@ def segment_rows(
     """Non-overlapping ``seg_words``-word segments per doc — the
     unit for within-corpus segment dedup (the C4/CCNet line- and
     paragraph-level rule, re-expressed for text without line
-    structure). Same zero-shuffle construction as shingle_rows:
-    sequence of starts → posexplode → slice + array_join, all
-    whole-stage codegen; segmenting 100 TB is one pass over the scan.
+    structure): the chunks of ``chunk_documents`` with chunk = stride
+    = ``seg_words``, keyed. Zero shuffles; segmenting 100 TB is one
+    pass over the scan.
 
     Output: (id_col, seg_idx, n_seg_words, segment) where ``segment``
     is the xxhash64 of the normalized segment text (``hashed=True``,
@@ -588,23 +562,7 @@ def segment_rows(
     (~10^-18 at 10^10 keys). 64 stays the default for the small/bench
     path (half the shuffle-key bytes).
     """
-    words = F.split(norm_text(text_col), " ")
-    base = df.select(
-        F.col(id_col),
-        words.alias("_ws"),
-        F.size(words).alias("_n"),
-    ).select(
-        id_col, "_ws", "_n",
-        F.posexplode(
-            F.sequence(
-                F.lit(0),
-                F.greatest((F.col("_n") - 1) / F.lit(seg_words), F.lit(0)).cast("int"),
-            )
-        ).alias("seg_idx", "_s"),
-    )
-    seg_text = F.array_join(
-        F.slice("_ws", F.col("_s") * seg_words + 1, seg_words), " "
-    )
+    seg_text = F.col("chunk")
     if not hashed:
         seg_key = seg_text
     elif key_bits == 128:
@@ -616,12 +574,10 @@ def segment_rows(
         seg_key = F.xxhash64(seg_text)
     else:
         raise ValueError(f"key_bits must be 64 or 128, got {key_bits}")
-    return base.select(
+    return chunk_documents(df, id_col, text_col, seg_words, seg_words).select(
         id_col,
-        F.col("seg_idx").cast("long").alias("seg_idx"),
-        F.least(F.lit(seg_words), F.col("_n") - F.col("_s") * seg_words)
-        .cast("long")
-        .alias("n_seg_words"),
+        F.col("chunk_idx").alias("seg_idx"),
+        F.col("n_chunk_words").alias("n_seg_words"),
         seg_key.alias("segment"),
     )
 
@@ -669,7 +625,7 @@ def segment_dedup(
     seg_text = segment_rows(df, id_col, text_col, seg_words, hashed=False)
     # per-doc segment count straight off the scan (no explode/shuffle):
     # ceil(n_words / seg_words), min 1 — matches segment_rows' sequence
-    n_words = F.size(F.split(norm_text(text_col), " "))
+    n_words = F.size(words(text_col))
     totals = df.select(
         F.col(id_col),
         F.greatest(

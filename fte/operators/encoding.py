@@ -35,7 +35,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from fte.functions import norm_text
+from fte.functions import words
 
 
 def target_encode(
@@ -168,9 +168,8 @@ def feature_hash_rows(
     broadcast, no OOV path — the property that makes this the
     vectorizer of choice at 100 TB.
     """
-    norm = norm_text(text_col)
     toks = df.select(
-        F.col(id_col), F.explode(F.split(norm, " ")).alias("_tok")
+        F.col(id_col), F.explode(words(text_col)).alias("_tok")
     ).filter(F.col("_tok") != "")
     h = F.md5(F.concat(F.col("_tok"), F.lit(f"#fh{seed}")))
     bucket = (F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % k).alias("bucket")

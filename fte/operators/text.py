@@ -3,18 +3,25 @@
 All pure JVM whole-stage-codegen expressions (regexp_count /
 regexp_replace / length / xxhash64) — no Python, and no interpreted
 higher-order-function lambdas in the hot path (per-token HOF filters
-made lang_id the slowest doc query; rewritten as one boundary-anchored
+are ~100 µs/element; language ID is one boundary-anchored
 regexp_count per profile). These are the per-document analogs of the
 per-turn text features in fte.features.library, aimed at corpus
 curation at 100 TB: language ID, quality scoring, token counting,
-fingerprinting.
+fingerprinting, repetition filters, chunking and BM25 retrieval.
+
+Each text decision has one definition: what a word is
+(``fte.functions.words`` over ``fte.functions.norm_text``), the
+word k-gram generator (``_word_grams``, behind shingles, winnowing
+and the repetition bigrams), the chunker (``chunk_documents``, which
+``segment_rows`` keys) and the BM25 scorer (``_bm25``, behind
+``bm25_scores`` and ``bm25_topk_batch``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from fte.functions import norm_text
+from fte.functions import norm_text, words
 
 # Tiny stopword profiles for an n-gram-free language-ID heuristic:
 # score(lang) = fraction of tokens that are stopwords of that lang.
@@ -42,16 +49,16 @@ def token_count(col: Column | str) -> Column:
     return F.regexp_count(c, F.lit(r"\S+")).cast("long")
 
 
-def _stopword_hits(c: Column, words: tuple[str, ...]) -> Column:
+def _stopword_hits(c: Column, stops: tuple[str, ...]) -> Column:
     """Count of whitespace tokens (case-folded) equal to any of
-    ``words``: one codegen regexp_count with whitespace-boundary
+    ``stops``: one codegen regexp_count with whitespace-boundary
     lookarounds — exactly size(filter(toks, w -> w IN words)) without
     the interpreted per-token lambda (~100µs/element; lang_id was the
     slowest doc query before this rewrite). Words must be regex-safe
     (alphabetic); boundaries are (?<=^|\\s)/(?=\\s|$), the same \\s
     class whitespace tokenization splits on, so a match is a FULL
     token."""
-    pat = r"(?<=^|\s)(" + "|".join(words) + r")(?=\s|$)"
+    pat = r"(?<=^|\s)(" + "|".join(stops) + r")(?=\s|$)"
     return F.regexp_count(F.lower(c), F.lit(pat))
 
 
@@ -65,8 +72,8 @@ def lang_scores(col: Column | str) -> dict[str, Column]:
     c = F.col(col) if isinstance(col, str) else col
     n_tok = token_count(c)
     out = {}
-    for lang, words in LANG_PROFILES.items():
-        hits = _stopword_hits(c, words)
+    for lang, stops in LANG_PROFILES.items():
+        hits = _stopword_hits(c, stops)
         out[lang] = (hits / F.greatest(n_tok, F.lit(1))).cast("double")
     return out
 
@@ -79,9 +86,10 @@ def with_lang_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pre
         *[F.struct(s.alias("score"), F.lit(l).alias("lang")) for l, s in scores.items()]
     )
     best = F.array_max(pairs)
-    return df.withColumn(
-        out_col, F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
-    ).withColumn("lang_score", best["score"])
+    return df.withColumns({
+        out_col: F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und")),
+        "lang_score": best["score"],
+    })
 
 
 def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -107,15 +115,15 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
         + F.when(stop_ratio >= 0.05, F.lit(0.25)).otherwise(F.lit(0.0))
         + F.when((punct_ratio <= 0.2) & (upper_ratio <= 0.3) & (digit_ratio <= 0.3), F.lit(0.25)).otherwise(F.lit(0.0))
     )
-    return (
-        df.withColumn("n_tokens", n_tok.cast("long"))
-        .withColumn("mean_word_len", mean_word_len.cast("double"))
-        .withColumn("stopword_ratio", stop_ratio.cast("double"))
-        .withColumn("punct_ratio", punct_ratio.cast("double"))
-        .withColumn("upper_ratio", upper_ratio.cast("double"))
-        .withColumn("digit_ratio", digit_ratio.cast("double"))
-        .withColumn("quality_score", score.cast("double"))
-    )
+    return df.withColumns({
+        "n_tokens": n_tok.cast("long"),
+        "mean_word_len": mean_word_len.cast("double"),
+        "stopword_ratio": stop_ratio.cast("double"),
+        "punct_ratio": punct_ratio.cast("double"),
+        "upper_ratio": upper_ratio.cast("double"),
+        "digit_ratio": digit_ratio.cast("double"),
+        "quality_score": score.cast("double"),
+    })
 
 
 def with_fingerprint(df: DataFrame, text_col: str = "text", out_col: str = "fingerprint") -> DataFrame:
@@ -124,6 +132,43 @@ def with_fingerprint(df: DataFrame, text_col: str = "text", out_col: str = "fing
     exact-dedup key at scale (group on 64-bit int, not the raw text)."""
     norm = norm_text(text_col)
     return df.withColumn(out_col, F.xxhash64(norm))
+
+
+def _word_grams(
+    df: DataFrame, id_col: str, text_col: str, k: int
+) -> tuple[DataFrame, Column]:
+    """Every k-word gram of every doc: a frame with one row per gram
+    start ``_i`` (0-based; columns id_col, _ws, _n, _i, where ``_n`` is
+    the doc's word count) and the gram Column over it. Docs shorter
+    than k words have one whole-text gram at ``_i`` = 0. The caller
+    projects and names the gram, so each plan keeps its own column
+    names.
+
+    Grams come straight off the per-doc words array: ``sequence`` of
+    gram starts → ``explode`` → ``slice`` + ``array_join``. Every step
+    is whole-stage codegen, with no interpreted higher-order lambda and
+    no shuffle: generating grams over 100 TB is one pass over the scan,
+    and the consumer (an aggregate, a window, a join) adds the only
+    exchange.
+    """
+    ws = words(text_col)
+    base = df.select(
+        F.col(id_col),
+        ws.alias("_ws"),
+        F.size(ws).alias("_n"),
+    ).select(
+        id_col,
+        "_ws",
+        "_n",
+        F.explode(
+            F.sequence(F.lit(0), F.greatest(F.col("_n") - k, F.lit(0)))
+        ).alias("_i"),
+    )
+    gram = F.when(
+        F.col("_n") >= k,
+        F.array_join(F.slice("_ws", F.col("_i") + 1, k), " "),
+    ).otherwise(F.array_join("_ws", " "))
+    return base, gram
 
 
 def with_repetition_stats(
@@ -138,18 +183,13 @@ def with_repetition_stats(
     and spam-heavy web text fails these long before perplexity filters
     see it.
 
-    Scale shape: words and bigrams both come straight off the per-doc
-    words array (explode for words; sequence → slice → array_join for
-    bigrams — the shingle_rows pattern), so the gram construction is
-    pure scan-side codegen with ZERO shuffles; the only exchanges are
+    Scale shape: words are exploded off the per-doc words array and
+    bigrams come from ``_word_grams`` (k = 2, docs of ≥ 2 words), so
+    both are scan-side codegen with no shuffle; the only exchanges are
     the map-side-combining hash aggregates on (id, gram). The raw text
-    never leaves the initial projection, and no interpreted per-token
-    lambdas. (A lead-window formulation forced a doc_id sort shuffle
-    before any aggregation — same trap as the old shingle_rows.)
+    never leaves the initial projection.
     """
-    norm = norm_text(text_col)
-    words = F.split(norm, " ")
-    ex = df.select(F.col(id_col), F.explode(words).alias("_w"))
+    ex = df.select(F.col(id_col), F.explode(words(text_col)).alias("_w"))
     word_stats = (
         ex.groupBy(id_col, "_w")
         .agg(F.count(F.lit(1)).alias("_c"))
@@ -160,21 +200,8 @@ def with_repetition_stats(
             F.max("_c").cast("long").alias("top_word_count"),
         )
     )
-    bg = df.select(
-        F.col(id_col),
-        words.alias("_ws"),
-        F.size(words).alias("_n"),
-    ).select(
-        id_col,
-        F.explode(
-            F.when(
-                F.col("_n") >= 2, F.sequence(F.lit(0), F.col("_n") - 2)
-            ).otherwise(F.array().cast("array<int>"))
-        ).alias("_i"),
-        "_ws",
-    ).select(
-        id_col, F.array_join(F.slice("_ws", F.col("_i") + 1, 2), " ").alias("_bg")
-    )
+    base, gram = _word_grams(df, id_col, text_col, 2)
+    bg = base.filter(F.col("_n") >= 2).select(id_col, gram.alias("_bg"))
     bigram_stats = bg.groupBy(id_col).agg(
         F.count_distinct(F.col("_bg")).cast("long").alias("n_distinct_bigrams"),
         F.count(F.col("_bg")).cast("long").alias("n_bigrams"),
@@ -224,13 +251,14 @@ def redact_pii(
     runs at parquet-scan speed and composes with the curation funnel.
     """
     c = F.col(text_col)
-    out = df
     red = c
-    for name, pat, _ in PII_PATTERNS:
-        out = out.withColumn(f"n_{name}s", F.regexp_count(c, F.lit(pat)).cast("long"))
     for _, pat, token in PII_PATTERNS:
         red = F.regexp_replace(red, pat, token)
-    return out.withColumn(out_col, red)
+    return df.withColumns({
+        **{f"n_{name}s": F.regexp_count(c, F.lit(pat)).cast("long")
+           for name, pat, _ in PII_PATTERNS},
+        out_col: red,
+    })
 
 
 def chunk_documents(
@@ -251,16 +279,15 @@ def chunk_documents(
 
     Output: (id_col, chunk_idx, n_chunk_words, chunk).
     """
-    norm = norm_text(text_col)
-    words = F.split(norm, " ")
+    ws = words(text_col)
     last_start = F.greatest(
         F.least(F.col("_n") - 1, F.col("_n") - chunk_words + stride - 1),
         F.lit(0),
     )
     base = df.select(
         F.col(id_col),
-        words.alias("_ws"),
-        F.size(words).alias("_n"),
+        ws.alias("_ws"),
+        F.size(ws).alias("_n"),
     ).select(
         id_col, "_ws", "_n",
         F.posexplode(
@@ -277,31 +304,55 @@ def chunk_documents(
     )
 
 
-def bm25_scores(
-    df: DataFrame, terms: tuple[str, ...], id_col: str = "doc_id",
-    text_col: str = "text", k1: float = 1.2, b: float = 0.75,
+def _bm25(
+    df: DataFrame, queries: dict[int, tuple[str, ...]], id_col: str,
+    text_col: str, k1: float, b: float,
 ) -> DataFrame:
-    """BM25 (Robertson/Sparck Jones, public) document scores for a
-    fixed bag of query terms. Corpus statistics (per-doc length, per-
-    term document frequency, N, avgdl) come from one explode + hash
-    aggregates; df/avgdl are broadcast (a handful of rows). The final
-    score is a FIXED-ORDER sum of per-term contributions (one conditional
-    aggregate per term) so a SQL oracle reproduces the float bit-for-bit
-    — a SUM over an arbitrary-order group differs in the last ulp.
+    """BM25 (Robertson/Sparck Jones, public) scores of every doc against
+    every query of a (query_id → term bag) batch: the one scorer behind
+    ``bm25_scores`` and ``bm25_topk_batch``.
 
-    At 100 TB the doc-length and df tables would be precomputed once
-    and reused across queries; the declarative form here lets Catalyst
-    reuse the exploded exchange within one plan.
+    Term rule: a repeated term counts once (first occurrence wins) and
+    a query with no terms drops out; an empty batch returns an empty
+    frame of the output schema.
 
-    Output: (id_col, n_words, n_hit_terms, bm25) for docs hitting ≥ 1
-    term.
+    Corpus statistics (per-doc length, per-(query, term) document
+    frequency, N, avgdl) come from one explode + hash aggregates; the
+    query table (query_id, term) and the df/avgdl rows are broadcast.
+    The per-(query, doc) score is a FIXED-ORDER sum over the term index
+    (one conditional aggregate per index, summed s0+s1+...), so a SQL
+    oracle reproduces the float bit-for-bit — a SUM over an
+    arbitrary-order group differs in the last ulp, and a rank flip at a
+    rounding boundary would make the oracle flaky.
+
+    Output: (query_id, id_col, n_words, n_hit_terms, bm25) for every
+    (query, doc) pair hitting ≥ 1 term.
     """
-    norm = norm_text(text_col)
-    tok = df.select(F.col(id_col), F.explode(F.split(norm, " ")).alias("_w"))
-    # r6: the per-doc-length aggregate is consumed by BOTH the corpus
-    # stats and the final score join; checkpoint it once (same
-    # intra-plan-reuse pattern as the minhash verify aggregate) so one
-    # action explodes the corpus for dl once, not per consumer.
+    spark = df.sparkSession
+    queries = {
+        q: tuple(dict.fromkeys(terms))
+        for q, terms in queries.items()
+        if terms
+    }
+    if not queries:
+        id_type = df.schema[id_col].dataType.simpleString()
+        return spark.createDataFrame(
+            [],
+            f"query_id int, {id_col} {id_type}, n_words long, "
+            "n_hit_terms long, bm25 double",
+        )
+    qrows = [
+        (int(q), t, i)
+        for q, terms in queries.items()
+        for i, t in enumerate(terms)
+    ]
+    qdf = spark.createDataFrame(qrows, "query_id int, _w string, _ti int")
+    max_terms = max(len(terms) for terms in queries.values())
+
+    tok = df.select(F.col(id_col), F.explode(words(text_col)).alias("_w"))
+    # the per-doc-length aggregate is consumed by BOTH the corpus stats
+    # and the score join; checkpoint it once so one action explodes the
+    # corpus for dl once, not per consumer
     dl = tok.groupBy(id_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_words")
     ).localCheckpoint(eager=False)
@@ -309,14 +360,18 @@ def bm25_scores(
         F.count(F.lit(1)).cast("double").alias("_n_docs"),
         F.avg(F.col("n_words").cast("double")).alias("_avgdl"),
     )
+    # hits per (query, doc, term): broadcast the query-term table onto
+    # the token stream, then count
     tf = (
-        tok.filter(F.col("_w").isin(*terms))
-        .groupBy(id_col, "_w")
+        tok.join(F.broadcast(qdf), "_w")
+        .groupBy("query_id", id_col, "_w", "_ti")
         .agg(F.count(F.lit(1)).cast("double").alias("_tf"))
     )
-    dfreq = tf.groupBy("_w").agg(F.count(F.lit(1)).cast("double").alias("_df"))
+    dfreq = tf.groupBy("query_id", "_w").agg(
+        F.count(F.lit(1)).cast("double").alias("_df")
+    )
     j = (
-        tf.join(F.broadcast(dfreq), "_w")
+        tf.join(F.broadcast(dfreq), ["query_id", "_w"])
         .join(dl, id_col)
         .crossJoin(F.broadcast(stats))
     )
@@ -327,22 +382,43 @@ def bm25_scores(
     denom = F.col("_tf") + F.lit(k1) * (
         F.lit(1.0) - F.lit(b) + F.lit(b) * F.col("n_words") / F.col("_avgdl")
     )
-    j = j.withColumn("_score", idf * F.col("_tf") * F.lit(k1 + 1.0) / denom)
     per_term = [
-        F.max(F.when(F.col("_w") == t, F.col("_score"))).alias(f"_s{i}")
-        for i, t in enumerate(terms)
+        F.max(F.when(F.col("_ti") == i, F.col("_s"))).alias(f"_s{i}")
+        for i in range(max_terms)
     ]
-    agg = j.groupBy(id_col).agg(
-        # n_words is constant per doc: carrying it through the agg
-        # avoids a second join against (and recompute of) the dl subtree
-        F.max("n_words").alias("n_words"),
-        F.count(F.lit(1)).cast("long").alias("n_hit_terms"),
-        *per_term,
+    agg = (
+        j.withColumn("_s", idf * F.col("_tf") * F.lit(k1 + 1.0) / denom)
+        .groupBy("query_id", id_col)
+        .agg(
+            # n_words is constant per doc: carrying it through the agg
+            # avoids a second join against the dl subtree
+            F.max("n_words").alias("n_words"),
+            F.count(F.lit(1)).cast("long").alias("n_hit_terms"),
+            *per_term,
+        )
     )
     total = F.coalesce(F.col("_s0"), F.lit(0.0))
-    for i in range(1, len(terms)):
+    for i in range(1, max_terms):
         total = total + F.coalesce(F.col(f"_s{i}"), F.lit(0.0))
-    return agg.select(id_col, "n_words", "n_hit_terms", total.alias("bm25"))
+    return agg.select("query_id", id_col, "n_words", "n_hit_terms", total.alias("bm25"))
+
+
+def bm25_scores(
+    df: DataFrame, terms: tuple[str, ...], id_col: str = "doc_id",
+    text_col: str = "text", k1: float = 1.2, b: float = 0.75,
+) -> DataFrame:
+    """BM25 document scores for one fixed bag of query terms: ``_bm25``
+    over a one-query batch (same term rule: a repeated term counts
+    once, an empty bag gives an empty frame).
+
+    At 100 TB the doc-length and df tables would be precomputed once
+    and reused across queries; the declarative form here lets Catalyst
+    reuse the exploded exchange within one plan.
+
+    Output: (id_col, n_words, n_hit_terms, bm25) for docs hitting ≥ 1
+    term.
+    """
+    return _bm25(df, {0: terms}, id_col, text_col, k1, b).drop("query_id")
 
 
 def unigram_logprob_scores(
@@ -364,8 +440,7 @@ def unigram_logprob_scores(
 
     Output: (id_col, n_words, xent) — lower xent = more corpus-typical.
     """
-    norm = norm_text(text_col)
-    tok = df.select(F.col(id_col), F.explode(F.split(norm, " ")).alias("_w"))
+    tok = df.select(F.col(id_col), F.explode(words(text_col)).alias("_w"))
     # r6: the vocab aggregate is consumed twice (totals + the
     # broadcast back onto the token stream); checkpoint it once so a
     # single action explodes the corpus for vocab once, not per
@@ -403,50 +478,30 @@ def winnow_fingerprints(
     two docs shares at least one selected fingerprint, while storing
     only ~1/window of the grams.
 
-    All whole-stage codegen: posexplode + lead-window grams (the
-    shingle machinery) + a trailing MIN window + distinct — one shuffle
-    on id_col. Hashes are md5 hex strings so a SQL oracle can reproduce
-    them exactly (xxhash64 is Spark-only); swap to xxhash64 for
-    production compactness. Docs with fewer than ``window`` grams emit
-    the min over all their grams (the last gram's trailing window).
+    The grams are ``_word_grams`` (scan-side codegen, no shuffle),
+    each hashed with md5; one trailing MIN window over the gram start
+    selects the fingerprints, then a distinct — one shuffle on id_col.
+    Hashes are md5 hex strings so a SQL oracle can reproduce them
+    exactly (xxhash64 is Spark-only); swap to xxhash64 for production
+    compactness. A doc shorter than k words has one whole-text gram,
+    and a doc with fewer than ``window`` grams emits the min over all
+    its grams (the last gram's trailing window).
 
     Output: (id_col, fp string) distinct rows.
     """
-    from pyspark.sql import Window
-
-    norm = norm_text(text_col)
-    words = F.split(norm, " ")
-    # _nt only feeds the short-doc fallback; null it out for docs with
-    # >= k words so the exploded rows don't ship the whole text per
-    # word through the window shuffle (O(doc_len x n_words) bytes)
-    ex = df.select(
-        F.col(id_col),
-        F.when(F.size(words) < F.lit(k), norm).alias("_nt"),
-        F.size(words).alias("_n"),
-        F.posexplode(words).alias("_pos", "_w"),
+    base, gram = _word_grams(df, id_col, text_col, k)
+    grams = base.select(
+        id_col,
+        "_i",
+        F.greatest(F.col("_n") - k + 1, F.lit(1)).alias("_ngrams"),
+        F.md5(gram).alias("_gh"),
     )
-    w = Window.partitionBy(id_col).orderBy("_pos")
-    gram = F.concat_ws(" ", F.col("_w"), *[F.lead("_w", j).over(w) for j in range(1, k)])
-    last = F.lead("_w", k - 1).over(w) if k > 1 else F.col("_w")
-    grams = (
-        ex.withColumn("_gram", gram)
-        .withColumn("_last", last)
-        .filter(((F.col("_n") < k) & (F.col("_pos") == 0)) | F.col("_last").isNotNull())
-        .select(
-            id_col,
-            F.col("_pos"),
-            F.greatest(F.col("_n") - k + 1, F.lit(1)).alias("_ngrams"),
-            F.when(F.col("_n") >= k, F.md5(F.col("_gram")))
-            .otherwise(F.md5(F.col("_nt")))
-            .alias("_gh"),
-        )
-    )
-    wmin = Window.partitionBy(id_col).orderBy("_pos").rowsBetween(-(window - 1), 0)
+    wmin = Window.partitionBy(id_col).orderBy("_i").rowsBetween(-(window - 1), 0)
     selected = (
         grams.withColumn("_sel", F.min("_gh").over(wmin))
         # emit one selection per full window; short docs emit the last
         # gram's (all-covering) trailing window
-        .filter((F.col("_pos") >= window - 1) | (F.col("_pos") == F.col("_ngrams") - 1))
+        .filter((F.col("_i") >= window - 1) | (F.col("_i") == F.col("_ngrams") - 1))
         .select(id_col, F.col("_sel").alias("fp"))
     )
     return selected.distinct()
@@ -505,107 +560,22 @@ def bm25_topk_batch(
     n_salts: int = 32,
 ) -> DataFrame:
     """Batch BM25 retrieval: top-k docs for EVERY query in one pass —
-    the retrieval-join shape (mirrors knn_join for embeddings). The
-    query table (query_id, term) is tiny and BROADCAST onto the token
-    stream; corpus statistics (dl, df-per-(query,term), avgdl) are the
-    same one-explode aggregates as bm25_scores; per-query top-k is
-    TWO-PHASE: a (query_id, salt)-partitioned window keeps a local
-    top-k per salt shard, then the final query-partitioned window
-    ranks at most k * n_salts survivors per query. A single hot query
-    term shared by every doc (stopword-ish queries are common) would
-    otherwise funnel the WHOLE corpus through one window partition —
-    the per-query candidate set is not bounded the way LSH buckets
-    are.
+    the retrieval-join shape (mirrors knn_join for embeddings). Scores
+    come from ``_bm25`` (one corpus explode for the whole batch; a
+    repeated term counts once, a termless query drops out, an empty
+    batch gives an empty frame of the output schema).
 
-    Scale: one corpus explode feeds everything; df/avgdl broadcast; the
-    only corpus-sized shuffles are the (doc,term) and doc aggregates.
-    Per-(query, doc) totals are FIXED-ORDER sums over the term index
-    within each query (conditional per-index aggregates summed
-    s0+s1+...), same as bm25_scores — an unordered SUM differs from a
-    SQL oracle in the last ulp, and a rank flip at a rounding boundary
-    would make the oracle flaky (ADVICE r2).
+    Per-query top-k is TWO-PHASE: a (query_id, salt)-partitioned
+    window keeps a local top-k per salt shard, then the final
+    query-partitioned window ranks at most k * n_salts survivors per
+    query. A single hot query term shared by every doc (stopword-ish
+    queries are common) would otherwise funnel the WHOLE corpus
+    through one window partition — the per-query candidate set is not
+    bounded the way LSH buckets are.
+
     Output: (query_id, rank, doc_id, n_hit_terms, bm25).
     """
-    from pyspark.sql import Window
-
-    spark = df.sparkSession
-    # dedupe terms within each query (first occurrence wins): a
-    # repeated term would get two _ti rows -> tf rows doubled -> df
-    # per (query, term) doubled -> idf corrupted, and the per-index
-    # pivot would sum the term twice. Termless queries drop out.
-    queries = {
-        q: tuple(dict.fromkeys(terms))
-        for q, terms in queries.items()
-        if terms
-    }
-    if not queries:
-        # graceful empty-batch contract (query sets are often driven
-        # by upstream data): empty result, correct schema
-        id_type = df.schema[id_col].dataType.simpleString()
-        return spark.createDataFrame(
-            [],
-            f"query_id int, rank long, {id_col} {id_type}, "
-            "n_hit_terms long, bm25 double",
-        )
-    qrows = [
-        (int(q), t, i)
-        for q, terms in queries.items()
-        for i, t in enumerate(terms)
-    ]
-    qdf = spark.createDataFrame(qrows, "query_id int, _w string, _ti int")
-    max_terms = max(len(terms) for terms in queries.values())
-
-    norm = norm_text(text_col)
-    tok = df.select(F.col(id_col), F.explode(F.split(norm, " ")).alias("_w"))
-    # r6: the per-doc-length aggregate is consumed by BOTH the corpus
-    # stats and the final score join; checkpoint it once (same
-    # intra-plan-reuse pattern as the minhash verify aggregate) so one
-    # action explodes the corpus for dl once, not per consumer.
-    dl = tok.groupBy(id_col).agg(
-        F.count(F.lit(1)).cast("long").alias("n_words")
-    ).localCheckpoint(eager=False)
-    stats = dl.agg(
-        F.count(F.lit(1)).cast("double").alias("_n_docs"),
-        F.avg(F.col("n_words").cast("double")).alias("_avgdl"),
-    )
-    # hits per (query, doc, term): broadcast the query-term table onto
-    # the token stream, then count
-    tf = (
-        tok.join(F.broadcast(qdf), "_w")
-        .groupBy("query_id", id_col, "_w", "_ti")
-        .agg(F.count(F.lit(1)).cast("double").alias("_tf"))
-    )
-    dfreq = tf.groupBy("query_id", "_w").agg(
-        F.count(F.lit(1)).cast("double").alias("_df")
-    )
-    j = (
-        tf.join(F.broadcast(dfreq), ["query_id", "_w"])
-        .join(dl, id_col)
-        .crossJoin(F.broadcast(stats))
-    )
-    idf = F.log(
-        (F.col("_n_docs") - F.col("_df") + F.lit(0.5)) / (F.col("_df") + F.lit(0.5))
-        + F.lit(1.0)
-    )
-    denom = F.col("_tf") + F.lit(k1) * (
-        F.lit(1.0) - F.lit(b) + F.lit(b) * F.col("n_words") / F.col("_avgdl")
-    )
-    per_term = [
-        F.max(F.when(F.col("_ti") == i, F.col("_s"))).alias(f"_s{i}")
-        for i in range(max_terms)
-    ]
-    agg = (
-        j.withColumn("_s", idf * F.col("_tf") * F.lit(k1 + 1.0) / denom)
-        .groupBy("query_id", id_col)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_hit_terms"),
-            *per_term,
-        )
-    )
-    total = F.coalesce(F.col("_s0"), F.lit(0.0))
-    for i in range(1, max_terms):
-        total = total + F.coalesce(F.col(f"_s{i}"), F.lit(0.0))
-    scored = agg.withColumn("bm25", total)
+    scored = _bm25(df, queries, id_col, text_col, k1, b)
     order = [F.desc("bm25"), F.asc(id_col)]
     # phase 1: local top-k within (query, salt) — bounds any one
     # window partition at ~n_candidates / n_salts rows

@@ -51,7 +51,12 @@ def q_range_join(spark, sf_dir):
     count (empty frame → 0, same-instant rows excluded on both
     formulations, µs is the storage precision so no aliasing). One
     user_id Exchange total, no pair explosion; bit-identical integer
-    output."""
+    output.
+
+    The frame counts ``ts``, not rows: the RANGE frame of a NULL order
+    key is the whole NULL-ts group, and a NULL ts never satisfies the
+    join predicate, so a NULL-ts purchase counts 0 and a NULL-ts event
+    counts for no purchase (COUNT(e.ts) in the SQL form)."""
     from fte.functions import epoch_micros
 
     ev = _t(spark, sf_dir, "events")
@@ -61,7 +66,7 @@ def q_range_join(spark, sf_dir):
         .rangeBetween(-600_000_000, -1)
     )
     return (
-        ev.withColumn("_n", F.count(F.lit(1)).over(w))
+        ev.withColumn("_n", F.count("ts").over(w))
         .filter("event_type = 'purchase'")
         .select(
             F.col("event_id").alias("purchase_id"),

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from fte.functions import norm_text, top_k
+from fte.functions import norm_text, top_k, words
 from fte.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs, simhash_pairs
 from fte.operators.similarity import (
     brute_force_topk,
@@ -474,8 +474,8 @@ def q_lang_id(spark, sf_dir):
 
 def _sql_lang_id() -> str:
     score_exprs = []
-    for lang, words in LANG_PROFILES.items():
-        lst = "[" + ",".join(f"'{w}'" for w in words) + "]"
+    for lang, stops in LANG_PROFILES.items():
+        lst = "[" + ",".join(f"'{w}'" for w in stops) + "]"
         score_exprs.append(
             f"CAST(len(list_filter(toks, w -> list_contains({lst}, w))) AS DOUBLE)"
             f" / GREATEST(len(toks), 1) AS s_{lang}"
@@ -597,19 +597,18 @@ HAVING COUNT(*) >= 3
 
 
 def q_top_terms(spark, sf_dir):
-    """Corpus term statistics: top-50 lowercased whitespace tokens by
+    """Corpus term statistics: top-15 lowercased whitespace tokens by
     total occurrences (ties → lexicographic), with document frequency.
     Explode → two-level hash agg (map-side partials) → global top-k as
     TakeOrderedAndProject; the classic corpus-stats shape that feeds
     stopword lists and TF-IDF vocabularies."""
     d = _t(spark, sf_dir, "documents")
-    words = F.split(norm_text("text"), " ")
-    tok = d.select("doc_id", F.explode(words).alias("term")).filter(F.col("term") != "")
+    tok = d.select("doc_id", F.explode(words("text")).alias("term")).filter(F.col("term") != "")
     counts = tok.groupBy("term").agg(
         F.count("*").alias("n_occurrences"),
         F.countDistinct("doc_id").alias("n_docs"),
     )
-    top = top_k(counts, [F.desc("n_occurrences"), F.asc("term")], 50, "term_rank")
+    top = top_k(counts, [F.desc("n_occurrences"), F.asc("term")], 15, "term_rank")
     return top.withColumn("term_rank", F.col("term_rank").cast("long"))
 
 
@@ -626,7 +625,7 @@ c AS (
 )
 SELECT term, n_occurrences, n_docs,
        CAST(ROW_NUMBER() OVER (ORDER BY n_occurrences DESC, term ASC) AS BIGINT) AS term_rank
-FROM c ORDER BY n_occurrences DESC, term ASC LIMIT 50
+FROM c ORDER BY n_occurrences DESC, term ASC LIMIT 15
 """
 
 

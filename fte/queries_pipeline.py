@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from fte.functions import norm_text
+from fte.functions import words
 from fte.operators.pairs import make_training_pairs, render_conversations
 from fte.scan import read_table as _t
 
@@ -675,10 +675,9 @@ def q_decontaminate(spark, sf_dir):
     from fte.operators.dedup import contaminated_ids
 
     d = _t(spark, sf_dir, "documents")
-    norm_words = F.split(norm_text("text"), " ")
     bench = d.filter(F.col("doc_id") % 25 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.array_join(F.slice(norm_words, 1, 20), " ").alias("text"),
+        F.array_join(F.slice(words("text"), 1, 20), " ").alias("text"),
     )
     bad = contaminated_ids(d, bench, n=13, hashed=False)
     return bad.orderBy("doc_id")

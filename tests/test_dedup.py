@@ -435,6 +435,27 @@ def test_segment_dedup_128bit_key_matches_64(spark):
     assert seg_type == "struct<h1:bigint,h2:bigint>"
 
 
+@pytest.mark.parametrize("seg", [16, 5])
+def test_segment_rows_are_chunks(spark, seg):
+    """Unhashed segments are chunk_documents' chunks with chunk =
+    stride = seg_words, columns renamed: one segment for a short doc,
+    a shorter trailing segment, none past the end."""
+    from fte.operators.dedup import segment_rows
+    from fte.operators.text import chunk_documents
+
+    lengths = (1, 4, 5, 16, 17, 33, 48)
+    df = spark.createDataFrame(
+        [(i, " ".join(f"w{j % 7}" for j in range(n))) for i, n in enumerate(lengths)],
+        "doc_id long, text string",
+    )
+    segs = segment_rows(df, seg_words=seg, hashed=False)
+    chunks = chunk_documents(df, chunk_words=seg, stride=seg).toDF(*segs.columns)
+    assert segs.dtypes == chunks.dtypes
+    assert segs.exceptAll(chunks).count() == 0
+    assert chunks.exceptAll(segs).count() == 0
+    assert segs.count() == sum(-(-n // seg) for n in lengths)
+
+
 def test_segment_rows_rejects_unknown_key_bits(spark, docs_df):
     """key_bits other than 64 or 128 raises ValueError; under
     ``python -O`` the old assert let key_bits=32 return a 64-bit key."""

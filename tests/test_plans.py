@@ -179,6 +179,23 @@ def test_segment_dedup_plan_shape(spark):
     assert re.search(r"Exchange hashpartitioning\(segment#\d+L", plan), plan
 
 
+def test_winnow_plan_single_window(spark):
+    """Winnowing takes its grams from the shared scan-side generator:
+    the only Window operator is the trailing MIN, and no ``lead``
+    window builds grams."""
+    import pandas as pd
+
+    from fte.operators.text import winnow_fingerprints
+
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(20), "text": ["a b c d e f g h"] * 20}),
+        "doc_id long, text string",
+    )
+    plan = _plan(winnow_fingerprints(df, k=3, window=4))
+    assert len(re.findall(r"\bWindow\b", plan)) == 1, plan
+    assert "lead(" not in plan, plan
+
+
 def test_deterministic_shuffle_window_is_partitioned(spark):
     """Global positions must come from a partition-parallel window
     (partitionBy _pid), never an unpartitioned global window."""

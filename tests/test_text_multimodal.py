@@ -135,6 +135,44 @@ def test_winnow_guarantee(spark):
     assert len(by[3]) == 1
 
 
+def _winnow_ref(text: str, k: int, window: int) -> set[str]:
+    """Pure-Python winnowing: md5 of each word k-gram (one whole-text
+    gram when the doc is shorter than k), the min of every full window
+    of ``window`` consecutive grams, or of all grams when there are
+    fewer than ``window``."""
+    import hashlib
+
+    ws = " ".join(text.strip().lower().split()).split(" ")
+    grams = [" ".join(ws[i:i + k]) for i in range(len(ws) - k + 1)] or [" ".join(ws)]
+    hs = [hashlib.md5(g.encode()).hexdigest() for g in grams]
+    if len(hs) < window:
+        return {min(hs)}
+    return {min(hs[i - window + 1:i + 1]) for i in range(window - 1, len(hs))}
+
+
+def test_winnow_matches_python_reference(spark):
+    """Docs shorter than k, with fewer grams than ``window``, and long
+    docs with repeats all select exactly the reference fingerprints."""
+    from fte.operators.text import winnow_fingerprints
+
+    texts = [
+        "solo",
+        "two  Words",
+        "a b c",
+        "a b c d e",
+        "alpha bravo charlie delta echo foxtrot golf hotel india juliet",
+        "x y x y x y x y x y x y",
+        "  The quick\tbrown fox jumps over the lazy dog the quick brown fox  ",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    for k, window in ((3, 4), (2, 3), (4, 2)):
+        fps = winnow_fingerprints(df, k=k, window=window).toPandas()
+        assert len(fps) == len(fps.drop_duplicates())
+        for i, t in enumerate(texts):
+            got = set(fps[fps.doc_id == i]["fp"])
+            assert got == _winnow_ref(t, k, window), (i, k, window)
+
+
 def test_audio_window_plan(spark):
     from fte.operators.multimodal import ASSET_SCHEMA, audio_window_plan, synth_assets_pdf
 

@@ -234,6 +234,20 @@ def test_bm25_matches_closed_form(spark):
     assert out.set_index("doc_id")["n_hit_terms"].to_dict() == {0: 3, 1: 1, 3: 2}
 
 
+def test_bm25_term_rule(spark):
+    """bm25_scores follows the batch path's term rule: a repeated term
+    counts once, and an empty term bag gives an empty typed frame."""
+    docs = _docs(spark, ["spark join window spark", "spark filter scan", "join"])
+
+    def rows(terms):
+        return sorted(map(tuple, bm25_scores(docs, terms).collect()))
+
+    assert rows(("spark", "join", "spark")) == rows(("spark", "join"))
+    empty = bm25_scores(docs, ())
+    assert empty.columns == ["doc_id", "n_words", "n_hit_terms", "bm25"]
+    assert empty.count() == 0
+
+
 # ---------------------------------------------------------------- unigram LM
 
 def test_unigram_xent_flags_atypical_docs(spark):
