@@ -1,41 +1,96 @@
-"""Leakage-safe categorical encoding + quantile binning — the classic
+"""Leakage-safe categorical encoding, scaling and binning — the classic
 feature-engineering transforms FeatureHub users hand-wrote in pandas
-feature functions (running group statistics, discretization), built as
-pure Catalyst windows/aggregates.
+feature functions (FeatureHub ships no encoders: EvaluatorClient
+re-executes arbitrary pandas `[U]`), restated as pure Catalyst
+windows/aggregates.
 
-Reference parity note: FeatureHub itself ships no encoders — users
-compute them inside feature functions (src/featurehub/evaluation/
-client.py::EvaluatorClient re-executes arbitrary pandas `[U]`). These
-operators are the engine-level, point-in-time-correct restatement of
-the two most common such functions.
+Operators: target encoding over strictly PRIOR rows (``target_encode``:
+one window, frame UNBOUNDED PRECEDING → 1 PRECEDING), OTHER folds
+(``oof_target_encode``) or all OTHER rows (``loo_target_encode``);
+``count_encode`` and ``woe_encode``; the scalers ``standardize``,
+``minmax_scale`` and ``robust_scale``; ``quantile_bin`` and the drift
+monitor ``psi_report``; and the vocab-free hashing trick
+``feature_hash_rows`` / ``feature_hash_vectors`` (bucket = hash(token)
+% k with a ±1 sign, Weinberger et al., ICML 2009: one (id, bucket)
+shuffle of 16-byte rows at any corpus size).
 
-Scale shapes:
-- target/count encoding: ONE window over (category) ordered by event
-  time with an UNBOUNDED PRECEDING → 1 PRECEDING frame — strictly
-  prior rows only, so training rows never see their own target
-  (the leakage every naive groupby-mean target encoder commits). One
-  shuffle on the category key; skewed categories are bounded by the
-  running-frame computation being O(1) per row (no per-row rescans).
-- quantile binning: boundaries from ONE aggregate (approx_percentile
-  at scale — t-digest, mergeable, bounded memory; exact percentile
-  for small/oracle runs), broadcast back as a 1-row literal join;
-  bin assignment is a pure projection.
-- feature hashing (the hashing trick): VOCAB-FREE text vectorization —
-  no vocabulary aggregate, no broadcast dictionary, no OOV handling:
-  bucket = hash(token) % k with a ±1 hash sign (Weinberger et al.,
-  ICML 2009). The one text vectorizer whose cost is a single
-  (id, bucket) shuffle of 16-byte rows at ANY corpus size.
-(Per-stratum/stratified sampling already exists as
-fte.operators.sampling.sample_sources — not duplicated here.)
+Each shared decision has one definition:
+- ``_join_back``: per-key statistics join back null-safely on every
+  key — a NULL category is a category, and its rows get their group's
+  statistics (a plain equi-join drops them: NULL != NULL).
+- ``_complement``: "the category without this part" is (Σ_all − Σ_part,
+  n_all − n_part) over ``_target_sums``' DECIMAL(27,6) sums and non-NULL
+  counts, subtracted in DECIMAL, cast to double once and divided once;
+  a NULL sum counts as 0 and the mean is NULL when no row remains. OOF's
+  part is the row's (category, fold) partial, LOO's the row's own
+  target ((0, 0) when it is NULL).
+- ``_with_row``: a 1-row statistics frame (moments, extremes,
+  boundaries, totals) is broadcast onto every row under one projection;
+  the data itself never shuffles.
+- ``_percentile``: exact interpolating percentile (sort-based —
+  small/oracle runs) or approx_percentile (mergeable t-digest, bounded
+  memory) at accuracy 10000.
+Stratified sampling lives in fte.operators.sampling.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from fte.functions import words
+
+_DEC = "decimal(27,6)"
+
+
+def _join_back(df: DataFrame, stats: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """``df`` with the per-key ``stats`` on every row (null-safe on
+    every key), without the stats' key copies. A left join: every row
+    has its match anyway, and it keeps the rows from being picked as the
+    broadcast side when their size estimate undercuts the stats'."""
+    copies = [f"_cat{i or ''}" for i in range(len(keys))]
+    stats = stats.select(
+        *[F.col(k).alias(c) for k, c in zip(keys, copies)],
+        *[c for c in stats.columns if c not in keys],
+    )
+    on = [F.col(k).eqNullSafe(F.col(c)) for k, c in zip(keys, copies)]
+    return df.join(stats, on, "left").drop(*copies)
+
+
+def _target_sums(df: DataFrame, keys: Sequence[str], target_col: str, tag: str) -> DataFrame:
+    """Per-key target sum ``_s_{tag}`` (exact DECIMAL: double sums differ
+    across engines in the last ulp) and non-NULL count ``_n_{tag}``."""
+    return df.groupBy(*keys).agg(
+        F.sum(F.col(target_col).cast(_DEC)).alias(f"_s_{tag}"),
+        F.count(target_col).alias(f"_n_{tag}"),
+    )
+
+
+def _complement(
+    s_all: Column, n_all: Column, s_part: Column, n_part: Column, prefix: str
+) -> dict[str, Column]:
+    """``{prefix}_count`` and ``{prefix}_mean`` of the whole minus the
+    part (the rule in the module docstring)."""
+    zero = F.lit(0).cast(_DEC)
+    n = n_all - n_part
+    s = F.coalesce(s_all, zero) - F.coalesce(s_part, zero)
+    return {
+        f"{prefix}_count": n.cast("long"),
+        f"{prefix}_mean": F.when(n > 0, s.cast("double") / n),
+    }
+
+
+def _with_row(df: DataFrame, row: DataFrame, cols: dict[str, Column]) -> DataFrame:
+    """``df`` plus ``cols`` computed against the broadcast 1-row frame
+    ``row``, whose own columns are dropped."""
+    return df.crossJoin(F.broadcast(row)).withColumns(cols).drop(*row.columns)
+
+
+def _percentile(x: Column, qs, exact: bool) -> Column:
+    """Percentile aggregate of ``x`` at ``qs`` (a fraction, or a list of
+    them for an array), exact or approximate."""
+    return F.percentile(x, qs) if exact else F.percentile_approx(x, qs, 10000)
 
 
 def target_encode(
@@ -68,20 +123,20 @@ def target_encode(
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    n = F.count(F.col(target_col)).over(w)
-    s = F.sum(F.col(target_col).cast("decimal(27,6)")).over(w)
+    stats = df.withColumns({
+        "_n": F.count(F.col(target_col)).over(w),
+        "_s": F.sum(F.col(target_col).cast(_DEC)).over(w),
+    })
+    n, s = F.col("_n"), F.col("_s")
     # decimal sum -> double FIRST, then divide: both engines then
     # divide bit-identical operands (the repo-wide oracle pattern)
-    mean = s.cast("double") / n
-    out = df.withColumn(f"{prefix}_count", n.cast("long")).withColumn(
-        f"{prefix}_mean", mean
-    )
+    cols = {f"{prefix}_count": n.cast("long"), f"{prefix}_mean": s.cast("double") / n}
     if smoothing > 0:
         sm = (s.cast("double") + F.lit(float(smoothing * prior))) / (
             n + F.lit(float(smoothing))
         )
-        out = out.withColumn(f"{prefix}_smooth", F.coalesce(sm, F.lit(float(prior))))
-    return out
+        cols[f"{prefix}_smooth"] = F.coalesce(sm, F.lit(float(prior)))
+    return stats.withColumns(cols).drop("_n", "_s")
 
 
 def quantile_bin(
@@ -90,37 +145,27 @@ def quantile_bin(
     n_bins: int = 4,
     out_col: str = "bin",
     exact: bool = False,
-    accuracy: int = 10000,
 ) -> DataFrame:
     """Equal-frequency discretization: assign each row the index
     (0..n_bins-1) of its ``value_col`` quantile bin. Boundaries are
     the 1/n .. (n-1)/n quantiles; bin = number of boundaries <= value
     (right-closed, so the max value lands in the last bin).
 
-    ``exact=False`` (the scale default) uses approx_percentile — a
-    mergeable t-digest aggregate with bounded memory at any corpus
-    size; ``exact=True`` uses the exact interpolating percentile
-    (sort-based — small inputs / oracle parity only). Either way the
-    boundary row is a 1-row aggregate broadcast onto the projection:
-    no shuffle of the data itself. NULL values get a NULL bin (never
-    silently bin 0 — missing is not "lowest quantile").
+    ``exact`` picks the percentile (``_percentile``): approx_percentile
+    by default (the scale path), the exact interpolating percentile for
+    small inputs / oracle parity. Either way the boundary row is a
+    1-row aggregate broadcast onto the projection: no shuffle of the
+    data itself. NULL values get a NULL bin (never silently bin 0 —
+    missing is not "lowest quantile").
     """
-    bounds = _quantile_bounds(df, value_col, n_bins, exact, accuracy)
+    bounds = _quantile_bounds(df, value_col, n_bins, exact)
     return _bin_against(df, bounds, value_col, n_bins, out_col)
 
 
-def _quantile_bounds(
-    df: DataFrame, value_col: str, n_bins: int, exact: bool, accuracy: int = 10000
-) -> DataFrame:
+def _quantile_bounds(df: DataFrame, value_col: str, n_bins: int, exact: bool) -> DataFrame:
     """1-row frame of the n_bins−1 quantile boundaries of value_col."""
     qs = [i / n_bins for i in range(1, n_bins)]
-    if exact:
-        agg = F.percentile(F.col(value_col), F.array(*[F.lit(q) for q in qs]))
-    else:
-        agg = F.percentile_approx(
-            F.col(value_col), F.array(*[F.lit(q) for q in qs]), F.lit(accuracy)
-        )
-    return df.select(agg.alias("_qb"))
+    return df.select(_percentile(F.col(value_col), qs, exact).alias("_qb"))
 
 
 def _bin_against(
@@ -139,11 +184,9 @@ def _bin_against(
         bin_expr = bin_expr + (
             F.when(F.col(value_col) > F.element_at("_qb", i + 1), 1).otherwise(0)
         )
-    binned = df.crossJoin(F.broadcast(bounds)).withColumn(
-        out_col,
-        F.when(F.col(value_col).isNotNull(), bin_expr).cast("long"),
+    return _with_row(
+        df, bounds, {out_col: F.when(F.col(value_col).isNotNull(), bin_expr).cast("long")}
     )
-    return binned.drop("_qb")
 
 
 def feature_hash_rows(
@@ -243,7 +286,7 @@ def standardize(
     aggs = []
     for c in value_cols:
         x = F.col(c).cast("double")
-        xd = x.try_cast("decimal(27,6)")
+        xd = x.try_cast(_DEC)
         xxd = (x * x).try_cast("decimal(38,12)")
         aggs += [
             F.count(F.col(c)).alias(f"_n_{c}"),
@@ -253,21 +296,17 @@ def standardize(
             (F.count(F.col(c)) - F.least(F.count(xd), F.count(xxd)))
             .alias(f"_bad_{c}"),
         ]
-    moments = df.select(*aggs)
-    out = df.crossJoin(F.broadcast(moments))
-    for c in value_cols:
+
+    def z(c: str) -> Column:
         n = F.col(f"_n_{c}")
         mean = F.col(f"_s_{c}") / n
         var = (F.col(f"_ss_{c}") - F.col(f"_s_{c}") * F.col(f"_s_{c}") / n) / (n - 1)
         std = F.sqrt(var)
-        out = out.withColumn(
-            c + suffix,
-            F.when(
-                (F.col(f"_bad_{c}") == 0) & (std > 0), (F.col(c) - mean) / std
-            ).otherwise(F.lit(None)),
-        )
-    drop = [f"_{p}_{c}" for c in value_cols for p in ("n", "s", "ss", "bad")]
-    return out.drop(*drop)
+        return F.when(
+            (F.col(f"_bad_{c}") == 0) & (std > 0), (F.col(c) - mean) / std
+        ).otherwise(F.lit(None))
+
+    return _with_row(df, df.select(*aggs), {c + suffix: z(c) for c in value_cols})
 
 
 def psi_report(
@@ -315,11 +354,10 @@ def psi_report(
     def shares(binned: DataFrame, n_alias: str, p_alias: str) -> DataFrame:
         counts = binned.groupBy("bin").agg(F.count(F.lit(1)).alias(n_alias))
         total = counts.select(F.sum(n_alias).alias("_tot"))
-        return counts.crossJoin(F.broadcast(total)).select(
-            "bin",
-            F.col(n_alias).cast("long").alias(n_alias),
-            (F.col(n_alias) / F.col("_tot")).alias(p_alias),
-        )
+        return _with_row(counts, total, {
+            n_alias: F.col(n_alias).cast("long"),
+            p_alias: F.col(n_alias) / F.col("_tot"),
+        })
 
     r = shares(binned_ref, "n_ref", "p_ref")
     c = shares(binned_cur, "n_cur", "p_cur")
@@ -351,47 +389,34 @@ def oof_target_encode(
     use ``target_encode`` when leakage is temporal rather than
     fold-structural).
 
-    Computed by complement: per-category totals minus the row's own
-    (category, fold) partial —
+    Computed by ``_complement``: per-category totals minus the row's
+    own (category, fold) partial —
     oof_mean = (Σ_cat − Σ_cat,fold) / (n_cat − n_cat,fold) —
-    so the cost is two hash aggregates over (cat) and (cat, fold)
-    (both map-side combined, key cardinality ≈ |cats|·k) joined back
-    onto the rows. The join strategy is LEFT TO SPARK: low-cardinality
-    categoricals auto-broadcast, while target encoding's primary
-    high-cardinality use (user_id-class keys, 10^8+ categories at
-    100 TB) would break a forced broadcast hint — there the join
-    shuffles on the (cat, fold) key, the corpus's own distribution.
-    Decimal
-    accumulation, double division of bit-identical operands (the
-    repo-wide oracle pattern). A category entirely inside one fold
-    has no out-of-fold evidence → NULL.
+    so the cost is one map-side-combined hash aggregate over
+    (cat, fold) (≈ |cats|·k rows), whose per-category totals are a
+    window over those partial rows (exact: DECIMAL sums), joined back
+    onto the rows by ``_join_back``. The join
+    strategy is LEFT TO SPARK: low-cardinality categoricals
+    auto-broadcast, while target encoding's primary high-cardinality
+    use (user_id-class keys, 10^8+ categories at 100 TB) would break a
+    forced broadcast hint — there the join shuffles on the (cat, fold)
+    key, the corpus's own distribution. A category entirely inside one
+    fold has no out-of-fold evidence → NULL; a (cat, fold) whose
+    targets are all NULL still gets the other folds' mean; a NULL
+    category is a category.
     """
-    d = F.col(target_col).cast("decimal(27,6)")
-    per_cat = df.groupBy(cat_col).agg(
-        F.sum(d).cast("double").alias("_s_all"),
-        F.count(target_col).alias("_n_all"),
+    by_cat = Window.partitionBy(cat_col)
+    stats = _target_sums(df, [cat_col, fold_col], target_col, "part").withColumns({
+        "_s_all": F.sum("_s_part").over(by_cat),
+        "_n_all": F.sum("_n_part").over(by_cat),
+    })
+    return (
+        _join_back(df, stats, [cat_col, fold_col])
+        .withColumns(_complement(
+            F.col("_s_all"), F.col("_n_all"), F.col("_s_part"), F.col("_n_part"), prefix
+        ))
+        .drop("_s_all", "_n_all", "_s_part", "_n_part")
     )
-    per_cat_fold = df.groupBy(cat_col, fold_col).agg(
-        F.sum(d).cast("double").alias("_s_in"),
-        F.count(target_col).alias("_n_in"),
-    )
-    oof = (
-        per_cat_fold.join(per_cat, cat_col)
-        .select(
-            cat_col,
-            fold_col,
-            (F.col("_n_all") - F.col("_n_in")).cast("long").alias(f"{prefix}_count"),
-            # coalesce: a (cat,fold) whose targets are ALL NULL has
-            # _s_in NULL but _n_in 0 — NULL-target rows must reduce
-            # the count, not NULL-out the encoding (r5 ADVICE)
-            F.when(
-                F.col("_n_all") > F.col("_n_in"),
-                (F.coalesce("_s_all", F.lit(0.0)) - F.coalesce("_s_in", F.lit(0.0)))
-                / (F.col("_n_all") - F.col("_n_in")),
-            ).alias(f"{prefix}_mean"),
-        )
-    )
-    return df.join(oof, [cat_col, fold_col], "left")
 
 
 def minmax_scale(
@@ -404,15 +429,12 @@ def minmax_scale(
     aggs = []
     for c in value_cols:
         aggs += [F.min(c).alias(f"_mn_{c}"), F.max(c).alias(f"_mx_{c}")]
-    ext = df.select(*aggs)
-    out = df.crossJoin(F.broadcast(ext))
-    for c in value_cols:
+
+    def scaled(c: str) -> Column:
         mn, mx = F.col(f"_mn_{c}").cast("double"), F.col(f"_mx_{c}").cast("double")
-        out = out.withColumn(
-            c + suffix,
-            F.when(mx > mn, (F.col(c).cast("double") - mn) / (mx - mn)),
-        )
-    return out.drop(*[f"_{p}_{c}" for c in value_cols for p in ("mn", "mx")])
+        return F.when(mx > mn, (F.col(c).cast("double") - mn) / (mx - mn))
+
+    return _with_row(df, df.select(*aggs), {c + suffix: scaled(c) for c in value_cols})
 
 
 def robust_scale(
@@ -425,28 +447,21 @@ def robust_scale(
     outlier-resistant alternative to ``standardize`` (a single whale
     value drags mean/std arbitrarily; median/MAD don't move). Two
     passes: median of x, then median of |x − median| with the first
-    result broadcast in between (MAD is not a one-pass aggregate).
-    ``exact`` as in quantile_bin: approx_percentile (t-digest,
-    mergeable) at scale, exact interpolating percentile for
-    small/oracle runs. MAD 0 (>50% of values identical) yields NULL.
+    result broadcast in between (MAD is not a one-pass aggregate); the
+    (median, MAD) row is then broadcast onto the rows. ``exact`` as in
+    quantile_bin. MAD 0 (>50% of values identical) yields NULL.
     """
-    def med(frame: DataFrame, col) -> DataFrame:
-        agg = (
-            F.percentile(col, F.lit(0.5))
-            if exact
-            else F.percentile_approx(col, F.lit(0.5), F.lit(10000))
-        )
-        return frame.select(agg.alias("_m"))
-
     x = F.col(value_col).cast("double")
-    m1 = med(df, x).localCheckpoint(eager=False)  # pin: two consumers
-    with_med = df.crossJoin(F.broadcast(m1.select(F.col("_m").alias("_med"))))
-    m2 = med(with_med, F.abs(x - F.col("_med"))).select(F.col("_m").alias("_mad"))
-    out = with_med.crossJoin(F.broadcast(m2))
+    med = df.select(_percentile(x, 0.5, exact).alias("_med"))
+    med = med.localCheckpoint(eager=False)  # pin: two consumers
+    mad = df.crossJoin(F.broadcast(med)).select(
+        _percentile(F.abs(x - F.col("_med")), 0.5, exact).alias("_mad")
+    )
     scale = F.lit(1.4826) * F.col("_mad")
-    return out.withColumn(
-        value_col + suffix, F.when(scale > 0, (x - F.col("_med")) / scale)
-    ).drop("_med", "_mad")
+    return _with_row(
+        df, med.crossJoin(mad),
+        {value_col + suffix: F.when(scale > 0, (x - F.col("_med")) / scale)},
+    )
 
 
 def count_encode(
@@ -457,29 +472,17 @@ def count_encode(
     categorical encoder (no target needed, so no leakage question).
 
     One hash aggregate over the category key (map-side combined,
-    |cats| rows) joined back; the join strategy is Spark's choice —
-    low-cardinality categoricals auto-broadcast, high-cardinality
-    keys shuffle on the corpus's own key (same reasoning as
-    oof_target_encode). ``{prefix}_freq`` = n_cat / n_total is a
+    |cats| rows) joined back by ``_join_back`` (a NULL category is a
+    category; the join strategy is Spark's, as in oof_target_encode),
+    plus the 1-row total. ``{prefix}_freq`` = n_cat / n_total is a
     ratio of exact BIGINTs → bit-identical across engines.
     """
     per_cat = df.groupBy(cat_col).agg(F.count(F.lit(1)).alias("_n_cat"))
     total = df.select(F.count(F.lit(1)).alias("_n_tot"))
-    # null-SAFE join back: groupBy keeps a NULL-category group, but a
-    # plain equi-join would silently DROP every NULL-category row on
-    # the way back (NULL != NULL) — missing is a category here
-    per_cat = per_cat.select(F.col(cat_col).alias("_cat"), "_n_cat")
-    return (
-        df.join(per_cat, F.col(cat_col).eqNullSafe(F.col("_cat")))
-        .drop("_cat")
-        .crossJoin(F.broadcast(total))
-        .withColumn(f"{prefix}_count", F.col("_n_cat").cast("long"))
-        .withColumn(
-            f"{prefix}_freq",
-            F.col("_n_cat").cast("double") / F.col("_n_tot").cast("double"),
-        )
-        .drop("_n_cat", "_n_tot")
-    )
+    return _with_row(_join_back(df, per_cat, [cat_col]), total, {
+        f"{prefix}_count": F.col("_n_cat").cast("long"),
+        f"{prefix}_freq": F.col("_n_cat").cast("double") / F.col("_n_tot").cast("double"),
+    }).drop("_n_cat")
 
 
 def loo_target_encode(
@@ -493,37 +496,21 @@ def loo_target_encode(
     ``target_col`` over all OTHER rows of its category,
     loo_mean = (Σ_cat − y_row) / (n_cat − 1).
 
-    Same complement-aggregate shape as OOF but the "fold" is the row
-    itself, so only the per-category aggregate is needed (one hash
-    agg + one join back — no second aggregate). Decimal subtraction
-    keeps Σ_cat − y exact before the single double division, so the
-    oracle can reproduce every value. A singleton category (n_cat=1)
-    and a NULL-target row both yield NULL (no other-row evidence /
-    undefined complement); NULL targets reduce the count like the
-    OOF coalesce rule.
+    ``_complement`` with the row's own target as the part: only the
+    per-category aggregate is needed (one hash agg + one
+    ``_join_back``, so a NULL category is a category). A singleton
+    category (n_cat = 1) has no other-row evidence → NULL. A NULL-target
+    row takes nothing out: it gets the mean of its category's other
+    rows (Σ_cat / n_cat), the encoding a scoring row with an unknown
+    label needs.
     """
-    d = F.col(target_col).cast("decimal(27,6)")
-    per_cat = df.groupBy(cat_col).agg(
-        F.sum(d).alias("_s_cat"),
-        F.count(target_col).alias("_n_cat"),
-    )
-    # null-safe join back (see count_encode): NULL category is a
-    # category; a plain equi-join would drop those rows entirely
-    per_cat = per_cat.select(F.col(cat_col).alias("_cat"), "_s_cat", "_n_cat")
-    joined = df.join(per_cat, F.col(cat_col).eqNullSafe(F.col("_cat"))).drop("_cat")
-    n_others = F.col("_n_cat") - F.when(F.col(target_col).isNotNull(), 1).otherwise(0)
+    y = F.col(target_col)
     return (
-        joined.withColumn(f"{prefix}_count", n_others.cast("long"))
-        .withColumn(
-            f"{prefix}_mean",
-            F.when(
-                (n_others > 0) & F.col(target_col).isNotNull(),
-                (F.coalesce(F.col("_s_cat"), F.lit(0).cast("decimal(27,6)")) - d)
-                .cast("double")
-                / n_others,
-            ),
-        )
-        .drop("_s_cat", "_n_cat")
+        _join_back(df, _target_sums(df, [cat_col], target_col, "all"), [cat_col])
+        .withColumns(_complement(
+            F.col("_s_all"), F.col("_n_all"), y.cast(_DEC), y.isNotNull().cast("long"), prefix
+        ))
+        .drop("_s_all", "_n_all")
     )
 
 
@@ -562,14 +549,9 @@ def woe_encode(
         F.sum("neg").cast("long").alias("_neg_tot"),
     )
     s = F.lit(float(smoothing))
-    return (
-        per_cat.crossJoin(F.broadcast(tot))
-        .withColumn(
-            f"{prefix}",
-            F.log(
-                ((F.col("pos").cast("double") + s) / F.col("_pos_tot").cast("double"))
-                / ((F.col("neg").cast("double") + s) / F.col("_neg_tot").cast("double"))
-            ),
-        )
-        .drop("_pos_tot", "_neg_tot")
-    )
+    return _with_row(per_cat, tot, {
+        prefix: F.log(
+            ((F.col("pos").cast("double") + s) / F.col("_pos_tot").cast("double"))
+            / ((F.col("neg").cast("double") + s) / F.col("_neg_tot").cast("double"))
+        ),
+    })

@@ -518,17 +518,22 @@ def chunk_documents_udtf(
     and as the extension point for chunkers that genuinely need Python
     (model-based sentence segmentation); the whole-stage-codegen
     ``chunk_documents`` remains the 100 TB path — same output,
-    parity-tested.
+    parity-tested. ``eval`` restates ``fte.functions.words`` exactly:
+    strip spaces only, collapse Java ``\\s`` runs (ASCII whitespace),
+    lowercase, split on the single space.
     """
+    import re
+
     from pyspark.sql.functions import udtf
 
     cw, st = int(chunk_words), int(stride)
+    ws = re.compile(r"[ \t\n\x0b\f\r]+")
 
     @udtf(returnType="chunk_idx: bigint, n_chunk_words: bigint, chunk: string",
           useArrow=True)
     class ChunkDoc:
         def eval(self, text: str):
-            words = " ".join(str(text or "").strip().lower().split()).split(" ")
+            words = ws.sub(" ", str(text or "").strip(" ")).lower().split(" ")
             n = len(words)
             # same stop rule as chunk_documents: no start once the
             # previous chunk already reaches the end (subset chunks

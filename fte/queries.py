@@ -554,27 +554,26 @@ def catalog() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str |
 # entries (dict insertion order), so this tuple decides which queries
 # a round re-proves: the most recently changed first.
 _DRIVER_WINDOW_FIRST = (
-    # text-family core: plans moved by the shared word-gram generator
-    # (winnow, repetition bigrams), the shared chunker (segments), the
-    # shared BM25 scorer, and the top-15 cut that lands in a count tie
-    "winnow_fp", "winnow_pairs", "segment_dedup", "repetition_stats",
-    "bm25_topk", "bm25_batch", "top_terms",
-    # NULL ts no longer counts the NULL group as prior events
-    "range_join",
-    # text-family callers of the shared tokenizer, plan unchanged
-    "minhash_neardup", "ngram_neardup", "decontaminate", "doc_chunks",
-    "feature_hash", "doc_quality", "lang_id", "pii_redact", "unigram_xent",
+    # encoding-family core: the null-safe join-back and the exact
+    # DECIMAL complement (OOF and LOO values move by design; NULL
+    # categories now survive every oracle join)
+    "oof_target_encode", "loo_target_encode", "count_encode",
+    # the other encoders, now one projection over one broadcast
+    # statistics row and one percentile helper
+    "target_encode", "robust_scale", "quantile_bin", "zscore",
+    "minmax_scale", "drift_psi", "woe_encode", "feature_hash",
     # rest of the previous window, most recently changed first
-    "knn_bruteforce", "knn_batch", "lsh_topk", "ivf_topk", "ivf_knn_batch",
-    "lsh_recall_vs_exact", "ivf_recall_vs_exact", "ivf_knn_recall_vs_exact",
-    "quant_knn", "quant_recall_vs_exact", "emb_top_pairs",
-    "emb_top_pairs_gemm", "emb_neardup", "emb_norms", "emb_covariance",
-    "simhash_neardup", "simhash_recall_vs_exact", "hash_split",
-    "doc_text_stats", "revenue_by_segment", "minhash_recall_vs_exact",
-    "incremental_neardup", "rolling_counts", "role_freq_running",
-    "sessionize", "session_stats", "lag_lead", "backfill", "asof_join",
-    "asof_join_merge", "training_pairs", "pandas_udaf_median",
-    "oof_target_encode",
+    "winnow_fp", "winnow_pairs", "segment_dedup", "repetition_stats",
+    "bm25_topk", "bm25_batch", "top_terms", "range_join", "minhash_neardup",
+    "ngram_neardup", "decontaminate", "doc_chunks", "doc_quality",
+    "lang_id", "pii_redact", "unigram_xent", "knn_bruteforce", "knn_batch",
+    "lsh_topk", "ivf_topk", "ivf_knn_batch", "lsh_recall_vs_exact",
+    "ivf_recall_vs_exact", "ivf_knn_recall_vs_exact", "quant_knn",
+    "quant_recall_vs_exact", "emb_top_pairs", "emb_top_pairs_gemm",
+    "emb_neardup", "emb_norms", "emb_covariance", "simhash_neardup",
+    "simhash_recall_vs_exact", "hash_split", "doc_text_stats",
+    "revenue_by_segment", "minhash_recall_vs_exact", "incremental_neardup",
+    "rolling_counts",
 )
 
 

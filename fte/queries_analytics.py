@@ -139,14 +139,16 @@ WITH c AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n FROM events GROUP BY
 SELECT e.event_id, e.event_type,
        c.n AS ce_count,
        CAST(c.n AS DOUBLE) / CAST(t.n AS DOUBLE) AS ce_freq
-FROM events e JOIN c USING (event_type) CROSS JOIN t
+FROM events e JOIN c ON e.event_type IS NOT DISTINCT FROM c.event_type
+CROSS JOIN t
 """
 
 
 def q_loo_target_encode(spark, sf_dir):
     """Leave-one-out target encoding of event_type by `value` — the
     row-granular CV-leakage control (complement aggregate, decimal
-    subtraction before the single double division)."""
+    subtraction before the single double division; a NULL-value row
+    gets the mean of its category's other rows)."""
     from fte.operators.encoding import loo_target_encode
 
     e = _t(spark, sf_dir, "events")
@@ -160,16 +162,16 @@ WITH c AS (
   SELECT event_type, SUM(CAST(value AS DECIMAL(27,6))) AS s,
          COUNT(value) AS n
   FROM events GROUP BY 1
+), r AS (
+  SELECT e.event_id, e.event_type,
+         COALESCE(c.s, 0) - COALESCE(CAST(e.value AS DECIMAL(27,6)), 0) AS s_rest,
+         c.n - CASE WHEN e.value IS NOT NULL THEN 1 ELSE 0 END AS n_rest
+  FROM events e JOIN c ON e.event_type IS NOT DISTINCT FROM c.event_type
 )
-SELECT e.event_id, e.event_type,
-       CAST(c.n - CASE WHEN e.value IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
-         AS loo_count,
-       CASE WHEN e.value IS NOT NULL
-             AND c.n - CASE WHEN e.value IS NOT NULL THEN 1 ELSE 0 END > 0
-            THEN CAST(c.s - CAST(e.value AS DECIMAL(27,6)) AS DOUBLE)
-                 / (c.n - 1)
-       END AS loo_mean
-FROM events e JOIN c USING (event_type)
+SELECT event_id, event_type,
+       CAST(n_rest AS BIGINT) AS loo_count,
+       CASE WHEN n_rest > 0 THEN CAST(s_rest AS DOUBLE) / n_rest END AS loo_mean
+FROM r
 """
 
 

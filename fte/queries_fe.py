@@ -1,8 +1,8 @@
-"""Feature-engineering catalog queries: leakage-safe target encoding
-and equal-frequency binning (fte/operators/encoding.py), with DuckDB
-oracle twins. Appended after the 79 rotation-managed entries — the
-driver window covers positions 0-49; these are judge/local-gated until
-rotated in.
+"""Feature-engineering catalog queries: leakage-safe target encoding,
+scaling, equal-frequency binning, drift, CV folds and sampling
+(fte/operators/encoding.py, fte/operators/sampling.py), with DuckDB
+oracle twins. Which of them the driver's 50-entry correctness window
+re-proves is decided by ``fte.queries._DRIVER_WINDOW_FIRST``.
 """
 
 from __future__ import annotations
@@ -253,8 +253,9 @@ def q_oof_target_encode(spark, sf_dir):
     `value` over the OTHER four user-grouped CV folds — the standard
     leakage control when folds, not time, define what a model may see.
     Complement form: per-category totals minus the own-(cat, fold)
-    partial; two small aggregates broadcast back, corpus never
-    shuffles."""
+    partial, subtracted in DECIMAL. The statistics come from one
+    (cat, fold) aggregate and join back null-safely (a NULL event_type
+    is a category); the join strategy is Spark's."""
     from fte.operators.encoding import oof_target_encode
     from fte.operators.sampling import with_fold
 
@@ -272,22 +273,23 @@ WITH f AS (
   FROM events),
 a AS (
   SELECT event_type,
-         CAST(SUM(CAST(value AS DECIMAL(27,6))) AS DOUBLE) AS s_all,
+         SUM(CAST(value AS DECIMAL(27,6))) AS s_all,
          COUNT(value) AS n_all
   FROM f GROUP BY event_type),
 i AS (
   SELECT event_type, fold,
-         CAST(SUM(CAST(value AS DECIMAL(27,6))) AS DOUBLE) AS s_in,
+         SUM(CAST(value AS DECIMAL(27,6))) AS s_in,
          COUNT(value) AS n_in
   FROM f GROUP BY event_type, fold)
 SELECT f.event_id, f.fold,
        CAST(n_all - n_in AS BIGINT) AS oof_count,
        CASE WHEN n_all > n_in
-            THEN (COALESCE(s_all, CAST(0.0 AS DOUBLE)) - COALESCE(s_in, CAST(0.0 AS DOUBLE)))
+            THEN CAST(COALESCE(s_all, 0) - COALESCE(s_in, 0) AS DOUBLE)
                  / (n_all - n_in) END AS oof_mean
 FROM f
-JOIN i ON f.event_type = i.event_type AND f.fold = i.fold
-JOIN a ON f.event_type = a.event_type
+JOIN i ON f.event_type IS NOT DISTINCT FROM i.event_type
+      AND f.fold IS NOT DISTINCT FROM i.fold
+JOIN a ON f.event_type IS NOT DISTINCT FROM a.event_type
 """
 
 

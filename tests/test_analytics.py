@@ -133,7 +133,8 @@ def test_loo_target_encode_match_pandas(spark):
     for _, row in pdf.iterrows():
         got = out.loc[row["id"]]
         if pd.isna(row["y"]):
-            assert pd.isna(got["loo_mean"])
+            # nothing to leave out: the mean of the category's other rows
+            assert np.isclose(got["loo_mean"], s[row["cat"]] / c[row["cat"]])
             assert got["loo_count"] == c[row["cat"]]
         elif c[row["cat"]] == 1:
             assert pd.isna(got["loo_mean"])
@@ -525,10 +526,15 @@ def test_encoders_keep_null_category_rows(spark):
     """A NULL category is a category: groupBy keeps the NULL group but
     a plain equi-join back would drop those rows (NULL != NULL) — the
     null-safe join must preserve them with their group's stats."""
-    from fte.operators.encoding import count_encode, loo_target_encode
+    from fte.operators.encoding import count_encode, loo_target_encode, oof_target_encode
 
     rows = [(0, "a", 1.0), (1, "a", 3.0), (2, None, 5.0), (3, None, 7.0)]
     df = spark.createDataFrame(rows, "id long, cat string, y double")
+    folds = df.withColumn("fold", F.col("id") % 2)
+    oof = oof_target_encode(folds, "cat", "y", "fold").toPandas().set_index("id")
+    assert len(oof) == 4
+    assert oof.loc[2, "oof_count"] == 1 and oof.loc[2, "oof_mean"] == 7.0
+    assert oof.loc[3, "oof_count"] == 1 and oof.loc[3, "oof_mean"] == 5.0
     ce = count_encode(df, "cat").toPandas().set_index("id").sort_index()
     assert len(ce) == 4
     assert ce.loc[2, "ce_count"] == 2 and ce.loc[2, "ce_freq"] == 0.5

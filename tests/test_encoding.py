@@ -252,6 +252,25 @@ def test_oof_target_encode_matches_pandas(spark):
     assert got.loc[pdf["cat"] == "solo", "oof_mean"].isna().all()
 
 
+def test_oof_target_encode_subtracts_exactly(spark):
+    """The out-of-fold complement is subtracted in DECIMAL and rounded
+    to double once: rounding each sum first loses a small target next
+    to a 1e15 one (0.125 for the 0.2 below)."""
+    from decimal import Decimal
+
+    from fte.operators.encoding import oof_target_encode
+
+    ys = [0.2, 1e15 + 0.1]
+    df = spark.createDataFrame(
+        [(i, "a", i, y) for i, y in enumerate(ys)], "rid long, cat string, fold long, y double"
+    )
+    got = oof_target_encode(df, "cat", "y", "fold").toPandas().set_index("rid")
+    for i in range(len(ys)):
+        rest = [Decimal(repr(y)) for j, y in enumerate(ys) if j != i]
+        assert got.loc[i, "oof_mean"] == float(sum(rest)) / len(rest)
+    assert got.loc[1, "oof_mean"] == 0.2
+
+
 def test_temporal_split_timezone_independent(spark):
     """The cutoff literal must compare in the ts column's own (NTZ)
     type: under a non-UTC session timezone a session-zoned literal

@@ -288,24 +288,28 @@ def test_unigram_xent_flags_atypical_docs(spark):
 
 def test_chunk_udtf_matches_codegen_chunker(spark):
     """The Arrow UDTF surface (LATERAL table function) produces exactly
-    the codegen chunker's output on the same docs."""
+    the codegen chunker's output on the same docs — including Unicode
+    spaces (not word breaks for Java's ASCII ``\\s``) and a leading tab
+    (``trim`` strips only spaces, so it becomes an empty first word)."""
     from fte.operators.text import chunk_documents, chunk_documents_udtf
 
-    texts = [" ".join(f"w{i}" for i in range(n)) for n in (100, 40, 3, 1)]
+    texts = [" ".join(f"w{i}" for i in range(n)) for n in (100, 40, 3, 1)] + [
+        "alpha\u00a0beta gamma", "one\u2003two three", "\tlead tab word",
+    ]
     docs = _docs(spark, texts)
-    a = (
-        chunk_documents(docs, chunk_words=32, stride=24)
-        .orderBy("doc_id", "chunk_idx")
-        .toPandas()
-    )
-    b = (
-        chunk_documents_udtf(spark, docs, chunk_words=32, stride=24)
-        .orderBy("doc_id", "chunk_idx")
-        .toPandas()
-    )
-    assert a[["doc_id", "chunk_idx", "n_chunk_words", "chunk"]].equals(
-        b[["doc_id", "chunk_idx", "n_chunk_words", "chunk"]]
-    )
+    cols = ["doc_id", "chunk_idx", "n_chunk_words", "chunk"]
+    for cw, st in ((32, 24), (2, 2)):
+        a = (
+            chunk_documents(docs, chunk_words=cw, stride=st)
+            .orderBy("doc_id", "chunk_idx")
+            .toPandas()
+        )
+        b = (
+            chunk_documents_udtf(spark, docs, chunk_words=cw, stride=st)
+            .orderBy("doc_id", "chunk_idx")
+            .toPandas()
+        )
+        assert a[cols].equals(b[cols]), (cw, st)
 
 
 def test_bm25_batch_consistent_with_single(spark):
