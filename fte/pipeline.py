@@ -9,6 +9,16 @@ conv_id shuffle — the assembly "join" of the reference
 here: features are computed in place on the fact table, aligned by
 construction, no join needed for same-grain features.
 
+``build_matrix`` first spreads its input by ``conv_id``
+(``fte.scan.spread``): when the transcripts' scan would run as fewer
+tasks than the session's shuffle parallelism (one local file with one
+row group is ONE task), the one conv_id Exchange moves to the entry,
+so the scalar extractors run on every core and the windows reuse that
+Exchange. The price is that ``text`` then crosses it. An in-memory
+frame, many files, or files on a cluster store leave the input as it
+is: the Exchange stays above the scalar stage and never carries
+``text``.
+
 As-of-grained features (anchors at arbitrary ts) go through
 ``fte.operators.asof`` instead and equi-join back on
 (conv_id, turn_idx) when mixed with turn-grain features.
@@ -25,6 +35,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, functions as F
 
 from fte.registry import FeatureRegistry
+from fte.scan import spread
 
 KEYS = ("conv_id", "turn_idx", "ts")
 
@@ -43,16 +54,18 @@ def build_matrix(
         names = sorted(
             n for n, s in registry.features.items() if not (serve and s.leaky)
         )
-    # apply per-row ('scalar'-tagged) builders FIRST: their projections
-    # then sit below the window shuffle, so fat inputs (text) are
-    # consumed at the scan and pruned out of the Exchange — Catalyst
-    # has no rule to transpose an arbitrary Project below a Window, so
-    # operator order is the only way to keep text out of the shuffle
+    # apply per-row ('scalar'-tagged) builders FIRST, right after the
+    # spread: unspread, their projections sit below the window shuffle,
+    # so fat inputs (text) are consumed at the scan and pruned out of
+    # the Exchange — Catalyst has no rule to transpose an arbitrary
+    # Project below a Window, so operator order is the only way to
+    # keep text out of the shuffle. Spread, they sit above the entry
+    # Exchange the windows reuse and run on every core.
     names = sorted(
         names,
         key=lambda n: 0 if "scalar" in registry.get(n).tags else 1,
     )
-    out = df
+    out = spread(df, "conv_id")
     out_cols: list[str] = []
     for name in names:
         spec = registry.get(name)

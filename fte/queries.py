@@ -489,7 +489,7 @@ def q_knn_bruteforce(spark, sf_dir):
     from fte.operators.similarity import brute_force_topk
     from fte.queries_ml import query_vector
 
-    e = _t(spark, sf_dir, "embeddings", spread=False)
+    e = _t(spark, sf_dir, "embeddings", spread_scan=False)
     return brute_force_topk(e, query_vector(e), k=10).select(
         "vec_id", F.round("cos_sim", 6).alias("cos_sim"),
         F.col("rank").cast("long").alias("rank"),

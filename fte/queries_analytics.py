@@ -127,7 +127,7 @@ def q_count_encode(spark, sf_dir):
     """Count/frequency encoding of event_type onto every event row."""
     from fte.operators.encoding import count_encode
 
-    e = _t(spark, sf_dir, "events", spread=False)
+    e = _t(spark, sf_dir, "events", spread_scan=False)
     return count_encode(e, "event_type").select(
         "event_id", "event_type", "ce_count", "ce_freq"
     )
@@ -181,7 +181,7 @@ def q_woe_encode(spark, sf_dir):
     are populated in every category). Laplace smoothing 0.5."""
     from fte.operators.encoding import woe_encode
 
-    e = _t(spark, sf_dir, "events", spread=False)
+    e = _t(spark, sf_dir, "events", spread_scan=False)
     return woe_encode(
         e, "event_type", (F.col("value") > 50), smoothing=0.5
     ).select("event_type", "n", "pos", "neg", "woe")
@@ -290,7 +290,7 @@ def q_mutual_info(spark, sf_dir):
     from fte.operators.encoding import quantile_bin
     from fte.operators.selection import mutual_info_cells
 
-    d = _t(spark, sf_dir, "documents", spread=False)
+    d = _t(spark, sf_dir, "documents", spread_scan=False)
     binned = quantile_bin(d, "n_chars", n_bins=4, exact=True)
     out = mutual_info_cells(
         binned,
@@ -739,7 +739,7 @@ def q_chi2(spark, sf_dir):
     from fte.operators.encoding import quantile_bin
     from fte.operators.selection import chi2_cells
 
-    d = _t(spark, sf_dir, "documents", spread=False)
+    d = _t(spark, sf_dir, "documents", spread_scan=False)
     binned = quantile_bin(d, "n_chars", n_bins=4, exact=True)
     return chi2_cells(
         binned, F.col("bin").cast("long"), (F.col("lang") == "en").cast("long")

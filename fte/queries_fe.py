@@ -19,7 +19,7 @@ def q_target_encode(spark, sf_dir):
     FeatureHub-style user hand-writes, without its leakage foot-gun."""
     from fte.operators.encoding import target_encode
 
-    e = _t(spark, sf_dir, "events", spread=False)
+    e = _t(spark, sf_dir, "events", spread_scan=False)
     return target_encode(
         e, "event_type", "value", ["ts", "event_id"], smoothing=10.0, prior=0.5
     ).select("event_id", "event_type", "te_count", "te_mean", "te_smooth")
@@ -49,7 +49,7 @@ def q_quantile_bin(spark, sf_dir):
     (mergeable t-digest)."""
     from fte.operators.encoding import quantile_bin
 
-    d = _t(spark, sf_dir, "documents", spread=False)
+    d = _t(spark, sf_dir, "documents", spread_scan=False)
     return quantile_bin(d, "n_chars", n_bins=4, exact=True).select("doc_id", "bin")
 
 
@@ -117,7 +117,7 @@ def q_cv_folds(spark, sf_dir):
     shuffle."""
     from fte.operators.sampling import with_fold
 
-    d = _t(spark, sf_dir, "documents", spread=False)
+    d = _t(spark, sf_dir, "documents", spread_scan=False)
     return with_fold(d, "doc_id", n_folds=5).select("doc_id", "fold")
 
 
@@ -134,7 +134,7 @@ def q_temporal_split(spark, sf_dir):
     alternative to random splits when targets look into the future."""
     from fte.operators.sampling import temporal_split
 
-    e = _t(spark, sf_dir, "events", spread=False)
+    e = _t(spark, sf_dir, "events", spread_scan=False)
     return temporal_split(
         e, "ts", "2024-01-16 00:00:00", embargo_seconds=86400
     ).select("event_id", "tsplit")
@@ -155,7 +155,7 @@ def q_zscore(spark, sf_dir):
     across engines, unlike order-dependent stddev_samp)."""
     from fte.operators.encoding import standardize
 
-    d = _t(spark, sf_dir, "documents", spread=False)
+    d = _t(spark, sf_dir, "documents", spread_scan=False)
     return standardize(d, ["n_chars"]).select("doc_id", "n_chars_z")
 
 
@@ -183,7 +183,7 @@ def q_drift_psi(spark, sf_dir):
 
     from fte.operators.encoding import psi_report
 
-    d = _t(spark, sf_dir, "documents", spread=False)
+    d = _t(spark, sf_dir, "documents", spread_scan=False)
     ref = d.filter(F.col("doc_id") % 2 == 0)
     cur = d.filter(F.col("doc_id") % 2 == 1)
     return psi_report(ref, cur, "n_chars", n_bins=10, exact=True)
@@ -303,7 +303,7 @@ def q_weighted_sample(spark, sf_dir):
     plans as TakeOrderedAndProject."""
     from fte.operators.sampling import weighted_sample
 
-    d = _t(spark, sf_dir, "documents", spread=False)
+    d = _t(spark, sf_dir, "documents", spread_scan=False)
     return weighted_sample(d, "doc_id", "n_chars", n=50).select(
         "doc_id", "n_chars", "priority"
     )
@@ -334,7 +334,7 @@ def q_sample_per_group(spark, sf_dir):
     Bernoulli keep)."""
     from fte.operators.sampling import sample_per_group
 
-    d = _t(spark, sf_dir, "documents", spread=False)
+    d = _t(spark, sf_dir, "documents", spread_scan=False)
     return sample_per_group(d, "doc_id", "source", n_per_group=5).select(
         "doc_id", "source"
     )
@@ -361,7 +361,7 @@ def q_minmax_scale(spark, sf_dir):
     order)."""
     from fte.operators.encoding import minmax_scale
 
-    d = _t(spark, sf_dir, "documents", spread=False)
+    d = _t(spark, sf_dir, "documents", spread_scan=False)
     return minmax_scale(d, ["n_chars"]).select("doc_id", "n_chars_mm")
 
 
@@ -381,7 +381,7 @@ def q_robust_scale(spark, sf_dir):
     them."""
     from fte.operators.encoding import robust_scale
 
-    d = _t(spark, sf_dir, "documents", spread=False)
+    d = _t(spark, sf_dir, "documents", spread_scan=False)
     return robust_scale(d, "n_chars", exact=True).select("doc_id", "n_chars_rz")
 
 

@@ -159,11 +159,11 @@ def q_incremental_neardup(spark, sf_dir):
     SQL-reproducible (same class as minhash_neardup)."""
     from fte.operators.dedup import incremental_neardup, minhash_signatures
 
-    # spread=False: the steady state of this query is text-normalize
+    # spread_scan=False: the steady state of this query is text-normalize
     # joins whose exchange keys are the normalized text itself — a
     # spread exchange upstream just moves the fat strings twice (r6
     # same-window A/B: 9.9 s spread vs 8.4 s unspread on the replica).
-    d = _t(spark, sf_dir, "documents", spread=False).select("doc_id", "text")
+    d = _t(spark, sf_dir, "documents", spread_scan=False).select("doc_id", "text")
     corpus = d.filter(F.col("doc_id") % 3 != 0)
     fresh = d.filter(F.col("doc_id") % 3 == 0)
     planted = corpus.filter(F.col("doc_id") % 10 == 1).select(
@@ -836,7 +836,7 @@ FROM (
 
 def q_knn_batch(spark, sf_dir):
     """Exact top-5 neighbors for query vectors 0,1,2 (broadcast knn join)."""
-    e = _t(spark, sf_dir, "embeddings", spread=False)
+    e = _t(spark, sf_dir, "embeddings", spread_scan=False)
     got = knn_join(e, query_set(e), k=5)
     return got.select(
         "query_id", "vec_id", F.round("cos_sim", 6).alias("cos_sim"),
@@ -905,7 +905,7 @@ def q_ivf_knn_batch(spark, sf_dir):
     batch knn is the oracle-checked ivf_knn_recall_vs_exact row)."""
     from fte.operators.similarity import ivf_knn_join
 
-    e = _t(spark, sf_dir, "embeddings", spread=False)
+    e = _t(spark, sf_dir, "embeddings", spread_scan=False)
     assigned, C = ivf_build(e, n_cells=16)
     got = ivf_knn_join(assigned, C, query_set(e), k=5, nprobe=4)
     return got.select(

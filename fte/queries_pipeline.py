@@ -424,9 +424,9 @@ def q_source_mix(spark, sf_dir):
     survives at any parallelism). Output: per-source survivor counts."""
     from fte.operators.sampling import sample_sources
 
-    # spread=False: md5-uniform filter + tiny groupBy — no scan-side
+    # spread_scan=False: md5-uniform filter + tiny groupBy — no scan-side
     # compute worth an exchange (r6 A/B)
-    d = _t(spark, sf_dir, "documents", spread=False)
+    d = _t(spark, sf_dir, "documents", spread_scan=False)
     mixed = sample_sources(d, {"src0": 0.2, "src1": 0.6}, seed=42)
     return (
         mixed.groupBy("source")

@@ -88,7 +88,7 @@ def curate(
     # identity on multi-split cluster scans.
     from fte.scan import spread
 
-    docs = spread(spark.read.parquet(input_path), spark, input_path, id_c)
+    docs = spread(spark.read.parquet(input_path), id_c)
     funnel["n_input"] = docs.count()
 
     # 1-2: lang + quality gates (one projection each, no shuffle)

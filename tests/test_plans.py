@@ -69,6 +69,40 @@ def test_matrix_shuffles_one_copy_of_textlen(spark, transcripts_df):
     assert not any(re.match(r"text#", e) for e in entries), "text must not be shuffled"
 
 
+def test_matrix_spreads_single_file_input(
+    spark, transcripts_df, anchors_df, labels_df, tmp_path, monkeypatch
+):
+    """A one-file transcripts table is spread by conv_id at the entry:
+    the windows reuse that one Exchange, and neither the serve matrix
+    nor the labelled anchor matrix moves against the unspread build."""
+    import fte.scan
+    from fte.checkpoint import content_checksum
+    from fte.pipeline import attach_labels, build_anchor_matrix
+    from fte.schema import TRANSCRIPTS_SCHEMA
+
+    path = str(tmp_path / "transcripts")
+    transcripts_df.coalesce(1).write.parquet(path)
+    turns = spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(path)
+    monkeypatch.setattr(fte.scan, "MIN_SPREAD_BYTES", 1)
+    reg = build_default_registry()
+
+    def builds():
+        return (
+            build_matrix(turns, reg, serve=True),
+            attach_labels(build_anchor_matrix(anchors_df, turns, reg), labels_df),
+        )
+
+    mat, labelled = builds()
+    plan = _plan(mat)
+    assert "REPARTITION_BY_NUM" in plan
+    assert len(re.findall(r"Exchange hashpartitioning\(conv_id", plan)) == 1, plan
+    monkeypatch.setenv("FTE_NO_SPREAD", "1")
+    mat0, labelled0 = builds()
+    assert "REPARTITION_BY_NUM" not in _plan(mat0)
+    assert content_checksum(mat) == content_checksum(mat0)
+    assert content_checksum(labelled) == content_checksum(labelled0)
+
+
 def test_role_freq_window_function_counts(spark, transcripts_df, tmp_path):
     """Counts first, ratios over them: one count plus one sum per role,
     for the library operator and the catalog query alike."""
