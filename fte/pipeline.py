@@ -17,7 +17,8 @@ so the scalar extractors run on every core and the windows reuse that
 Exchange. The price is that ``text`` then crosses it. An in-memory
 frame, many files, or files on a cluster store leave the input as it
 is: the Exchange stays above the scalar stage and never carries
-``text``.
+``text``. ``build_anchor_matrix`` assembles the same matrix without
+the spread (see its docstring).
 
 As-of-grained features (anchors at arbitrary ts) go through
 ``fte.operators.asof`` instead and equi-join back on
@@ -47,6 +48,17 @@ def build_matrix(
     serve: bool = False,
     pack_vector: bool = False,
 ) -> DataFrame:
+    return _assemble(spread(df, "conv_id"), registry, features, serve, pack_vector)
+
+
+def _assemble(
+    df: DataFrame,
+    registry: FeatureRegistry,
+    features: Sequence[str] | None,
+    serve: bool,
+    pack_vector: bool = False,
+) -> DataFrame:
+    """``build_matrix`` on a frame taken as it is (no spread)."""
     if features is not None:
         names = list(features)
     else:
@@ -65,7 +77,7 @@ def build_matrix(
         names,
         key=lambda n: 0 if "scalar" in registry.get(n).tags else 1,
     )
-    out = spread(df, "conv_id")
+    out = df
     out_cols: list[str] = []
     for name in names:
         spec = registry.get(name)
@@ -110,10 +122,18 @@ def build_anchor_matrix(
     position [U: featurehub/evaluation/client.py]; here alignment is
     the PIT join, so anchors at arbitrary timestamps — including mid-
     conversation — get exactly the features observable at that moment.
+
+    The transcripts are NOT spread here (``_assemble``, not
+    ``build_matrix``): the as-of join unions the turn features with the
+    anchors and shuffles that union by ``conv_id`` again, so a spread
+    adds a second ``conv_id`` stage of 8 tasks whose speed differed
+    from one session to the next (perfbench ``pit_train``: median pass
+    times of 1.15–1.73 s over 10 fresh sessions with the spread, on a
+    4-vCPU VM at local[4]; ROADMAP direction 2 has the runs).
     """
     from fte.operators.asof import asof_join
 
-    turn_feats = build_matrix(transcripts, registry, features=features, serve=True)
+    turn_feats = _assemble(transcripts, registry, features, serve=True)
     feat_cols = [c for c in turn_feats.columns if c not in ("conv_id",)]
     return asof_join(
         anchors,

@@ -73,8 +73,9 @@ def test_matrix_spreads_single_file_input(
     spark, transcripts_df, anchors_df, labels_df, tmp_path, monkeypatch
 ):
     """A one-file transcripts table is spread by conv_id at the entry:
-    the windows reuse that one Exchange, and neither the serve matrix
-    nor the labelled anchor matrix moves against the unspread build."""
+    the windows reuse that one Exchange, the anchor path is left
+    unspread, and neither the serve matrix nor the labelled anchor
+    matrix moves against the FTE_NO_SPREAD build."""
     import fte.scan
     from fte.checkpoint import content_checksum
     from fte.pipeline import attach_labels, build_anchor_matrix
@@ -95,6 +96,7 @@ def test_matrix_spreads_single_file_input(
     mat, labelled = builds()
     plan = _plan(mat)
     assert "REPARTITION_BY_NUM" in plan
+    assert "REPARTITION_BY_NUM" not in _plan(labelled), "the anchor path is not spread"
     assert len(re.findall(r"Exchange hashpartitioning\(conv_id", plan)) == 1, plan
     monkeypatch.setenv("FTE_NO_SPREAD", "1")
     mat0, labelled0 = builds()
