@@ -66,13 +66,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or get) a SparkSession with the engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in the sandbox;
-    under spark-submit (cluster mode) leave it None and let the
-    submitter decide — the confs still apply.
+    Under spark-submit leave ``master`` None and let the submitter's
+    ``--master`` decide — the confs still apply.
     """
     builder = SparkSession.builder.appName(app_name)
-    if master is None and "SPARK_GRAFT_CPUS" in os.environ:
-        master = f"local[{os.environ['SPARK_GRAFT_CPUS']}]"
     if master is not None:
         builder = builder.master(master)
     for k, v in DEFAULT_CONFS.items():

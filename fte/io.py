@@ -127,58 +127,6 @@ def write_bucketed(
     )
 
 
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema,
-    lenient: bool = False,
-    **options: str,
-) -> DataFrame:
-    """Declared-schema CSV scan (the reference's native ingest format:
-    FeatureHub loads CSVs with pandas dtype inference [U: session
-    _load_dataset]; at 100 TB schema inference is an EXTRA FULL PASS
-    over the input, so this engine requires the schema and never
-    infers).
-
-    Strict by default (FAILFAST: one malformed row kills the job — the
-    right default for curated ingest). ``lenient=True`` switches to
-    PERMISSIVE with a ``_corrupt_record`` column so bad rows are
-    quarantined for inspection instead of silently nulled: filter
-    ``_corrupt_record IS NOT NULL`` to a reject sink.
-    """
-    from pyspark.sql import types as T
-
-    opts = {"header": "true", "mode": "FAILFAST", **options}
-    if lenient:
-        schema = T.StructType(
-            list(schema.fields) + [T.StructField("_corrupt_record", T.StringType())]
-        )
-        opts["mode"] = "PERMISSIVE"
-        opts["columnNameOfCorruptRecord"] = "_corrupt_record"
-    return spark.read.options(**opts).schema(schema).csv(path)
-
-
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema,
-    lenient: bool = False,
-    **options: str,
-) -> DataFrame:
-    """Declared-schema JSON-lines scan (the common chat-transcript
-    export format). Same strict/lenient contract as read_csv."""
-    from pyspark.sql import types as T
-
-    opts = {"mode": "FAILFAST", **options}
-    if lenient:
-        schema = T.StructType(
-            list(schema.fields) + [T.StructField("_corrupt_record", T.StringType())]
-        )
-        opts["mode"] = "PERMISSIVE"
-        opts["columnNameOfCorruptRecord"] = "_corrupt_record"
-    return spark.read.options(**opts).schema(schema).json(path)
-
-
 def table_io(spark: SparkSession, prefer_iceberg: bool = True):
     """Pick the backend: Iceberg when a catalog is live, else parquet."""
     if prefer_iceberg:
@@ -189,61 +137,3 @@ def table_io(spark: SparkSession, prefer_iceberg: bool = True):
         except Exception:  # noqa: BLE001
             pass
     return ParquetIO()
-
-
-def compact_parquet(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    target_file_bytes: int = 512 * 1024 * 1024,
-) -> tuple[int, int]:
-    """Small-file compaction: rewrite a parquet directory into
-    ⌈total_bytes / target⌉ files. Streaming/incremental sinks and
-    per-batch partition overwrites accrete thousands of KB-sized files;
-    at 100 TB the resulting open/seek storm dominates scan time (every
-    file costs a NameNode/S3 round trip + footer read), so periodic
-    compaction IS a pipeline operator, not ops trivia.
-
-    Sizing reads only FILE METADATA on the driver (a directory listing
-    — no data moves through it; this offline impl walks a local path,
-    the cluster variant lists via the Hadoop FileSystem API — same
-    O(#files) driver cost either way); the rewrite itself is one
-    distributed pass: scan → repartition(n) → write to ``dst``. The caller swaps
-    ``dst`` in atomically (rename / metastore pointer flip) so readers
-    never see a half-compacted table; writing beside the source keeps
-    the operation idempotent — a crashed compaction just reruns.
-    Returns (files_before, files_after).
-    """
-    from pathlib import Path
-
-    files = [p for p in Path(src).rglob("*.parquet") if p.is_file()]
-    total = sum(p.stat().st_size for p in files)
-    n_out = max(1, -(-total // target_file_bytes))
-    df = spark.read.parquet(src)
-    df.repartition(n_out).write.mode("overwrite").parquet(dst)
-    files_after = len([p for p in Path(dst).rglob("*.parquet") if p.is_file()])
-    return len(files), files_after
-
-
-def write_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_cols: tuple[str, ...] = ("conv_id",),
-    n_files: int = 32,
-    mode: str = "overwrite",
-) -> None:
-    """Range-clustered write: repartitionByRange + sortWithinPartitions
-    on the cluster key before writing, so each output file covers a
-    NARROW, non-overlapping key range and every file/row-group carries
-    tight min/max statistics. Readers filtering on the key then skip
-    whole files from parquet footer stats alone — the data-skipping
-    layout (Z-order's 1-D special case) that turns a point/range query
-    over 100 TB into a handful of file reads. The range partitioner
-    samples key quantiles, so skewed keys still yield balanced files.
-    """
-    (
-        df.repartitionByRange(n_files, *[F.col(c) for c in cluster_cols])
-        .sortWithinPartitions(*cluster_cols)
-        .write.mode(mode)
-        .parquet(path)
-    )

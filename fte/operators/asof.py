@@ -48,8 +48,6 @@ from collections.abc import Sequence
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F
-
-from fte.functions import epoch_seconds
 from pyspark.sql import types as T
 
 DEFAULT_RIGHT_COLS = ("turn_idx", "role", "text", "tool", "ts")

@@ -387,11 +387,6 @@ def simhash_table(
     return agg.select(id_col, sim.alias(out_col))
 
 
-def with_simhash(df: DataFrame, text_col: str = "text", out_col: str = "simhash",
-                 id_col: str = "doc_id") -> DataFrame:
-    return df.join(simhash_table(df, id_col, text_col, out_col), id_col, "left")
-
-
 def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 

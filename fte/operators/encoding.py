@@ -10,9 +10,9 @@ one window, frame UNBOUNDED PRECEDING → 1 PRECEDING), OTHER folds
 ``count_encode`` and ``woe_encode``; the scalers ``standardize``,
 ``minmax_scale`` and ``robust_scale``; ``quantile_bin`` and the drift
 monitor ``psi_report``; and the vocab-free hashing trick
-``feature_hash_rows`` / ``feature_hash_vectors`` (bucket = hash(token)
-% k with a ±1 sign, Weinberger et al., ICML 2009: one (id, bucket)
-shuffle of 16-byte rows at any corpus size).
+``feature_hash_rows`` (bucket = hash(token) % k with a ±1 sign,
+Weinberger et al., ICML 2009: one (id, bucket) shuffle of 16-byte rows
+at any corpus size).
 
 Each shared decision has one definition:
 - ``_join_back``: per-key statistics join back null-safely on every
@@ -224,30 +224,6 @@ def feature_hash_rows(
         .groupBy(id_col, "bucket")
         .agg(F.sum("_s").cast("long").alias("weight"))
     )
-
-
-def feature_hash_vectors(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 64,
-    seed: int = 42,
-    out_col: str = "features",
-) -> DataFrame:
-    """Dense form of feature_hash_rows: (id, features: array<long> of
-    length k). Assembly is one per-doc hash aggregate into a map,
-    then k UNROLLED element_at lookups (k is a plan-time constant —
-    flat codegen expressions, never an interpreted per-element
-    higher-order transform at ~100 µs/element)."""
-    sparse = feature_hash_rows(df, id_col, text_col, k, seed)
-    m = F.map_from_entries(
-        F.collect_list(F.struct(F.col("bucket"), F.col("weight")))
-    ).alias("_m")
-    dense = sparse.groupBy(id_col).agg(m)
-    vec = F.array(
-        *[F.coalesce(F.element_at("_m", F.lit(i)), F.lit(0)) for i in range(k)]
-    )
-    return dense.select(id_col, vec.alias(out_col))
 
 
 def standardize(

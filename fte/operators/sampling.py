@@ -122,14 +122,6 @@ def deterministic_shuffle(
     )
 
 
-def sample_by_hash(df: DataFrame, key_col: str, fraction: float, seed: int = 42) -> DataFrame:
-    """Deterministic `fraction` sample by key hash — unlike
-    DataFrame.sample, the selected set is a pure function of
-    (key, seed): stable across runs, partitionings, and appends
-    (a re-run or an incremental batch keeps exactly the same keys)."""
-    return df.filter(hash_uniform(key_col, seed) < fraction)
-
-
 def sample_sources(
     df: DataFrame,
     weights: dict[str, float],

@@ -3,8 +3,7 @@ column at corpus scale.
 
 Every production curation pipeline ends with learned filters (fastText
 quality/language classifiers, toxicity models, reward models). Those
-libraries are not in this sandbox, so — exactly like the multimodal
-codec seam (fte/operators/multimodal.py) — the MODEL is pluggable and
+libraries are not available offline, so the MODEL is pluggable and
 the Spark-side contract is real and tested:
 
 - Arrow-batched ``mapInPandas``: the model sees pandas Series of

@@ -554,13 +554,11 @@ def _ivf_assign(df: DataFrame, C: np.ndarray, vec_col: str = "embedding") -> Dat
 
 def ivf_build(
     df: DataFrame, n_cells: int = 64, id_col: str = "vec_id", vec_col: str = "embedding",
-    seed: int = 42,
 ) -> tuple[DataFrame, np.ndarray]:
     """Assign every row to its nearest (max-dot) centroid.
 
     Centroids are a deterministic sample of the data (k-means init
-    without the iterations — adequate for bucketing; use
-    ``ivf_build_kmeans`` when cell balance matters). Returns
+    without the iterations — adequate for bucketing). Returns
     (assigned_df with `ivf_cell`, centroids array). At scale, write
     the assigned table partitioned by ivf_cell so queries prune cells
     at the scan.
@@ -573,47 +571,6 @@ def ivf_build(
     )
     C = np.array([list(r[0]) for r in sample], dtype="float64")
     return _ivf_assign(df, C, vec_col), C
-
-
-def ivf_build_kmeans(
-    df: DataFrame, n_cells: int = 64, id_col: str = "vec_id", vec_col: str = "embedding",
-    seed: int = 42, iters: int = 3,
-) -> tuple[DataFrame, np.ndarray]:
-    """Spherical k-means refinement of the IVF cells (Lloyd rounds
-    with dot-product assignment and L2-normalized mean recentering —
-    the right variant for cosine ANN).
-
-    Each round is one distributed pass: GEMM assignment (pandas UDF)
-    → ``mean_pool_embeddings`` over ``ivf_cell`` (per-(cell, dim)
-    mean, re-packed executor-side into ONE dim-length array per cell —
-    all codegen, no per-element lambda). The shuffle moves only
-    n_cells × dim partial sums per map task (map-side combine), never
-    vectors; the driver collects exactly n_cells rows per round (NOT
-    n_cells × dim component rows — at production scale 2^16 cells ×
-    1024 dims the row-per-component shape is ~67M driver rows per
-    Lloyd iteration) to become the next round's broadcast matrix. Cells that lose all members keep their previous centroid.
-    """
-    assigned, C = ivf_build(df, n_cells, id_col, vec_col, seed)
-    dim = C.shape[1]
-    for _ in range(iters):
-        means = mean_pool_embeddings(assigned, "ivf_cell", vec_col).collect()
-        C2 = C.copy()
-        touched = np.zeros(len(C), dtype=bool)
-        for r in means:
-            ms = np.asarray(r["pooled"], dtype="float64")
-            if ms.shape != (dim,):
-                raise ValueError(
-                    f"ragged embeddings: cell {r['ivf_cell']} pooled to "
-                    f"{ms.shape[0]} dims, centroids have {dim}"
-                )
-            C2[r["ivf_cell"]] = ms
-            touched[r["ivf_cell"]] = True
-        norms = np.linalg.norm(C2, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        C2 = np.where(touched[:, None], C2 / norms, C)
-        C = C2
-        assigned = _ivf_assign(df, C, vec_col)
-    return assigned, C
 
 
 def ivf_topk(
@@ -843,32 +800,6 @@ def pca_fit(cov_rows, d: int) -> tuple[np.ndarray, np.ndarray]:
         if vecs[idx, k] < 0:
             vecs[:, k] = -vecs[:, k]
     return vals, vecs.T
-
-
-def pca_project(
-    df: DataFrame, components: np.ndarray, mean: np.ndarray,
-    vec_col: str = "embedding", out_col: str = "pca",
-) -> DataFrame:
-    """Project embeddings onto fitted components: one numpy GEMM per
-    Arrow batch against the broadcast (k × d) component matrix (same
-    execution shape as with_rh_signature — worker-side matrix, no
-    driver round-trip per batch). Appends array<double> of k scores."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    comp = np.asarray(components, dtype="float64")
-    mu = np.asarray(mean, dtype="float64")
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_col, T.ArrayType(T.DoubleType()), True)]
-    )
-
-    def project(batches):
-        for batch in batches:
-            X = _flat_vectors(batch, vec_col)[0].reshape(len(batch), -1)
-            P = (X - mu) @ comp.T
-            yield batch.append_column(out_col, pa.array(list(P), type=pa.list_(pa.float64())))
-
-    return df.mapInArrow(project, out_schema)
 
 
 def quantize_embeddings(

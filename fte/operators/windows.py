@@ -256,7 +256,7 @@ def with_time_bucket_counts(
     ts_col: str = "ts",
 ) -> DataFrame:
     """Tumbling event-time windows (F.window): events per (conv,
-    bucket). The batch twin of the streaming session/tumbling aggs."""
+    bucket)."""
     return (
         df.groupBy(conv_col, F.window(ts_col, bucket).alias("w"))
         .agg(F.count("*").alias("n"))

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from fte.registry import FeatureRegistry
 from fte.scan import spread
@@ -46,9 +46,8 @@ def build_matrix(
     registry: FeatureRegistry,
     features: Sequence[str] | None = None,
     serve: bool = False,
-    pack_vector: bool = False,
 ) -> DataFrame:
-    return _assemble(spread(df, "conv_id"), registry, features, serve, pack_vector)
+    return _assemble(spread(df, "conv_id"), registry, features, serve)
 
 
 def _assemble(
@@ -56,7 +55,6 @@ def _assemble(
     registry: FeatureRegistry,
     features: Sequence[str] | None,
     serve: bool,
-    pack_vector: bool = False,
 ) -> DataFrame:
     """``build_matrix`` on a frame taken as it is (no spread)."""
     if features is not None:
@@ -87,16 +85,7 @@ def _assemble(
             )
         out = spec.builder(out)
         out_cols.extend(spec.outputs)
-    result = out.select(*KEYS, *out_cols)
-    if pack_vector:
-        numeric = [
-            c for c in out_cols
-            if dict(result.dtypes)[c] in ("int", "bigint", "double", "float", "smallint")
-        ]
-        result = result.withColumn(
-            "feature_vector", F.array(*[F.col(c).cast("double") for c in numeric])
-        )
-    return result
+    return out.select(*KEYS, *out_cols)
 
 
 def build_anchor_matrix(

@@ -514,70 +514,137 @@ SELECT vec_id, ROUND(sim, 6) AS cos_sim, CAST(rank AS BIGINT) AS rank FROM (
 # ---------------------------------------------------------------- catalog
 
 def catalog() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]:
-    from fte.queries_ml import catalog_ml
+    """Every catalog query: name -> (Spark builder, DuckDB oracle SQL or
+    None), in table order. A name registered twice raises ValueError."""
+    from fte import (
+        queries_analytics as an, queries_extra as ex, queries_fe as fe,
+        queries_ml as ml, queries_pipeline as pl,
+    )
 
-    base = {
-        "sessionize": (q_sessionize, SQL_SESSIONIZE),
-        "session_stats": (q_session_stats, SQL_SESSION_STATS),
-        "rolling_counts": (q_rolling_counts, SQL_ROLLING_COUNTS),
-        "lag_lead": (q_lag_lead, SQL_LAG_LEAD),
-        "backfill": (q_backfill, SQL_BACKFILL),
-        "asof_join": (q_asof_join, SQL_ASOF),
-        "asof_join_merge": (q_asof_join_merge, SQL_ASOF),
-        "role_freq_running": (q_role_freq_running, _sql_role_freq()),
-        "dedup": (q_dedup, SQL_DEDUP),
-        "topk_recent": (q_topk_recent, SQL_TOPK),
-        "user_stats": (q_user_stats, SQL_USER_STATS),
-        "rollup_day_type": (q_rollup_day_type, SQL_ROLLUP),
-        "json_extract": (q_json_extract, SQL_JSON),
-        "tpch_pricing": (q_tpch_pricing, SQL_TPCH_PRICING),
-        "revenue_by_segment": (q_revenue_by_segment, SQL_REVENUE_SEGMENT),
-        "customers_no_orders": (q_customers_no_orders, SQL_NO_ORDERS),
-        "doc_text_stats": (q_doc_text_stats, SQL_DOC_STATS),
-        "doc_exact_dedup": (q_doc_exact_dedup, SQL_DOC_DEDUP),
-        "knn_bruteforce": (q_knn_bruteforce, SQL_KNN),
-    }
-    from fte.queries_analytics import catalog_analytics
-    from fte.queries_extra import catalog_extra
-    from fte.queries_fe import catalog_fe
-    from fte.queries_pipeline import catalog_pipeline
+    return _register((
+        # The driver's CORRECTNESS snapshot records only the first 50
+        # rows, so they are the queries a round re-proves: the most
+        # recently changed first.
+        ("oof_target_encode", fe.q_oof_target_encode, fe.SQL_OOF_TARGET_ENCODE),
+        ("loo_target_encode", an.q_loo_target_encode, an.SQL_LOO_TARGET_ENCODE),
+        ("count_encode", an.q_count_encode, an.SQL_COUNT_ENCODE),
+        ("target_encode", fe.q_target_encode, fe.SQL_TARGET_ENCODE),
+        ("robust_scale", fe.q_robust_scale, fe.SQL_ROBUST_SCALE),
+        ("quantile_bin", fe.q_quantile_bin, fe.SQL_QUANTILE_BIN),
+        ("zscore", fe.q_zscore, fe.SQL_ZSCORE),
+        ("minmax_scale", fe.q_minmax_scale, fe.SQL_MINMAX_SCALE),
+        ("drift_psi", fe.q_drift_psi, fe.SQL_DRIFT_PSI),
+        ("woe_encode", an.q_woe_encode, an.SQL_WOE_ENCODE),
+        ("feature_hash", fe.q_feature_hash, fe.SQL_FEATURE_HASH),
+        ("winnow_fp", ml.q_winnow_fp, ml.SQL_WINNOW_FP),
+        ("winnow_pairs", ml.q_winnow_pairs, ml.SQL_WINNOW_PAIRS),
+        ("segment_dedup", ml.q_segment_dedup, ml.SQL_SEGMENT_DEDUP),
+        ("repetition_stats", pl.q_repetition_stats, pl.SQL_REPETITION),
+        ("bm25_topk", pl.q_bm25, pl.SQL_BM25),
+        ("bm25_batch", pl.q_bm25_batch, pl.SQL_BM25_BATCH),
+        ("top_terms", ml.q_top_terms, ml.SQL_TOP_TERMS),
+        ("range_join", ex.q_range_join, ex.SQL_RANGE_JOIN),
+        ("minhash_neardup", ml.q_minhash_neardup, None),
+        ("ngram_neardup", ml.q_ngram_neardup, ml.SQL_NGRAM_NEARDUP),
+        ("decontaminate", pl.q_decontaminate, pl.SQL_DECONTAMINATE),
+        ("doc_chunks", pl.q_chunk_documents, pl.SQL_CHUNKS),
+        ("doc_quality", ml.q_doc_quality, ml.SQL_DOC_QUALITY),
+        ("lang_id", ml.q_lang_id, ml._sql_lang_id()),
+        ("pii_redact", pl.q_pii_redact, pl.SQL_PII),
+        ("unigram_xent", pl.q_unigram_xent, pl.SQL_UNIGRAM_XENT),
+        ("knn_bruteforce", q_knn_bruteforce, SQL_KNN),
+        ("knn_batch", ml.q_knn_batch, ml.SQL_KNN_BATCH),
+        ("lsh_topk", ml.q_lsh_topk, None),
+        ("ivf_topk", ml.q_ivf_topk, None),
+        ("ivf_knn_batch", ml.q_ivf_knn_batch, None),
+        ("lsh_recall_vs_exact", ml.q_lsh_recall_vs_exact, ml.SQL_LSH_RECALL),
+        ("ivf_recall_vs_exact", ml.q_ivf_recall_vs_exact, ml.SQL_IVF_RECALL),
+        ("ivf_knn_recall_vs_exact", ml.q_ivf_knn_recall_vs_exact, ml.SQL_IVF_KNN_RECALL),
+        ("quant_knn", an.q_quant_knn, an.SQL_QUANT_KNN),
+        ("quant_recall_vs_exact", an.q_quant_recall_vs_exact, an.SQL_QUANT_RECALL),
+        ("emb_top_pairs", ml.q_emb_top_pairs, ml.SQL_EMB_TOP_PAIRS),
+        ("emb_top_pairs_gemm", ml.q_emb_top_pairs_gemm, ml.SQL_EMB_TOP_PAIRS),
+        ("emb_neardup", ml.q_emb_neardup, ml.SQL_EMB_NEARDUP),
+        ("emb_norms", ml.q_emb_norms, ml.SQL_EMB_NORMS),
+        ("emb_covariance", an.q_emb_covariance, an.SQL_EMB_COVARIANCE),
+        ("simhash_neardup", ml.q_simhash_neardup, None),
+        ("simhash_recall_vs_exact", ml.q_simhash_recall_vs_exact, ml.SQL_SIMHASH_RECALL),
+        ("hash_split", ml.q_hash_split, ml.SQL_HASH_SPLIT),
+        ("doc_text_stats", q_doc_text_stats, SQL_DOC_STATS),
+        ("revenue_by_segment", q_revenue_by_segment, SQL_REVENUE_SEGMENT),
+        ("minhash_recall_vs_exact", ml.q_minhash_recall_vs_exact, ml.SQL_MINHASH_RECALL),
+        ("incremental_neardup", ml.q_incremental_neardup, ml.SQL_INCREMENTAL_NEARDUP),
+        ("rolling_counts", q_rolling_counts, SQL_ROLLING_COUNTS),
+        # ------------------------------------ end of the correctness window
+        ("sessionize", q_sessionize, SQL_SESSIONIZE),
+        ("session_stats", q_session_stats, SQL_SESSION_STATS),
+        ("lag_lead", q_lag_lead, SQL_LAG_LEAD),
+        ("backfill", q_backfill, SQL_BACKFILL),
+        ("asof_join", q_asof_join, SQL_ASOF),
+        ("asof_join_merge", q_asof_join_merge, SQL_ASOF),
+        ("role_freq_running", q_role_freq_running, _sql_role_freq()),
+        ("dedup", q_dedup, SQL_DEDUP),
+        ("topk_recent", q_topk_recent, SQL_TOPK),
+        ("user_stats", q_user_stats, SQL_USER_STATS),
+        ("rollup_day_type", q_rollup_day_type, SQL_ROLLUP),
+        ("json_extract", q_json_extract, SQL_JSON),
+        ("tpch_pricing", q_tpch_pricing, SQL_TPCH_PRICING),
+        ("customers_no_orders", q_customers_no_orders, SQL_NO_ORDERS),
+        ("doc_exact_dedup", q_doc_exact_dedup, SQL_DOC_DEDUP),
+        ("doc_dedup_norm", ml.q_doc_dedup_norm, ml.SQL_DOC_DEDUP_NORM),
+        ("token_stats", ml.q_token_stats, ml.SQL_TOKEN_STATS),
+        ("token_fertility", ml.q_token_fertility, ml.SQL_TOKEN_FERTILITY),
+        ("canonical_per_cluster", ml.q_canonical_per_cluster, ml.SQL_CANONICAL),
+        ("shuffle_order", ml.q_shuffle_order, ml.SQL_SHUFFLE_ORDER),
+        ("dup_components", ml.q_dup_components, ml.SQL_DUP_COMPONENTS),
+        ("pack_bins", ml.q_pack_bins, ml.SQL_PACK_BINS),
+        ("curation_funnel", ml.q_curation_funnel, ml._sql_curation_funnel()),
+        ("value_histogram", ml.q_value_histogram, ml.SQL_VALUE_HISTOGRAM),
+        ("set_ops", ex.q_set_ops, ex.SQL_SET_OPS),
+        ("pivot_user_types", ex.q_pivot_user_types, ex.SQL_PIVOT),
+        ("cube_day_type", ex.q_cube_day_type, ex.SQL_CUBE),
+        ("grouping_sets", ex.q_grouping_sets, ex.SQL_GROUPING_SETS),
+        ("rank_functions", ex.q_rank_functions, ex.SQL_RANK_FUNCTIONS),
+        ("tumbling_hour", ex.q_tumbling_hour, ex.SQL_TUMBLING),
+        ("ewma", ex.q_ewma, ex.SQL_EWMA),
+        ("approx_distinct", ex.q_approx_distinct, ex.SQL_APPROX_DISTINCT),
+        ("quantile_sketch", ex.q_quantile_sketch, ex.SQL_QUANTILE_SKETCH),
+        ("pandas_scalar", ex.q_pandas_scalar, ex.SQL_PANDAS_SCALAR),
+        ("pandas_udaf_median", ex.q_pandas_udaf_median, ex.SQL_PANDAS_UDAF),
+        ("training_pairs", pl.q_training_pairs, pl.SQL_TRAINING_PAIRS),
+        ("sft_render", pl.q_sft_render, pl.SQL_SFT_RENDER),
+        ("sft_spans", pl.q_sft_spans, pl.SQL_SFT_SPANS),
+        ("source_mix", pl.q_source_mix, pl.SQL_SOURCE_MIX),
+        ("emb_pool", pl.q_emb_pool, pl.SQL_EMB_POOL),
+        ("xent_percentile_gate", pl.q_xent_percentile_gate, pl.SQL_XENT_GATE),
+        ("key_skew", pl.q_key_skew, pl.SQL_KEY_SKEW),
+        ("variant_extract", pl.q_variant_extract, pl.SQL_VARIANT),
+        ("model_score", pl.q_model_score, pl.SQL_MODEL_SCORE),
+        ("cv_folds", fe.q_cv_folds, fe.SQL_CV_FOLDS),
+        ("temporal_split", fe.q_temporal_split, fe.SQL_TEMPORAL_SPLIT),
+        ("weighted_sample", fe.q_weighted_sample, fe.SQL_WEIGHTED_SAMPLE),
+        ("sample_per_group", fe.q_sample_per_group, fe.SQL_SAMPLE_PER_GROUP),
+        ("role_transition", an.q_role_transition, an.SQL_ROLE_TRANSITION),
+        ("response_latency", an.q_response_latency, an.SQL_RESPONSE_LATENCY),
+        ("turn_runs", an.q_turn_runs, an.SQL_TURN_RUNS),
+        ("feature_corr", an.q_feature_corr, an.SQL_FEATURE_CORR),
+        ("mutual_info", an.q_mutual_info, an.SQL_MUTUAL_INFO),
+        ("column_profile", an.q_column_profile, an.SQL_COLUMN_PROFILE),
+        ("emb_quantize", an.q_emb_quantize, an.SQL_EMB_QUANTIZE),
+        ("pca_variance", an.q_pca_variance, an.SQL_PCA_VARIANCE),
+        ("funnel", an.q_funnel, an.SQL_FUNNEL),
+        ("cohort_retention", an.q_cohort_retention, an.SQL_COHORT_RETENTION),
+        ("autocorr", an.q_autocorr, an.SQL_AUTOCORR),
+        ("fuzzy_join", an.q_fuzzy_join, an.SQL_FUZZY_JOIN),
+        ("incremental_agg", an.q_incremental_agg, an.SQL_INCREMENTAL_AGG),
+        ("chi2_independence", an.q_chi2, an.SQL_CHI2),
+    ))
 
-    base.update(catalog_ml())
-    base.update(catalog_extra())
-    base.update(catalog_pipeline())
-    base.update(catalog_fe())
-    base.update(catalog_analytics())
-    return _driver_window_order(base)
 
-
-# The driver's CORRECTNESS snapshot records only the FIRST 50 catalog
-# entries (dict insertion order), so this tuple decides which queries
-# a round re-proves: the most recently changed first.
-_DRIVER_WINDOW_FIRST = (
-    # encoding-family core: the null-safe join-back and the exact
-    # DECIMAL complement (OOF and LOO values move by design; NULL
-    # categories now survive every oracle join)
-    "oof_target_encode", "loo_target_encode", "count_encode",
-    # the other encoders, now one projection over one broadcast
-    # statistics row and one percentile helper
-    "target_encode", "robust_scale", "quantile_bin", "zscore",
-    "minmax_scale", "drift_psi", "woe_encode", "feature_hash",
-    # rest of the previous window, most recently changed first
-    "winnow_fp", "winnow_pairs", "segment_dedup", "repetition_stats",
-    "bm25_topk", "bm25_batch", "top_terms", "range_join", "minhash_neardup",
-    "ngram_neardup", "decontaminate", "doc_chunks", "doc_quality",
-    "lang_id", "pii_redact", "unigram_xent", "knn_bruteforce", "knn_batch",
-    "lsh_topk", "ivf_topk", "ivf_knn_batch", "lsh_recall_vs_exact",
-    "ivf_recall_vs_exact", "ivf_knn_recall_vs_exact", "quant_knn",
-    "quant_recall_vs_exact", "emb_top_pairs", "emb_top_pairs_gemm",
-    "emb_neardup", "emb_norms", "emb_covariance", "simhash_neardup",
-    "simhash_recall_vs_exact", "hash_split", "doc_text_stats",
-    "revenue_by_segment", "minhash_recall_vs_exact", "incremental_neardup",
-    "rolling_counts",
-)
-
-
-def _driver_window_order(base: dict) -> dict:
-    ordered = {name: base[name] for name in _DRIVER_WINDOW_FIRST}
-    ordered.update({n: v for n, v in base.items() if n not in ordered})
-    return ordered
+def _register(rows) -> dict:
+    out = {}
+    for name, fn, sql in rows:
+        if name in out:
+            raise ValueError(f"catalog query {name!r} is registered twice")
+        out[name] = (fn, sql)
+    return out

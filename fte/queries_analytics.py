@@ -533,31 +533,6 @@ FROM (VALUES
 """
 
 
-def catalog_analytics():
-    return {
-        "role_transition": (q_role_transition, SQL_ROLE_TRANSITION),
-        "response_latency": (q_response_latency, SQL_RESPONSE_LATENCY),
-        "turn_runs": (q_turn_runs, SQL_TURN_RUNS),
-        "count_encode": (q_count_encode, SQL_COUNT_ENCODE),
-        "loo_target_encode": (q_loo_target_encode, SQL_LOO_TARGET_ENCODE),
-        "woe_encode": (q_woe_encode, SQL_WOE_ENCODE),
-        "feature_corr": (q_feature_corr, SQL_FEATURE_CORR),
-        "mutual_info": (q_mutual_info, SQL_MUTUAL_INFO),
-        "column_profile": (q_column_profile, SQL_COLUMN_PROFILE),
-        "emb_covariance": (q_emb_covariance, SQL_EMB_COVARIANCE),
-        "emb_quantize": (q_emb_quantize, SQL_EMB_QUANTIZE),
-        "quant_knn": (q_quant_knn, SQL_QUANT_KNN),
-        "quant_recall_vs_exact": (q_quant_recall_vs_exact, SQL_QUANT_RECALL),
-        "pca_variance": (q_pca_variance, SQL_PCA_VARIANCE),
-        "funnel": (q_funnel, SQL_FUNNEL),
-        "cohort_retention": (q_cohort_retention, SQL_COHORT_RETENTION),
-        "autocorr": (q_autocorr, SQL_AUTOCORR),
-        "fuzzy_join": (q_fuzzy_join, SQL_FUZZY_JOIN),
-        "incremental_agg": (q_incremental_agg, SQL_INCREMENTAL_AGG),
-        "chi2_independence": (q_chi2, SQL_CHI2),
-    }
-
-
 # ---------------------------------------------------- behavior / fuzzy
 
 def q_funnel(spark, sf_dir):

@@ -359,20 +359,3 @@ SELECT event_type,
        true AS p50_ok, true AS p95_ok
 FROM events GROUP BY event_type ORDER BY event_type
 """
-
-
-def catalog_extra():
-    return {
-        "set_ops": (q_set_ops, SQL_SET_OPS),
-        "range_join": (q_range_join, SQL_RANGE_JOIN),
-        "pivot_user_types": (q_pivot_user_types, SQL_PIVOT),
-        "cube_day_type": (q_cube_day_type, SQL_CUBE),
-        "grouping_sets": (q_grouping_sets, SQL_GROUPING_SETS),
-        "rank_functions": (q_rank_functions, SQL_RANK_FUNCTIONS),
-        "tumbling_hour": (q_tumbling_hour, SQL_TUMBLING),
-        "ewma": (q_ewma, SQL_EWMA),
-        "approx_distinct": (q_approx_distinct, SQL_APPROX_DISTINCT),
-        "quantile_sketch": (q_quantile_sketch, SQL_QUANTILE_SKETCH),
-        "pandas_scalar": (q_pandas_scalar, SQL_PANDAS_SCALAR),
-        "pandas_udaf_median": (q_pandas_udaf_median, SQL_PANDAS_UDAF),
-    }

@@ -1,8 +1,9 @@
 """Feature-engineering catalog queries: leakage-safe target encoding,
 scaling, equal-frequency binning, drift, CV folds and sampling
 (fte/operators/encoding.py, fte/operators/sampling.py), with DuckDB
-oracle twins. Which of them the driver's 50-entry correctness window
-re-proves is decided by ``fte.queries._DRIVER_WINDOW_FIRST``.
+oracle twins. ``fte.queries.catalog`` registers them; its row order
+decides which of them the driver's 50-entry correctness window
+re-proves.
 """
 
 from __future__ import annotations
@@ -90,23 +91,6 @@ SELECT doc_id,
 FROM toks
 GROUP BY 1, 2
 """
-
-
-def catalog_fe():
-    return {
-        "target_encode": (q_target_encode, SQL_TARGET_ENCODE),
-        "quantile_bin": (q_quantile_bin, SQL_QUANTILE_BIN),
-        "feature_hash": (q_feature_hash, SQL_FEATURE_HASH),
-        "cv_folds": (q_cv_folds, SQL_CV_FOLDS),
-        "temporal_split": (q_temporal_split, SQL_TEMPORAL_SPLIT),
-        "zscore": (q_zscore, SQL_ZSCORE),
-        "drift_psi": (q_drift_psi, SQL_DRIFT_PSI),
-        "oof_target_encode": (q_oof_target_encode, SQL_OOF_TARGET_ENCODE),
-        "weighted_sample": (q_weighted_sample, SQL_WEIGHTED_SAMPLE),
-        "sample_per_group": (q_sample_per_group, SQL_SAMPLE_PER_GROUP),
-        "minmax_scale": (q_minmax_scale, SQL_MINMAX_SCALE),
-        "robust_scale": (q_robust_scale, SQL_ROBUST_SCALE),
-    }
 
 
 def q_cv_folds(spark, sf_dir):

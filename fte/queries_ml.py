@@ -1135,41 +1135,3 @@ SQL_SIMHASH_RECALL = """
 SELECT CAST(935 AS BIGINT) AS n_exact, CAST(935 AS BIGINT) AS n_overlap,
        CAST(1.0 AS DOUBLE) AS recall
 """
-
-
-def catalog_ml():
-    return {
-        "doc_dedup_norm": (q_doc_dedup_norm, SQL_DOC_DEDUP_NORM),
-        "ngram_neardup": (q_ngram_neardup, SQL_NGRAM_NEARDUP),
-        "minhash_neardup": (q_minhash_neardup, None),
-        "incremental_neardup": (q_incremental_neardup, SQL_INCREMENTAL_NEARDUP),
-        "simhash_neardup": (q_simhash_neardup, None),
-        "token_stats": (q_token_stats, SQL_TOKEN_STATS),
-        "doc_quality": (q_doc_quality, SQL_DOC_QUALITY),
-        "lang_id": (q_lang_id, _sql_lang_id()),
-        "emb_top_pairs": (q_emb_top_pairs, SQL_EMB_TOP_PAIRS),
-        "emb_top_pairs_gemm": (q_emb_top_pairs_gemm, SQL_EMB_TOP_PAIRS),
-        "knn_batch": (q_knn_batch, SQL_KNN_BATCH),
-        "lsh_topk": (q_lsh_topk, None),
-        "ivf_topk": (q_ivf_topk, None),
-        "lsh_recall_vs_exact": (q_lsh_recall_vs_exact, SQL_LSH_RECALL),
-        "ivf_recall_vs_exact": (q_ivf_recall_vs_exact, SQL_IVF_RECALL),
-        "minhash_recall_vs_exact": (q_minhash_recall_vs_exact, SQL_MINHASH_RECALL),
-        "simhash_recall_vs_exact": (q_simhash_recall_vs_exact, SQL_SIMHASH_RECALL),
-        "segment_dedup": (q_segment_dedup, SQL_SEGMENT_DEDUP),
-        "token_fertility": (q_token_fertility, SQL_TOKEN_FERTILITY),
-        "ivf_knn_batch": (q_ivf_knn_batch, None),
-        "ivf_knn_recall_vs_exact": (q_ivf_knn_recall_vs_exact, SQL_IVF_KNN_RECALL),
-        "canonical_per_cluster": (q_canonical_per_cluster, SQL_CANONICAL),
-        "shuffle_order": (q_shuffle_order, SQL_SHUFFLE_ORDER),
-        "emb_norms": (q_emb_norms, SQL_EMB_NORMS),
-        "emb_neardup": (q_emb_neardup, SQL_EMB_NEARDUP),
-        "dup_components": (q_dup_components, SQL_DUP_COMPONENTS),
-        "winnow_fp": (q_winnow_fp, SQL_WINNOW_FP),
-        "winnow_pairs": (q_winnow_pairs, SQL_WINNOW_PAIRS),
-        "hash_split": (q_hash_split, SQL_HASH_SPLIT),
-        "pack_bins": (q_pack_bins, SQL_PACK_BINS),
-        "curation_funnel": (q_curation_funnel, _sql_curation_funnel()),
-        "top_terms": (q_top_terms, SQL_TOP_TERMS),
-        "value_histogram": (q_value_histogram, SQL_VALUE_HISTOGRAM),
-    }

@@ -704,24 +704,3 @@ WITH tw AS (
 )
 SELECT DISTINCT doc_id FROM tg JOIN bg USING (gram) ORDER BY doc_id
 """
-
-
-def catalog_pipeline():
-    return {
-        "training_pairs": (q_training_pairs, SQL_TRAINING_PAIRS),
-        "sft_render": (q_sft_render, SQL_SFT_RENDER),
-        "sft_spans": (q_sft_spans, SQL_SFT_SPANS),
-        "repetition_stats": (q_repetition_stats, SQL_REPETITION),
-        "pii_redact": (q_pii_redact, SQL_PII),
-        "doc_chunks": (q_chunk_documents, SQL_CHUNKS),
-        "bm25_topk": (q_bm25, SQL_BM25),
-        "decontaminate": (q_decontaminate, SQL_DECONTAMINATE),
-        "source_mix": (q_source_mix, SQL_SOURCE_MIX),
-        "unigram_xent": (q_unigram_xent, SQL_UNIGRAM_XENT),
-        "emb_pool": (q_emb_pool, SQL_EMB_POOL),
-        "bm25_batch": (q_bm25_batch, SQL_BM25_BATCH),
-        "xent_percentile_gate": (q_xent_percentile_gate, SQL_XENT_GATE),
-        "key_skew": (q_key_skew, SQL_KEY_SKEW),
-        "variant_extract": (q_variant_extract, SQL_VARIANT),
-        "model_score": (q_model_score, SQL_MODEL_SCORE),
-    }

@@ -26,11 +26,13 @@ import json
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from fte.checkpoint import content_checksum
-from fte.pipeline import build_matrix
+from fte.pipeline import KEYS, build_matrix
 from fte.registry import FeatureRegistry, FeatureSpec
+
+_NUMERIC = ("int", "bigint", "double", "float", "smallint")
 
 
 class Session:
@@ -111,12 +113,11 @@ class Session:
         names = list(features) if features is not None else sorted(
             n for n, s in self.registry.features.items() if not s.leaky
         )
-        mat = self.feature_matrix(features=names, serve=True, pack_vector=False)
+        mat = build_matrix(
+            self.dataset["transcripts"], self.registry, features=names, serve=True
+        )
         m = mat.join(labels, ["conv_id", "turn_idx"]).localCheckpoint(eager=False)
-        numeric = {
-            c for c, t in m.dtypes
-            if t in ("int", "bigint", "double", "float", "smallint")
-        }
+        numeric = {c for c, t in m.dtypes if t in _NUMERIC}
         models = {}
         for name in names:
             cols = [c for c in self.registry.get(name).outputs if c in numeric]
@@ -179,8 +180,13 @@ class Session:
 
     # ---------------------------------------------------------- matrix
 
-    def feature_matrix(self, features=None, serve: bool = True, pack_vector: bool = True) -> DataFrame:
-        return build_matrix(
-            self.dataset["transcripts"], self.registry,
-            features=features, serve=serve, pack_vector=pack_vector,
+    def feature_matrix(self, features=None, serve: bool = True) -> DataFrame:
+        """The feature matrix plus ``feature_vector``: its numeric
+        feature columns, in order, packed as one array<double>."""
+        mat = build_matrix(
+            self.dataset["transcripts"], self.registry, features=features, serve=serve,
+        )
+        numeric = [c for c, t in mat.dtypes if c not in KEYS and t in _NUMERIC]
+        return mat.withColumn(
+            "feature_vector", F.array(*[F.col(c).cast("double") for c in numeric])
         )

@@ -19,7 +19,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from fte.schema import ROLES, SESSION_GAP_SECONDS, TRANSCRIPTS_SCHEMA
+from fte.schema import SESSION_GAP_SECONDS, TRANSCRIPTS_SCHEMA
 
 BASE_EPOCH = np.datetime64("2025-01-01T00:00:00", "us")
 

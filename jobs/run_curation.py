@@ -50,7 +50,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import SparkSession, functions as F
 
-from fte.conf import DEFAULT_CONFS
+from fte.conf import get_spark
 
 
 def curate(
@@ -200,10 +200,7 @@ def main(argv: list[str] | None = None) -> int:
                     "cluster instead of the min-id member")
     args = ap.parse_args(argv)
 
-    builder = SparkSession.builder.appName("fte-curation")
-    for k, v in DEFAULT_CONFS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = get_spark("fte-curation")
 
     funnel = curate(
         spark, args.input, args.output,

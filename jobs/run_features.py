@@ -22,9 +22,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from pyspark.sql import SparkSession
-
-from fte.conf import DEFAULT_CONFS
+from fte.conf import get_spark
 from fte.features import build_default_registry
 from fte.pipeline import build_matrix
 from fte.schema import TRANSCRIPTS_SCHEMA
@@ -48,10 +46,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.resume and not args.output:
         ap.error("--resume requires --output")
 
-    builder = SparkSession.builder.appName("fte-run-features")
-    for k, v in DEFAULT_CONFS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = get_spark("fte-run-features")
 
     if args.input:
         df = spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(args.input)

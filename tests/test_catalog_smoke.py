@@ -27,3 +27,16 @@ def test_every_catalog_query_runs(spark):
         except Exception as e:  # noqa: BLE001
             failures.append(f"{name}: {type(e).__name__}: {e}")
     assert not failures, "\n".join(failures)
+
+
+def test_catalog_rejects_a_repeated_name():
+    """Registering a name twice raises instead of silently replacing
+    the earlier entry; the real table registers each name once."""
+    from fte.queries import _register, catalog
+
+    def q(spark, sf_dir):
+        return None
+
+    with pytest.raises(ValueError, match="'dup' is registered twice"):
+        _register((("dup", q, None), ("other", q, None), ("dup", q, "SELECT 1")))
+    catalog()

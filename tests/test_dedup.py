@@ -14,7 +14,7 @@ from fte.operators.dedup import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_pairs,
-    with_simhash,
+    simhash_table,
 )
 
 BASE_TEXTS = [
@@ -112,8 +112,8 @@ def test_simhash_near_dups(spark, docs_df):
 
 
 def test_simhash_deterministic(spark, docs_df):
-    a = with_simhash(docs_df).toPandas().sort_values("doc_id")["simhash"].tolist()
-    b = with_simhash(docs_df.repartition(5)).toPandas().sort_values("doc_id")["simhash"].tolist()
+    a = simhash_table(docs_df).toPandas().sort_values("doc_id")["simhash"].tolist()
+    b = simhash_table(docs_df.repartition(5)).toPandas().sort_values("doc_id")["simhash"].tolist()
     assert a == b
 
 

@@ -116,54 +116,3 @@ def test_bucketed_join_has_no_exchange(spark, transcripts_pdf, tmp_path):
     finally:
         spark.sql("DROP TABLE IF EXISTS b_left")
         spark.sql("DROP TABLE IF EXISTS b_right")
-
-
-def test_csv_jsonl_roundtrip_declared_schema(spark, tmp_path):
-    """CSV and JSONL ingest with a DECLARED schema (never inferSchema —
-    inference is an extra full pass at 100 TB) reproduce the parquet
-    table exactly, timestamps included."""
-    from fte.io import read_csv, read_jsonl
-
-    src = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    csv_dir, json_dir = str(tmp_path / "ev_csv"), str(tmp_path / "ev_json")
-    # default CSV/JSON timestamp formats truncate to milliseconds;
-    # transcripts carry microseconds (TIMESTAMP_NTZ in Spark 4)
-    us = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    fmt = {"timestampFormat": us, "timestampNTZFormat": us}
-    src.write.option("header", "true").options(**fmt).csv(csv_dir)
-    src.write.options(**fmt).json(json_dir)
-
-    for rd, path in ((read_csv, csv_dir), (read_jsonl, json_dir)):
-        back = rd(spark, path, src.schema, **fmt)
-        assert back.schema == src.schema
-        a = back.orderBy("event_id").toPandas()
-        b = src.orderBy("event_id").toPandas()
-        assert a.equals(b), rd.__name__
-
-
-def test_csv_lenient_quarantines_corrupt_rows(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from fte.io import read_csv
-
-    p = tmp_path / "bad.csv"
-    p.write_text(
-        "id,n\n"
-        "1,10\n"
-        "oops,not_a_number\n"
-        "2,20\n"
-    )
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("n", T.LongType())]
-    )
-    ok = read_csv(spark, str(p), schema, lenient=True)
-    rows = ok.orderBy("id").collect()
-    bad = [r for r in rows if r["_corrupt_record"] is not None]
-    good = [r for r in rows if r["_corrupt_record"] is None]
-    assert len(bad) == 1 and bad[0]["_corrupt_record"] == "oops,not_a_number"
-    assert [(r["id"], r["n"]) for r in good] == [(1, 10), (2, 20)]
-
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="Malformed|FAILFAST"):
-        read_csv(spark, str(p), schema).collect()

@@ -5,7 +5,12 @@ Python) throughout'). SURVEY.md §2.B marks F.udf / RDD as banned.
 have one tokenizer, `fte.functions.words`: splitting `norm_text`
 anywhere else is banned. Percentiles have one exact-versus-approximate
 choice, `fte.operators.encoding._percentile`: calling `F.percentile`
-or `F.percentile_approx` anywhere else is banned."""
+or `F.percentile_approx` anywhere else is banned.
+
+Every `fte/` module needs a caller outside the tests: a module that
+only tests import is code no job, query, bench or workload runs. The
+caller graph is the `import` statements of the repo's non-test `.py`
+files, read with `ast`; ALLOWED_UNCALLED lists the exceptions."""
 
 from __future__ import annotations
 
@@ -13,7 +18,16 @@ import ast
 import re
 from pathlib import Path
 
-FTE = Path(__file__).resolve().parents[1] / "fte"
+ROOT = Path(__file__).resolve().parents[1]
+FTE = ROOT / "fte"
+# where the non-test callers live, besides the repo root's scripts
+CALLER_DIRS = ("fte", "jobs", "perfbench", "tools")
+ALLOWED_UNCALLED = {
+    # FeatureHub's notebook API: its callers are users, not repo code
+    "fte.session",
+    # the FIXTURES.md §4 late-data merge, a library entry point
+    "fte.operators.ingest",
+}
 
 TOKENIZER = "tokenizer copy (use fte.functions.words)"
 PERCENTILE = "percentile outside fte.operators.encoding._percentile"
@@ -51,3 +65,30 @@ def test_no_banned_apis():
                 if line not in owned:
                     offenders.append(f"{p.name}:{line} {why}")
     assert not offenders, offenders
+
+
+def _module(p: Path) -> str:
+    parts = p.relative_to(ROOT).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _imported(p: Path) -> set[str]:
+    """Every dotted name an absolute import in ``p`` loads, with its
+    parents (the repo uses no relative imports)."""
+    names = []
+    for node in ast.walk(ast.parse(p.read_text(), str(p))):
+        if isinstance(node, ast.Import):
+            names += [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            names += [node.module] + [f"{node.module}.{a.name}" for a in node.names]
+    parts = [n.split(".") for n in names]
+    return {".".join(ps[:i]) for ps in parts for i in range(1, len(ps) + 1)} - {_module(p)}
+
+
+def test_every_fte_module_has_a_caller():
+    modules = {_module(p) for p in FTE.rglob("*.py")}
+    callers = list(ROOT.glob("*.py"))
+    callers += [p for d in CALLER_DIRS for p in (ROOT / d).rglob("*.py")]
+    called = set().union(*(_imported(p) for p in callers))
+    uncalled = sorted(modules - called - ALLOWED_UNCALLED)
+    assert not uncalled, f"fte modules only tests import: {uncalled}"

@@ -12,9 +12,9 @@ from fte.registry import FeatureRegistry
 
 def test_matrix_builds_and_preserves_grain(spark, transcripts_df):
     reg = build_default_registry()
-    mat = build_matrix(transcripts_df, reg, serve=False, pack_vector=True)
+    mat = build_matrix(transcripts_df, reg, serve=False)
     assert mat.count() == transcripts_df.count()
-    assert {"conv_id", "turn_idx", "ts", "feature_vector"} <= set(mat.columns)
+    assert {"conv_id", "turn_idx", "ts"} <= set(mat.columns)
 
 
 def test_serve_refuses_leaky(spark, transcripts_df):

@@ -7,7 +7,7 @@ import pandas as pd
 import pytest
 
 from fte.operators.packing import pack_documents
-from fte.operators.sampling import sample_by_hash, with_split
+from fte.operators.sampling import with_split
 
 
 def _docs(spark, n=2000):
@@ -34,16 +34,6 @@ def test_split_fractions_must_sum_to_one(spark):
     which ``python -O`` strips)."""
     with pytest.raises(ValueError, match="sum to 1"):
         with_split(_docs(spark, 10), "doc_id", splits=(("train", 0.8), ("test", 0.1)))
-
-
-def test_sample_by_hash_monotone_and_stable(spark):
-    d = _docs(spark)
-    s30 = set(sample_by_hash(d, "doc_id", 0.3).toPandas()["doc_id"])
-    s50 = set(sample_by_hash(d, "doc_id", 0.5).toPandas()["doc_id"])
-    assert s30 <= s50, "raising the fraction must only ADD keys"
-    assert abs(len(s30) / 2000 - 0.3) < 0.04
-    s30b = set(sample_by_hash(d.repartition(7), "doc_id", 0.3).toPandas()["doc_id"])
-    assert s30 == s30b
 
 
 def test_pack_documents_invariants(spark):

@@ -44,6 +44,8 @@ def test_workflow(session, tmp_path):
     mat = session.feature_matrix()
     assert "log_textlen" in mat.columns
     assert mat.count() == session.dataset["transcripts"].count()
+    # the numeric feature columns, packed in order
+    assert mat.filter(F.col("feature_vector") != F.array("log_textlen")).count() == 0
 
 
 def test_evaluate_rejects_row_count_change(session):

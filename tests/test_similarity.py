@@ -264,37 +264,11 @@ def test_embedding_dup_pairs_multi_table(spark, emb_df):
     assert len(multi) >= len(single)
 
 
-def test_ivf_kmeans_improves_purity(spark, emb_df, emb_pdf):
-    """Spherical k-means rounds must not degrade cell purity on the
-    5-cluster fixture (vectors generated around 5 centers): after
-    refinement, cluster purity is high and at least the init's."""
-    from fte.operators.similarity import ivf_build, ivf_build_kmeans
-
-    truth = emb_pdf["vec_id"].to_numpy() % 5  # generator cluster id
-
-    def purity(assigned):
-        got = assigned.select("vec_id", "ivf_cell").toPandas().sort_values("vec_id")
-        cells = got["ivf_cell"].to_numpy()
-        total = 0
-        for c in np.unique(cells):
-            labels = truth[: len(cells)][cells == c]
-            total += np.bincount(labels).max()
-        return total / len(cells)
-
-    a0, _ = ivf_build(emb_df, n_cells=5)
-    ak, Ck = ivf_build_kmeans(emb_df, n_cells=5, iters=4)
-    p0, pk = purity(a0), purity(ak)
-    assert pk >= p0 - 1e-9, f"k-means degraded purity: {p0} -> {pk}"
-    assert pk >= 0.9, f"refined purity too low: {pk}"
-    # centroids are unit-norm (spherical recentering)
-    assert np.allclose(np.linalg.norm(Ck, axis=1), 1.0, atol=1e-9)
-
-
 def test_ivf_kmeans_driver_traffic_is_per_cell(spark, emb_df):
-    """The Lloyd recentering collect must be O(n_cells) rows (one
+    """Pooling the IVF cells must collect O(n_cells) rows (one
     dim-length array per cell), NOT O(n_cells x dim) component rows —
     at 2^16 cells x 1024 dims the per-component shape is ~67M driver
-    rows per iteration. Also checks each packed array is exactly dim
+    rows. Also checks each packed array is exactly dim
     long and dim-ordered (mean of a single known cell)."""
     from fte.operators.similarity import _ivf_assign, mean_pool_embeddings
 
@@ -473,22 +447,3 @@ def test_rh_signature_n_bits_out_of_range_raises(spark, emb_df):
     for bad in (0, 64):
         with pytest.raises(ValueError, match="n_bits"):
             with_rh_signature(emb_df, n_bits=bad)
-
-
-def test_ivf_kmeans_ragged_pooled_vector_raises(spark, emb_df, monkeypatch):
-    """A cell whose pooled mean is not centroid-wide raises ValueError
-    (not an assert). Real ragged input already fails in the assignment
-    GEMM, so the pooling is narrowed to three components here."""
-    from pyspark.sql import functions as F
-
-    import fte.operators.similarity as sim
-
-    pool = sim.mean_pool_embeddings
-    monkeypatch.setattr(
-        sim, "mean_pool_embeddings",
-        lambda df, group_col, vec_col: pool(df, group_col, vec_col).withColumn(
-            "pooled", F.slice("pooled", 1, 3)
-        ),
-    )
-    with pytest.raises(ValueError, match="ragged"):
-        sim.ivf_build_kmeans(emb_df, n_cells=5, iters=1)

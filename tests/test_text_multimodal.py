@@ -1,17 +1,10 @@
-"""Text-analysis + multimodal plumbing operators."""
+"""Text-analysis operators."""
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 import pytest
 
-from fte.operators.multimodal import (
-    frame_sample_plan,
-    image_features,
-    synth_assets_pdf,
-    ASSET_SCHEMA,
-)
 from fte.operators.text import (
     bpe_ish_token_count,
     token_count,
@@ -80,40 +73,6 @@ def test_fingerprint_normalization(spark):
     assert fp[0] != fp[2]
 
 
-def test_image_features_plumbing(spark):
-    assets = spark.createDataFrame(synth_assets_pdf(30), schema=ASSET_SCHEMA)
-    got = image_features(assets, feature_dim=8, fake_decode=True).toPandas()
-    assert len(got) == 30
-    assert (got["n_bytes"] > 0).all()
-    assert got["byte_entropy"].between(0, 8).all()
-    assert got["feature"].map(len).eq(8).all()
-    # determinism across partitioning
-    got2 = image_features(
-        spark.createDataFrame(synth_assets_pdf(30), schema=ASSET_SCHEMA).repartition(7),
-        feature_dim=8,
-        fake_decode=True,
-    ).toPandas()
-    a = got.sort_values("asset_id").reset_index(drop=True)
-    b = got2.sort_values("asset_id").reset_index(drop=True)
-    assert (a["byte_entropy"] == b["byte_entropy"]).all()
-
-
-def test_image_decode_strict_raises(spark):
-    assets = spark.createDataFrame(synth_assets_pdf(3), schema=ASSET_SCHEMA)
-    with pytest.raises(Exception, match="NotImplementedError|codec"):
-        image_features(assets, fake_decode=False).collect()
-
-
-def test_frame_sample_plan(spark):
-    assets = spark.createDataFrame(synth_assets_pdf(30), schema=ASSET_SCHEMA)
-    plan = frame_sample_plan(assets, every_ms=1000).toPandas()
-    vids = synth_assets_pdf(30)
-    vids = vids[vids.modality == "video"]
-    assert set(plan["asset_id"]) == set(vids["asset_id"])
-    one = plan[plan.asset_id == vids["asset_id"].iloc[0]]
-    assert (one["ts_ms"] == one["frame_idx"] * 1000).all()
-
-
 def test_winnow_guarantee(spark):
     """Winnowing theorem: two docs sharing a run of >= k+window-1
     (= 6) words share at least one selected fingerprint; docs with no
@@ -171,51 +130,3 @@ def test_winnow_matches_python_reference(spark):
         for i, t in enumerate(texts):
             got = set(fps[fps.doc_id == i]["fp"])
             assert got == _winnow_ref(t, k, window), (i, k, window)
-
-
-def test_audio_window_plan(spark):
-    from fte.operators.multimodal import ASSET_SCHEMA, audio_window_plan, synth_assets_pdf
-
-    assets = spark.createDataFrame(synth_assets_pdf(30), schema=ASSET_SCHEMA)
-    plan = audio_window_plan(assets, window_ms=1000, hop_ms=500).toPandas()
-    src = synth_assets_pdf(30)
-    audio = src[src["modality"] == "audio"]
-    assert set(plan["asset_id"]) == set(audio["asset_id"])
-    for aid, g in plan.groupby("asset_id"):
-        dur = int(audio.set_index("asset_id").loc[aid, "duration_ms"])
-        g = g.sort_values("window_idx")
-        # hop spacing, window bound, full coverage, monotone ids
-        assert g["window_idx"].tolist() == list(range(len(g)))
-        assert (g["start_ms"] == g["window_idx"] * 500).all()
-        assert (g["end_ms"] <= dur).all()
-        assert ((g["end_ms"] - g["start_ms"]) <= 1000).all()
-        assert g["start_ms"].iloc[-1] < dur <= g["start_ms"].iloc[-1] + 500 + 1
-
-
-def test_modality_summary_applyinarrow_matches_jvm(spark):
-    import pyspark.sql.functions as F
-
-    from fte.operators.multimodal import (
-        ASSET_SCHEMA,
-        modality_summary_arrow,
-        synth_assets_pdf,
-    )
-
-    assets = spark.createDataFrame(synth_assets_pdf(60), schema=ASSET_SCHEMA)
-    got = (
-        modality_summary_arrow(assets).orderBy("modality").toPandas()
-    )
-    ref = (
-        assets.groupBy("modality")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_assets"),
-            F.sum(F.length("data")).cast("long").alias("total_bytes"),
-        )
-        .withColumn("mean_bytes", F.col("total_bytes") / F.col("n_assets"))
-        .orderBy("modality")
-        .toPandas()
-    )
-    assert got["modality"].tolist() == ref["modality"].tolist()
-    assert got["n_assets"].tolist() == ref["n_assets"].tolist()
-    assert got["total_bytes"].tolist() == ref["total_bytes"].tolist()
-    assert got["mean_bytes"].tolist() == ref["mean_bytes"].tolist()
